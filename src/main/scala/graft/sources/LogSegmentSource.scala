@@ -11,7 +11,7 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, SupportsAdmissionControl, SupportsTriggerAvailableNow}
-import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual}
+import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNotNull, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -25,9 +25,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - `planInputPartitions`: one [[SegmentPartition]] per
   *    topic-partition directory;
   *  - pushed `topic`/`partition` equality prunes whole directories at
-  *    planning time, pushed `offset` bounds skip records inside the
-  *    reader — the split-pruning semantics of the reference's
-  *    offset-range requests;
+  *    planning time, pushed `offset` bounds skip whole segments and
+  *    seek inside them through each segment's offset index — the
+  *    split-pruning semantics of the reference's offset-range
+  *    requests. The source enforces these predicates exactly, so
+  *    Spark plans no Filter for them;
   *  - schema is the public spark-sql-kafka layout, so downstream
   *    operators are identical whichever source produced the frame;
   *  - with `decodeTopic` (or `avroSchemaFile`) set, the table schema
@@ -172,15 +174,21 @@ private[sources] class SegmentScanBuilder(path: String, budget: PullBudget,
     with org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns {
   private var pushed: Array[Filter] = Array.empty
   private var required: StructType = fullSchema
+  /** Keeps the predicates the source enforces exactly — topic and
+    * partition by directory pruning, offset bounds in the reader, and
+    * not-null on those three columns, which are never null — and hands
+    * back only the rest for Spark to evaluate. A lookup's plan then
+    * carries no Filter, and no per-query literal in generated code. */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pushed = filters.filter {
-      case EqualTo("topic" | "partition", _) => true
-      case In("topic" | "partition", _) => true
+    val (exact, rest) = filters.partition {
+      case EqualTo("topic" | "partition", _) | In("topic" | "partition", _) => true
       case GreaterThan("offset", _) | GreaterThanOrEqual("offset", _) => true
       case LessThan("offset", _) | LessThanOrEqual("offset", _) => true
+      case IsNotNull("topic" | "partition" | "offset") => true
       case _ => false
     }
-    filters // Spark re-evaluates everything; pruning is a fast path
+    pushed = exact
+    rest
   }
   override def pushedFilters(): Array[Filter] = pushed
   override def pruneColumns(requiredSchema: StructType): Unit =
@@ -200,37 +208,48 @@ private[sources] class SegmentScan(path: String, pushed: Array[Filter],
   override def description(): String =
     s"graft-log $path pushed=[${pushed.mkString(", ")}] cols=[${required.fieldNames.mkString(",")}]"
 
+  /** Null elements of an `In` list match nothing, as in SQL's WHERE. */
   private def keep(topic: String, part: Int): Boolean = pushed.forall {
     case EqualTo("topic", t) => topic == t
     case In("topic", ts) => ts.contains(topic)
-    case EqualTo("partition", p) => part == p.asInstanceOf[Number].intValue()
-    case In("partition", ps) => ps.exists(_.asInstanceOf[Number].intValue() == part)
+    case EqualTo("partition", p: Number) => p.longValue() == part
+    case In("partition", ps) => ps.exists {
+      case p: Number => p.longValue() == part
+      case _ => false
+    }
     case _ => true
   }
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    val root = new File(path)
-    val dirs = for {
-      t <- Option(root.listFiles()).getOrElse(Array.empty[File]).toSeq
-      if t.isDirectory && t.getName.startsWith("topic=")
-      p <- Option(t.listFiles()).getOrElse(Array.empty[File]).toSeq
-      if p.isDirectory && p.getName.startsWith("partition=")
-      topic = t.getName.stripPrefix("topic=")
-      part = p.getName.stripPrefix("partition=").toInt
-      if keep(topic, part)
-    } yield SegmentPartition(p.getPath, topic, part, offsetLo, offsetHi)
-    dirs.toArray
+  override def planInputPartitions(): Array[InputPartition] = offsetRange match {
+    case None => Array.empty
+    case Some((lo, hi)) =>
+      val root = new File(path)
+      val dirs = for {
+        t <- Option(root.listFiles()).getOrElse(Array.empty[File]).toSeq
+        if t.isDirectory && t.getName.startsWith("topic=")
+        p <- Option(t.listFiles()).getOrElse(Array.empty[File]).toSeq
+        if p.isDirectory && p.getName.startsWith("partition=")
+        topic = t.getName.stripPrefix("topic=")
+        part = p.getName.stripPrefix("partition=").toInt
+        if keep(topic, part)
+      } yield SegmentPartition(p.getPath, topic, part, lo, hi)
+      dirs.toArray
   }
 
-  /** Offset bounds from pushed filters: [lo, hi] inclusive. */
-  private def offsetLo: Long = pushed.collect {
-    case GreaterThan("offset", v) => v.asInstanceOf[Number].longValue() + 1
-    case GreaterThanOrEqual("offset", v) => v.asInstanceOf[Number].longValue()
-  }.foldLeft(Long.MinValue)(math.max)
-  private def offsetHi: Long = pushed.collect {
-    case LessThan("offset", v) => v.asInstanceOf[Number].longValue() - 1
-    case LessThanOrEqual("offset", v) => v.asInstanceOf[Number].longValue()
-  }.foldLeft(Long.MaxValue)(math.min)
+  /** Offset bounds from pushed filters: [lo, hi] inclusive, or None
+    * when no offset satisfies them. Computed without overflow, so
+    * `offset > Long.MaxValue` selects nothing instead of everything. */
+  private def offsetRange: Option[(Long, Long)] = {
+    val lo = pushed.collect {
+      case GreaterThan("offset", v: Number) => BigInt(v.longValue()) + 1
+      case GreaterThanOrEqual("offset", v: Number) => BigInt(v.longValue())
+    }.foldLeft(BigInt(Long.MinValue))(_ max _)
+    val hi = pushed.collect {
+      case LessThan("offset", v: Number) => BigInt(v.longValue()) - 1
+      case LessThanOrEqual("offset", v: Number) => BigInt(v.longValue())
+    }.foldLeft(BigInt(Long.MaxValue))(_ min _)
+    if (lo > hi) None else Some((lo.toLong, hi.toLong))
+  }
 
   override def createReaderFactory(): PartitionReaderFactory = decodeJson match {
     case Some(json) => new DecodedReaderFactory(json, required)
@@ -326,9 +345,10 @@ private[sources] class DecodedSegmentReader(p: SegmentPartition,
   * (KafkaRecordReader.java: pull `[committed, latest)` per partition,
   * persist new offsets, repeat) natively — each micro-batch covers the
   * offset delta per topic-partition since the last checkpointed
-  * Offset. `latestOffset` scans segment records for the current high
-  * watermark (a real broker serves this from its index; the scan is
-  * the file-backed stand-in).
+  * Offset. `latestOffset` takes the current high watermark from each
+  * segment's offset index, as a broker does, and reads the records of
+  * only a segment without a trusted index. Spark pushes no filters into
+  * a micro-batch scan, so a streaming query keeps its Filter.
   *
   * [[PullBudget]] is pull-budget admission control — the
   * `kafka.max.pull.hrs` / `kafka.max.pull.minutes.per.task` analogue
@@ -369,8 +389,7 @@ private[sources] class SegmentMicroBatchStream(path: String,
     partDirs().map { case (topic, part, dir) =>
       val files = Option(dir.listFiles()).getOrElse(Array.empty[File])
         .filter(_.getName.endsWith(".gseg"))
-      val hi = files.iterator.flatMap(LogSegments.readFile)
-        .foldLeft(-1L) { case (m, (_, _, off, _)) => math.max(m, off) }
+      val hi = files.foldLeft(-1L)((m, f) => math.max(m, LogSegments.maxOffset(f)))
       (topic, part) -> (hi + 1)
     }.toMap
 
@@ -513,7 +532,8 @@ private[graft] object SegmentOffsets {
 // `readStream`, no foreachBatch shim.
 //
 // Commit protocol (exactly-once for streaming epochs):
-//  - every task writes `.gseg.tmp` files named DETERMINISTICALLY from
+//  - every task writes `.gseg.tmp` files (each with its
+//    `.gseg.gidx.tmp` offset index) named DETERMINISTICALLY from
 //    (queryId, epochId, task partitionId) — a retried task or a
 //    re-executed epoch regenerates the SAME names;
 //  - the driver publishes (tmp → final rename, REPLACE_EXISTING) only
@@ -593,8 +613,7 @@ private[sources] object SegmentWriteImpl {
     }
   def discardAll(messages: Array[WriterCommitMessage]): Unit =
     messages.foreach {
-      case SegmentTaskCommit(tmps) =>
-        tmps.foreach(t => new java.io.File(t).delete())
+      case SegmentTaskCommit(tmps) => tmps.foreach(LogSegments.discard)
       case _ => ()
     }
 }
@@ -654,7 +673,7 @@ private[sources] class SegmentDataWriter(path: String, stem: String,
   override def abort(): Unit = {
     writers.values.foreach { w =>
       try w.close() catch { case scala.util.control.NonFatal(_) => () }
-      w.tmpFile.delete()
+      LogSegments.discard(w.tmpFile.getPath)
     }
   }
 
@@ -685,7 +704,7 @@ private[sources] class SegmentReader(p: SegmentPartition)
         true
       }
     } else if (files.hasNext) {
-      current = LogSegments.readFile(files.next())
+      current = LogSegments.readRange(files.next(), p.offsetLo, p.offsetHi)
       advance()
     } else false
 

@@ -20,6 +20,22 @@ import org.apache.spark.sql.functions._
   * with it, any flipped byte is detected at the exact record. v1 files
   * (magic "GSEG", no crc) still read.
   *
+  * Every v2 segment the writer produces gets a sparse offset index in a
+  * `<segment>.gidx` sidecar — Kafka's `.index` with a fixed
+  * `index.interval.bytes` of [[IndexIntervalBytes]]:
+  * `[magic "GIDX" int][segment bytes long][records long][min offset long]`
+  * `[max offset long][sorted byte][entries int]`, then per entry its
+  * offset, byte position and record ordinal, each as a zigzag varint
+  * delta from the previous entry's (a few bytes an entry), then the
+  * CRC32 of every preceding index byte. The first record and then the
+  * first record at least [[IndexIntervalBytes]] after the previous
+  * entry get an entry; "sorted" means offsets strictly increase. An
+  * index is trusted only when its CRC matches and the segment still has
+  * the byte length it records; a segment without a trusted one (v1, no
+  * sidecar, corrupt sidecar, truncated or rewritten segment) is read
+  * from its start. [[publish]] renames the index into place before its
+  * segment, so a reader that lists a segment finds the segment's index.
+  *
   * The format exists so [[LogSegmentSource]] can demonstrate the
   * reference's scan model (KafkaInputFormat.java: one split per
   * topic-partition bounded by offsets) as a native DataSourceV2
@@ -68,46 +84,179 @@ object LogSegments {
     }
   }
 
+  /** Record bytes between two offset-index entries (Kafka's
+    * `index.interval.bytes` default). */
+  val IndexIntervalBytes: Int = 4096
+  private val IndexMagic: Int = 0x47494458 // "GIDX"
+  private val IndexHeaderBytes = 4 + 8 * 4 + 1 + 4
+
+  /** Zigzag varint: deltas of either sign in as few bytes as they need. */
+  private def putVarLong(out: DataOutputStream, v: Long): Unit = {
+    var z = (v << 1) ^ (v >> 63)
+    while ((z & ~0x7FL) != 0) { out.writeByte(((z & 0x7F) | 0x80).toInt); z >>>= 7 }
+    out.writeByte(z.toInt)
+  }
+  private def getVarLong(buf: java.nio.ByteBuffer): Long = {
+    var (z, shift, b) = (0L, 0, 0x80)
+    while ((b & 0x80) != 0) {
+      require(shift < 64, "varint overflow")
+      b = buf.get(); z |= (b & 0x7FL) << shift; shift += 7
+    }
+    (z >>> 1) ^ -(z & 1)
+  }
+
+  /** The sidecar index of a segment: `X.gseg` → `X.gseg.gidx`, and of a
+    * segment still being written, `X.gseg.tmp` → `X.gseg.gidx.tmp`. */
+  private[graft] def indexFile(segment: File): File = {
+    val p = segment.getPath
+    if (p.endsWith(".tmp")) new File(p.stripSuffix(".tmp") + ".gidx.tmp")
+    else new File(p + ".gidx")
+  }
+
+  /** A segment's offset index: where each [[IndexIntervalBytes]] of its
+    * records starts (offset, byte position, record ordinal, ascending by
+    * position), plus the facts that let a read skip or stop early. */
+  private[graft] final class SegmentIndex(val bytes: Long, val records: Long,
+      val minOffset: Long, val maxOffset: Long, val sorted: Boolean,
+      offsets: Array[Long], positions: Array[Long], ordinals: Array[Long]) {
+
+    /** (byte position, record ordinal) of the last entry at or below
+      * `lo` in a sorted segment — no earlier record can reach `lo` —
+      * else of the first record. */
+    def seek(lo: Long): (Long, Long) = {
+      val i = if (sorted) java.util.Arrays.binarySearch(offsets, lo) else -1
+      val at = if (i >= 0) i else -i - 2 // a miss: the entry below lo's insertion point
+      if (at < 0) (4L, 0L) else (positions(at), ordinals(at))
+    }
+
+    def encode(): Array[Byte] = {
+      val bytesOut = new java.io.ByteArrayOutputStream()
+      val out = new DataOutputStream(bytesOut)
+      out.writeInt(IndexMagic); out.writeLong(bytes); out.writeLong(records)
+      out.writeLong(minOffset); out.writeLong(maxOffset); out.writeBoolean(sorted)
+      out.writeInt(offsets.length)
+      offsets.indices.foreach { i =>
+        def delta(xs: Array[Long]) = xs(i) - (if (i == 0) 0L else xs(i - 1))
+        putVarLong(out, delta(offsets)); putVarLong(out, delta(positions))
+        putVarLong(out, delta(ordinals))
+      }
+      val crc = new java.util.zip.CRC32()
+      crc.update(bytesOut.toByteArray)
+      out.writeInt(crc.getValue.toInt)
+      bytesOut.toByteArray
+    }
+  }
+
+  /** The index of `segment` if it can be trusted: its sidecar exists,
+    * parses, matches its CRC32 and records the segment's current byte
+    * length. */
+  private[graft] def readIndex(segment: File): Option[SegmentIndex] = {
+    val f = indexFile(segment)
+    val raw =
+      try java.nio.file.Files.readAllBytes(f.toPath)
+      catch { case _: java.io.IOException => return None }
+    if (raw.length < IndexHeaderBytes + 4) return None
+    val buf = java.nio.ByteBuffer.wrap(raw)
+    val crc = new java.util.zip.CRC32()
+    crc.update(raw, 0, raw.length - 4)
+    if (buf.getInt(raw.length - 4) != crc.getValue.toInt || buf.getInt() != IndexMagic)
+      return None
+    buf.limit(raw.length - 4)
+    val (bytes, records, lo, hi) = (buf.getLong(), buf.getLong(), buf.getLong(), buf.getLong())
+    val sorted = buf.get() == 1
+    val n = buf.getInt()
+    // entries take 3 to 30 bytes each
+    if (bytes != segment.length() || n < 0 || n.toLong * 3 > raw.length) return None
+    val (offsets, positions, ordinals) = (new Array[Long](n), new Array[Long](n), new Array[Long](n))
+    try (0 until n).foreach { i =>
+      def prev(xs: Array[Long]) = if (i == 0) 0L else xs(i - 1)
+      offsets(i) = prev(offsets) + getVarLong(buf)
+      positions(i) = prev(positions) + getVarLong(buf)
+      ordinals(i) = prev(ordinals) + getVarLong(buf)
+    } catch { case scala.util.control.NonFatal(_) => return None }
+    if (buf.hasRemaining) None
+    else Some(new SegmentIndex(bytes, records, lo, hi, sorted, offsets, positions, ordinals))
+  }
+
   /** Streams records into ONE v2 segment file at `tmpFile` (callers
-    * name it `*.gseg.tmp`). Publication is by rename, in one of two
+    * name it `*.gseg.tmp`) and, on close, its offset index into
+    * [[indexFile]]`(tmpFile)`. Publication is by rename, in one of two
     * disciplines: [[seal]] (close + rename now — the batch-write path,
     * where the task owns publication) or plain [[close]] with the
     * rename deferred to a coordinator ([[publish]] — the DSv2 commit
     * protocol, where the DRIVER renames after every task reported, so
     * a failed epoch leaves only `.tmp` litter and never a half-visible
-    * segment). */
+    * segment; [[discard]] removes that litter). */
   private[sources] final class SegmentFileWriter(val tmpFile: File) {
     tmpFile.getParentFile.mkdirs()
     private val out = new DataOutputStream(new BufferedOutputStream(
       new FileOutputStream(tmpFile)))
     out.writeInt(Magic2)
     private val crc = new RecordCrc
+    private var position = 4L
+    private var records = 0L
+    private var minOffset = Long.MaxValue
+    private var maxOffset = Long.MinValue
+    private var sorted = true
+    private var lastEntry = 0L
+    private val offsets, positions, ordinals = Array.newBuilder[Long]
+    private var closed = false
+
     def append(k: Array[Byte], v: Array[Byte], offset: Long, tsMs: Long): Unit = {
+      if (records == 0 || position - lastEntry >= IndexIntervalBytes) {
+        offsets += offset; positions += position; ordinals += records
+        lastEntry = position
+      }
+      if (records > 0 && offset <= maxOffset) sorted = false
+      minOffset = math.min(minOffset, offset); maxOffset = math.max(maxOffset, offset)
       def bytes(b: Array[Byte]): Unit =
         if (b == null) out.writeInt(-1)
         else { out.writeInt(b.length); out.write(b) }
       bytes(k); bytes(v)
       out.writeLong(offset); out.writeLong(tsMs)
       out.writeInt(crc.of(k, v, offset, tsMs))
+      position += 4 + (if (k == null) 0 else k.length) + 4 +
+        (if (v == null) 0 else v.length) + 8 + 8 + 4
+      records += 1
     }
-    def close(): Unit = out.close()
+
+    /** Close the segment, then write its index. */
+    def close(): Unit = if (!closed) {
+      closed = true
+      out.close()
+      java.nio.file.Files.write(indexFile(tmpFile).toPath, new SegmentIndex(position, records,
+        minOffset, maxOffset, sorted, offsets.result(), positions.result(),
+        ordinals.result()).encode())
+    }
     def seal(): File = { close(); publish(tmpFile.getPath) }
   }
 
-  /** Rename a finished `.tmp` segment into place. Idempotent under
-    * coordinator retry: a missing tmp whose final file exists is a
-    * previously-completed publish, not an error (REPLACE_EXISTING
-    * keeps a same-name re-publish an overwrite, never a duplicate). */
+  /** Rename a finished `.tmp` segment into place, its index first.
+    * Idempotent under coordinator retry: a missing tmp whose final file
+    * exists is a previously-completed publish, not an error
+    * (REPLACE_EXISTING keeps a same-name re-publish an overwrite, never
+    * a duplicate). A tmp segment without a tmp index drops any index
+    * left under the final name, so it can never describe other bytes. */
   private[sources] def publish(tmpPath: String): File = {
+    import java.nio.file.{Files, StandardCopyOption}
     val tmp = new File(tmpPath)
     val fin = new File(tmpPath.stripSuffix(".tmp"))
-    if (tmp.exists())
-      java.nio.file.Files.move(tmp.toPath, fin.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    else if (!fin.exists())
+    if (tmp.exists()) {
+      val (tmpIdx, finIdx) = (indexFile(tmp), indexFile(fin))
+      if (tmpIdx.exists())
+        Files.move(tmpIdx.toPath, finIdx.toPath, StandardCopyOption.REPLACE_EXISTING)
+      else Files.deleteIfExists(finIdx.toPath)
+      Files.move(tmp.toPath, fin.toPath, StandardCopyOption.REPLACE_EXISTING)
+    } else if (!fin.exists())
       throw new java.io.IOException(
         s"graft: segment $tmpPath vanished before publication")
     fin
+  }
+
+  /** Delete an unpublished `.tmp` segment and its index. */
+  private[sources] def discard(tmpPath: String): Unit = {
+    val tmp = new File(tmpPath)
+    tmp.delete(); indexFile(tmp).delete(); ()
   }
 
   /** Write a message-log DataFrame (spark-sql-kafka schema) as segment
@@ -149,11 +298,45 @@ object LogSegments {
   trait RecordIterator extends Iterator[(Array[Byte], Array[Byte], Long, Long)]
       with AutoCloseable
 
+  private object EmptyRecords extends RecordIterator {
+    override def hasNext: Boolean = false
+    override def next(): (Array[Byte], Array[Byte], Long, Long) =
+      throw new NoSuchElementException("next on an empty segment range")
+    override def close(): Unit = ()
+  }
+
+  /** The records of `f` a read of offsets `[lo, hi]` has to look at.
+    * With a trusted index: none when the segment's offsets miss the
+    * range; in a sorted segment, those from the last index entry at or
+    * below `lo` up to the first record at or past `hi`; otherwise every
+    * record. Callers still filter by offset. */
+  def readRange(f: File, lo: Long, hi: Long): RecordIterator = readIndex(f) match {
+    case Some(ix) if ix.records == 0 || ix.maxOffset < lo || ix.minOffset > hi => EmptyRecords
+    case Some(ix) if ix.sorted =>
+      val (position, ordinal) = ix.seek(lo)
+      readFile(f, position, ordinal, hi)
+    case _ => readFile(f)
+  }
+
+  /** The highest offset in `f`, -1 if it holds none: from its index,
+    * else by reading every record. */
+  def maxOffset(f: File): Long = readIndex(f) match {
+    case Some(ix) => math.max(-1L, ix.maxOffset)
+    case None =>
+      val it = readFile(f)
+      try it.foldLeft(-1L) { case (m, (_, _, off, _)) => math.max(m, off) }
+      finally it.close()
+  }
+
   /** Iterate one segment file's records, validating per-record CRCs on
     * v2 files ([[CorruptRecordException]] pinpoints the bad record).
-    * Closes itself at EOF. */
-  def readFile(f: File): RecordIterator = {
-    val in = new DataInputStream(new java.io.BufferedInputStream(new FileInputStream(f)))
+    * The read starts at byte `position`, which holds record number
+    * `ordinal` (an index entry; the first record by default), and ends
+    * after the first record whose offset reaches `stopAfter`. Closes
+    * itself at EOF. */
+  def readFile(f: File, position: Long = 4L, ordinal: Long = 0L,
+      stopAfter: Long = Long.MaxValue): RecordIterator = {
+    val file = new FileInputStream(f)
     // a bad-magic failure must close the stream itself — the caller
     // never gets a handle to close. (A corrupt record #0 found by the
     // eager first advance also closes the stream itself, then raises
@@ -163,17 +346,23 @@ object LogSegments {
     // must reach the caller, not be masked by a failing close() on the
     // same broken device
     def closeQuietly(): Unit =
-      try in.close() catch { case scala.util.control.NonFatal(_) => () }
+      try file.close() catch { case scala.util.control.NonFatal(_) => () }
     val checked =
       try {
-        val magic = in.readInt()
+        val head = new Array[Byte](4)
+        new DataInputStream(file).readFully(head)
+        val magic = java.nio.ByteBuffer.wrap(head).getInt
         require(magic == Magic || magic == Magic2,
           s"graft: ${f.getPath} is not a segment file")
+        if (position > 4) file.getChannel.position(position)
         magic == Magic2
       } catch { case e: Throwable => closeQuietly(); throw e }
+    // reads come in index intervals, so a ranged read overshoots by at
+    // most one interval
+    val in = new DataInputStream(new java.io.BufferedInputStream(file, IndexIntervalBytes))
     new RecordIterator {
       private val crc = new RecordCrc
-      private var recordIndex = -1L
+      private var recordIndex = ordinal - 1
       private var nextRec: (Array[Byte], Array[Byte], Long, Long) = _
       private var done = false
       // a decode error found while PRE-fetching record i+1 is parked
@@ -181,6 +370,7 @@ object LogSegments {
       // eager advance must not cost the caller the last healthy record
       private var pendingError: Throwable = null
       private def advance(): Unit = {
+        if (nextRec != null && nextRec._3 >= stopAfter) { done = true; closeQuietly(); return }
         // the record's first byte separates a clean end-of-log (stream
         // exhausted exactly at a record boundary → read() returns -1)
         // from a record that started and was cut off mid-way

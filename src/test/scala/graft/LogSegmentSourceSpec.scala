@@ -440,4 +440,294 @@ class LogSegmentSourceSpec extends SparkSpec {
     assert(messages(ex).exists(_.contains("read-only typed view")),
       messages(ex).mkString(" | "))
   }
+
+  // ───────────── offset index and exact pushdown ─────────────
+
+  /** A synthetic log: ids [from, until) spread over `parts` partitions
+    * of topic `t`, offsets contiguous per partition, ~130-byte records
+    * so each 4 KiB index interval spans about 30 of them. */
+  private def synthLog(from: Long, until: Long, parts: Int = 2) =
+    spark.range(from, until).select(
+      col("id").cast("string").cast("binary").as("key"),
+      lpad(col("id").cast("string"), 96, "x").cast("binary").as("value"),
+      lit("t").as("topic"),
+      (col("id") % parts).cast("int").as("partition"),
+      (col("id") / parts).cast("long").as("offset"),
+      timestamp_millis(col("id")).as("timestamp"),
+      lit(0).as("timestampType"))
+
+  /** Three segments per partition: offsets [0, 500), [500, 1200) and
+    * [1200, 1500) in each of partitions 0 and 1. */
+  private lazy val multiSegDir: String = {
+    val path = java.nio.file.Files.createTempDirectory("graft_seg_idx").toString
+    Seq((0L, 1000L), (1000L, 2400L), (2400L, 3000L))
+      .foreach { case (a, b) => LogSegments.write(synthLog(a, b), path) }
+    path
+  }
+
+  private def segments(dir: String, part: Int = 0): Seq[java.io.File] =
+    new java.io.File(s"$dir/topic=t/partition=$part").listFiles()
+      .filter(_.getName.endsWith(".gseg")).sortBy(_.getName).toSeq
+
+  private def slice(df: org.apache.spark.sql.DataFrame) =
+    df.select(col("partition"), col("offset"), md5(col("value")))
+      .collect().map(r => (r.getInt(0), r.getLong(1), r.getString(2)))
+      .sortBy(r => (r._1, r._2)).toSeq
+
+  private def assertRangesMatchFullScan(dir: String): Unit = {
+    val full = slice(spark.read.format("graft-log").load(dir))
+    assert(full.nonEmpty)
+    val ranges = Seq(
+      (499L, 501L), (500L, 1200L), (0L, 500L), (1199L, 1201L), // segment edges
+      (40L, 45L), (61L, 63L), // inside one index interval
+      (100L, 1400L), (0L, 1500L), // across several segments
+      (300L, 300L), (700L, 650L), // empty
+      (1500L, 2000L), (5000L, 6000L)) // past the high watermark
+    ranges.foreach { case (lo, hi) =>
+      val got = slice(spark.read.format("graft-log").load(dir)
+        .filter(col("partition") === 1 && col("offset") >= lo && col("offset") < hi))
+      val want = full.filter(r => r._1 == 1 && r._2 >= lo && r._2 < hi)
+      assert(got === want, s"range [$lo, $hi)")
+    }
+  }
+
+  test("ranged reads through the offset index equal a filtered full scan") {
+    assertRangesMatchFullScan(multiSegDir)
+    // every segment is indexed, sorted, and a narrow read seeks instead
+    // of reading the segment from its start
+    val seg = segments(multiSegDir).maxBy(f => LogSegments.readIndex(f).get.records)
+    val ix = LogSegments.readIndex(seg).get
+    assert(ix.sorted && ix.records === 700 && ix.minOffset === 500 && ix.maxOffset === 1199)
+    val all = { val it = LogSegments.readFile(seg); try it.map(_._3).toList finally it.close() }
+    for (lo <- Seq(0L, 500L, 531L, 532L, 800L, 1199L, 1300L); len <- Seq(0L, 1L, 40L)) {
+      val hi = lo + len
+      val it = LogSegments.readRange(seg, lo, hi)
+      val read = try it.map(_._3).toList finally it.close()
+      assert(read.filter(o => o >= lo && o <= hi) === all.filter(o => o >= lo && o <= hi),
+        s"[$lo, $hi]")
+      // at most one index interval (~31 records) before lo and one
+      // record past hi
+      assert(read.size <= len + 1 + 40, s"[$lo, $hi] read ${read.size} records")
+    }
+  }
+
+  test("a missing, corrupt or stale offset index falls back to a full read") {
+    def copy(): String = {
+      val dir = java.nio.file.Files.createTempDirectory("graft_seg_idx_fb").toFile
+      org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(multiSegDir), dir)
+      dir.getPath
+    }
+    // a deleted sidecar
+    val deleted = copy()
+    segments(deleted, 1).foreach(s => assert(LogSegments.indexFile(s).delete()))
+    assert(segments(deleted, 1).forall(LogSegments.readIndex(_).isEmpty))
+    assertRangesMatchFullScan(deleted)
+    // one flipped byte in every sidecar, inside its entries
+    val flipped = copy()
+    segments(flipped, 1).foreach { s =>
+      val raf = new java.io.RandomAccessFile(LogSegments.indexFile(s), "rw")
+      try { raf.seek(50); val b = raf.readByte(); raf.seek(50); raf.writeByte(b ^ 0x01) }
+      finally raf.close()
+      assert(LogSegments.readIndex(s).isEmpty)
+    }
+    assertRangesMatchFullScan(flipped)
+    // a segment truncated after its index was written is read from its
+    // start, which finds the torn record
+    val torn = copy()
+    val seg = segments(torn, 1).head
+    val raf = new java.io.RandomAccessFile(seg, "rw")
+    try raf.setLength(raf.length() - 2) finally raf.close()
+    assert(LogSegments.readIndex(seg).isEmpty)
+    intercept[LogSegments.TruncatedRecordException] {
+      val it = LogSegments.readRange(seg, 0L, 0L)
+      try it.foreach(_ => ()) finally it.close()
+    }
+    Seq(deleted, flipped, torn).foreach(d => deleteRecursively(new java.io.File(d)))
+  }
+
+  test("a flipped byte inside the requested range still fails its crc") {
+    val path = java.nio.file.Files.createTempDirectory("graft_seg_idx_crc").toString
+    try {
+      LogSegments.write(synthLog(0, 2000, parts = 1), path)
+      val seg = segments(path).head
+      val ix = LogSegments.readIndex(seg).get
+      // the last record's stored crc: the segment keeps its length, so
+      // the index stays trusted and the read seeks straight to it
+      val raf = new java.io.RandomAccessFile(seg, "rw")
+      try {
+        raf.seek(raf.length() - 1); val b = raf.readByte()
+        raf.seek(raf.length() - 1); raf.writeByte(b ^ 0x40)
+      } finally raf.close()
+      assert(LogSegments.readIndex(seg).isDefined)
+      val ex = intercept[LogSegments.CorruptRecordException] {
+        val it = LogSegments.readRange(seg, ix.maxOffset, ix.maxOffset)
+        try it.foreach(_ => ()) finally it.close()
+      }
+      // the record ordinal comes from the index entry the read seeked to
+      assert(ex.getMessage.contains(s"#${ix.records - 1}"), ex.getMessage)
+      // a range that does not reach the bad record reads cleanly
+      assert(spark.read.format("graft-log").load(path)
+        .filter(col("offset") >= 10 && col("offset") < 20).count() === 10)
+    } finally deleteRecursively(new java.io.File(path))
+  }
+
+  test("an out-of-order segment written through the DSv2 sink reads correctly") {
+    val out = java.nio.file.Files.createTempDirectory("graft_seg_idx_ooo").toString
+    try {
+      synthLog(0, 3000).orderBy(col("offset").desc).coalesce(1)
+        .write.format("graft-log").mode("append").save(out)
+      val seg = segments(out).head
+      assert(!LogSegments.readIndex(seg).get.sorted)
+      assertRangesMatchFullScan(out)
+    } finally deleteRecursively(new java.io.File(out))
+  }
+
+  test("commit publishes each segment with its index; abort leaves no file") {
+    import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriterCommitMessage}
+    import org.apache.spark.sql.util.CaseInsensitiveStringMap
+    import scala.jdk.CollectionConverters._
+    val out = java.nio.file.Files.createTempDirectory("graft_w_abort").toString
+    def files(): Seq[String] = {
+      def walk(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk) else Seq(f)
+      walk(new java.io.File(out)).map(_.getName)
+    }
+    try {
+      val table = new graft.sources.LogSegmentSource().getTable(
+        graft.sources.LogSegmentSource.schema, Array.empty, Map("path" -> out).asJava)
+      val info = new LogicalWriteInfo {
+        override def options(): CaseInsensitiveStringMap =
+          new CaseInsensitiveStringMap(java.util.Map.of("path", out))
+        override def queryId(): String = "abort-query"
+        override def schema() = graft.sources.LogSegmentSource.schema
+      }
+      val batch = table.asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsWrite]
+        .newWriteBuilder(info).build().toBatch
+      val data = synthLog(0, 200).queryExecution.toRdd.collect()
+      def task(id: Int) = {
+        val w = batch.createBatchWriterFactory(null).createWriter(id, id.toLong)
+        data.foreach(w.write); w
+      }
+      // a task that aborts itself
+      task(0).abort()
+      assert(files().isEmpty, files())
+      // tasks that committed, then a job that aborts
+      val msgs: Array[WriterCommitMessage] = Array(task(1).commit(), task(2).commit())
+      assert(files().exists(_.endsWith(".gseg.gidx.tmp")), files())
+      batch.abort(msgs)
+      assert(files().isEmpty, files())
+      // a job that commits: every segment next to its index, no .tmp
+      batch.commit(Array(task(3).commit()))
+      val fs = files()
+      assert(fs.nonEmpty && fs.forall(f => f.endsWith(".gseg") || f.endsWith(".gseg.gidx")), fs)
+      assert(fs.count(_.endsWith(".gseg")) === fs.count(_.endsWith(".gidx")))
+    } finally deleteRecursively(new java.io.File(out))
+  }
+
+  /** latestOffset of a fresh micro-batch stream over `dir`. */
+  private def latest(dir: String): graft.sources.SegmentOffsets = {
+    import scala.jdk.CollectionConverters._
+    val table = new graft.sources.LogSegmentSource().getTable(
+      graft.sources.LogSegmentSource.schema, Array.empty, Map("path" -> dir).asJava)
+    table.asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsRead]
+      .newScanBuilder(new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+        java.util.Map.of("path", dir)))
+      .build().toMicroBatchStream(dir).latestOffset()
+      .asInstanceOf[graft.sources.SegmentOffsets]
+  }
+
+  test("latestOffset from the indexes equals the high watermark of a full scan") {
+    val want = spark.read.format("graft-log").load(multiSegDir)
+      .groupBy(col("topic"), col("partition")).agg(max(col("offset")))
+      .collect().map(r => (r.getString(0), r.getInt(1)) -> (r.getLong(2) + 1)).toMap
+    assert(latest(multiSegDir).next === want)
+    assert(want === Map(("t", 0) -> 1500L, ("t", 1) -> 1500L))
+  }
+
+  test("an empty log, an empty partition and a range past the end read as empty") {
+    val root = java.nio.file.Files.createTempDirectory("graft_seg_empty").toString
+    try {
+      assert(spark.read.format("graft-log").load(root).count() === 0)
+      assert(latest(root).next.isEmpty)
+      new java.io.File(s"$root/topic=t/partition=0").mkdirs()
+      assert(spark.read.format("graft-log").load(root).count() === 0)
+      assert(spark.read.format("graft-log").load(root)
+        .filter(col("partition") === 0 && col("offset") >= 5).count() === 0)
+      assert(latest(root).next === Map(("t", 0) -> 0L))
+    } finally deleteRecursively(new java.io.File(root))
+    assert(spark.read.format("graft-log").load(multiSegDir)
+      .filter(col("offset") >= 1500).count() === 0)
+  }
+
+  test("null elements of a pushed IN list match nothing") {
+    val t = spark.read.format("graft-log").load(multiSegDir)
+    t.createOrReplaceTempView("seg_in")
+    try {
+      val p1 = t.filter(col("partition") === 1).count()
+      assert(p1 === 1500)
+      assert(spark.sql("SELECT count(*) FROM seg_in WHERE `partition` IN (1, NULL)")
+        .head().getLong(0) === p1)
+      assert(spark.sql("SELECT count(*) FROM seg_in WHERE topic IN ('t', NULL)")
+        .head().getLong(0) === 3000)
+      assert(spark.sql("SELECT count(*) FROM seg_in WHERE topic IN ('u', NULL)")
+        .head().getLong(0) === 0)
+    } finally spark.catalog.dropTempView("seg_in")
+  }
+
+  test("offset bounds past the ends of a long select nothing") {
+    val t = spark.read.format("graft-log").load(multiSegDir)
+    assert(t.filter(col("offset") > Long.MaxValue).count() === 0)
+    assert(t.filter(col("offset") < Long.MinValue).count() === 0)
+    assert(t.filter(col("offset") >= Long.MaxValue).count() === 0)
+    assert(t.filter(col("offset") <= Long.MinValue).count() === 0)
+    assert(t.filter(col("offset") >= Long.MinValue && col("offset") <= Long.MaxValue)
+      .count() === 3000)
+  }
+
+  test("topic, partition and offset predicates leave no Filter above the scan") {
+    import org.apache.spark.sql.execution.FilterExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val helper = new AdaptiveSparkPlanHelper {}
+    def filters(df: org.apache.spark.sql.DataFrame) =
+      helper.collect(df.queryExecution.executedPlan) { case f: FilterExec => f }
+    val t = spark.read.format("graft-log").load(multiSegDir)
+    val exact = t.filter(col("topic") === "t" && col("partition").isin(0, 1) &&
+      col("offset") >= 10 && col("offset") <= 20 && col("partition") === 1)
+    assert(exact.queryExecution.executedPlan.toString.contains("BatchScan graft-log"))
+    assert(filters(exact).isEmpty, exact.queryExecution.executedPlan)
+    assert(exact.count() === 11)
+    // a payload predicate is still Spark's to evaluate
+    val decoded = spark.read.format("graft-log").option("decodeTopic", "events").load(segDir)
+    val views = decoded.filter(col("partition") === 3 && col("event_type") === "view")
+    assert(filters(views).map(_.condition.sql).mkString.contains("event_type"),
+      views.queryExecution.executedPlan)
+    assert(views.count() === MessageLog.eventsScan(spark, sf)
+      .filter(col("user_id") % 8 === 3 && col("event_type") === "view").count())
+  }
+
+  test("a streaming read keeps its partition predicate") {
+    val q = spark.readStream.format("graft-log").load(multiSegDir)
+      .where("`partition` = 1")
+      .writeStream.format("memory").queryName("seg_stream_p1").start()
+    try q.processAllAvailable() finally q.stop()
+    val got = spark.table("seg_stream_p1").select(col("partition")).collect().map(_.getInt(0))
+    assert(got.length === 1500 && got.forall(_ === 1))
+  }
+
+  test("a lookup with new bounds compiles no new code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    spark.sql("DROP TABLE IF EXISTS spec_lookup")
+    spark.sql(s"""CREATE TABLE spec_lookup USING `graft-log`
+                  OPTIONS (path '$segDir', decodeTopic 'events')""")
+    try {
+      def lookup(p: Int, lo: Long, hi: Long) = spark.sql(
+        "SELECT `offset`, event_id, user_id, event_type, " +
+          "CAST(ROUND(value * 100) AS BIGINT) AS cents FROM spec_lookup " +
+          s"WHERE `partition` = $p AND `offset` >= $lo AND `offset` < $hi").collect()
+      assert(lookup(2, 3, 9).length === 6)
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      assert(lookup(5, 11, 14).length === 3)
+      assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount === before)
+    } finally spark.sql("DROP TABLE IF EXISTS spec_lookup")
+  }
 }
