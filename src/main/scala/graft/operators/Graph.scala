@@ -498,8 +498,8 @@ object Graph {
       // Per-round lineage cut: `dist` feeds TWO consumers each round
       // (the union carry and the join expansion), so without a cut the
       // uncut plan tree doubles per round — the dual-consumer pattern
-      // graphSearchTopK and the k-core loop already cut (measured
-      // 9.1->4.5 s there). The checkpointed table is node-sized.
+      // the k-core loop also cuts (a per-round cut measured 9.1->4.5 s
+      // on a 600-node beam search). The checkpointed table is node-sized.
       dist = dist.union(
         edges.as("e").join(dist.as("l"), col("e.dst") === col("l.node"))
           .select(col("e.src").as("node"), (col("l.d") + 1).as("d")))
@@ -735,7 +735,8 @@ object Graph {
         .agg(count(lit(1)).as("e2"), countDistinct(col("u")).as("nv"))
         .first()
       val nv = kr.getLong(1)
-      val k = math.max(2L, (kr.getLong(0) / nv) / 2)
+      // no edges, no nodes: the core is empty whatever k is
+      val k = if (nv == 0) 2L else math.max(2L, (kr.getLong(0) / nv) / 2)
       var alive = und.select(col("u")).distinct()
       // Early exit at the peeling fixpoint: alive sets are MONOTONE
       // decreasing (round i+1's keys come from a semi-join against

@@ -4456,11 +4456,11 @@ object Pipeline {
       val nodes = Tables.load(s, dir, "embeddings")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val (graph, upper, entry, _, _) = graphIndexStore(s, dir, "full")
+      // the search returns a local frame: nothing to materialize
       val out = Similarity.graphSearchTopKLayered(nodes,
           nodes.filter(col("vec_id") < 10), graph, upper,
           "embedding", "vec_id", k = 5, beam = 48, rounds = 6,
           upperSeed = entry)
-        .localCheckpoint(eager = true)
       nodes.unpersist()
       out
     },

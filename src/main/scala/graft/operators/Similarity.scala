@@ -1,10 +1,17 @@
 package graft.operators
 
-import graft.plans.{BroadcastCentroids, BroadcastCodebooks, BroadcastSq8, CentroidCosines, CentroidRef, CosineSim, HyperplaneSig, NearestCentroid, PQCosine, PQEncode64, SQ8Cosine, SQ8Encode}
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import graft.plans.{BroadcastCentroids, BroadcastCodebooks, BroadcastSq8, CentroidCosines, CentroidRef, CosineSim, HyperplaneSig, NearestCentroid, PQCosine, PQEncode64, SQ8Cosine, SQ8Encode, VectorOps}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -469,9 +476,7 @@ object Similarity {
     // see. With the drop, entries cover every stored cell 0..m-1 by
     // construction.
     val occAll = nodes
-      .groupBy(Bridge.column(
-        NearestCentroid(Bridge.expression(col(vecCol)), refAll))
-        .as("shard")).count()
+      .groupBy(nearestCell(col(vecCol), refAll).as("shard")).count()
       .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
     val cents = occAll.map { case (sh, _) => trained(sh) }
     require(cents.length >= 2,
@@ -479,8 +484,7 @@ object Similarity {
         "occupied cell(s) — the corpus cannot support routing; use " +
         "the monolithic or pmod-sharded build")
     val centRef = broadcastCentroids(nodes, cents)
-    def shardOf(v: Column): Column =
-      Bridge.column(NearestCentroid(Bridge.expression(v), centRef))
+    def shardOf(v: Column): Column = nearestCell(v, centRef)
     // Per-cell block counts from the MEASURED occupancy, not the
     // average: k-means cells skew, and under a global block count a
     // cell at c× the average carries c² its share of seed pairs — the
@@ -613,18 +617,24 @@ object Similarity {
     labelPruneRerank(cand, nodes, queries, idCol, labelCol, k)
   }
 
+  /** The nearest-cell column of a routed index over `df`'s vectors,
+    * one centroid broadcast per call: a routed search table's shard. */
+  private[operators] def cellColumn(df: DataFrame, vecCol: String,
+      cents: Array[Seq[Float]]): Column =
+    nearestCell(col(vecCol), broadcastCentroids(df, cents))
+
+  private def nearestCell(v: Column, ref: CentroidRef): Column =
+    Bridge.column(NearestCentroid(Bridge.expression(v), ref))
+
   /** Shard assignment of a node set under a routed index's
     * quantizer: (id, shard), one map-side [[NearestCentroid]]
     * projection. The routed recall contract uses it to pin that
     * every returned neighbor lies in a shard its query actually
     * probed. */
   def shardAssign(nodes: DataFrame, vecCol: String, idCol: String,
-      cents: Array[Seq[Float]]): DataFrame = {
-    val centRef = broadcastCentroids(nodes, cents)
+      cents: Array[Seq[Float]]): DataFrame =
     nodes.select(col(idCol).as("id"),
-      Bridge.column(NearestCentroid(Bridge.expression(col(vecCol)),
-        centRef)).as("shard"))
-  }
+      cellColumn(nodes, vecCol, cents).as("shard"))
 
   /** Search a [[buildGraphIndexRouted]] index within each query's
     * own ASSIGNED cell only — the INSERT primitive: routing goes
@@ -634,72 +644,69 @@ object Similarity {
     * new node to (a 4-dp rounding tie between two cells in the
     * multi-probe route could otherwise link a node outside its
     * assigned cell and silently break the shard-closure invariant
-    * routing depends on). */
+    * routing depends on). `table` is a prebuilt [[searchTable]] of
+    * (nodes, graph) with [[cellColumn]] as its shard, for a caller
+    * that inserts many batches into one index. */
   def graphSearchTopKAssigned(nodes: DataFrame, queries: DataFrame,
       graph: DataFrame, entries: DataFrame, cents: Array[Seq[Float]],
       vecCol: String, idCol: String, k: Int = 5,
       beamPerShard: Int = 16, rounds: Int = 4,
-      undPre: Option[DataFrame] = None): DataFrame = {
-    // ONE centroid broadcast serves both the seed assignment and the
-    // beam window's cell derivation (a second ref per call would
-    // accumulate executor blocks across a stream's micro-batches —
-    // trainQuantizer's per-round-destroy lesson)
+      table: Option[DataFrame] = None): DataFrame = {
     val centRef = broadcastCentroids(nodes, cents)
-    def shardOf(v: Column): Column =
-      Bridge.column(NearestCentroid(Bridge.expression(v), centRef))
-    val seeds = queries
-      .select(col(idCol).as("query_id"),
-        shardOf(col(vecCol)).as("shard"))
-      .join(broadcast(entries), Seq("shard"))
-      .select(col("query_id"), col("entry_id").as("cand"))
-    shardedBeamLoop(nodes, queries, graph, seeds, vecCol, idCol,
-      (_, candVec) => shardOf(candVec), k, beamPerShard, rounds,
-      undPre = undPre)
+    cellSearch(nodes, queries, graph, entries, centRef,
+      queries.select(col(idCol).as("query_id"),
+        nearestCell(col(vecCol), centRef).as("shard")),
+      vecCol, idCol, k, beamPerShard, rounds, table)
   }
 
   /** Search a [[buildGraphIndexRouted]] index: route each query to
     * its `probeShards` nearest shard centroids ([[routedShards]] —
     * the IVF multi-probe device), seed a beam at ONLY those shards'
-    * entries, and run the per-(query, shard) beam loop — candidates
-    * cannot leave a probed shard because edges are shard-closed by
-    * construction, and the candidate's shard is re-derived map-side
-    * from its vector ([[NearestCentroid]]), never joined. Per-query
-    * cost is probeShards·beamPerShard·2k rows per round —
-    * CORPUS-INDEPENDENT, the property the all-shards scatter-gather
-    * ([[graphSearchTopKSharded]]) gives up: at n=10¹⁰ autoShards
-    * reads ~152k shards and probing every one is ~2.4M candidate
-    * cosines per query per round; routing probes w=2–8 whatever the
-    * corpus. The routing loss (true neighbors living in un-probed
-    * shards) is the standard IVF recall tradeoff, pinned by the
-    * d_ann_graph_routed_recall contract. */
+    * entries, and keep per-(query, shard) beams — candidates cannot
+    * leave a probed shard because edges are shard-closed by
+    * construction. Per-query cost is probeShards·beamPerShard·2k
+    * candidates per round — CORPUS-INDEPENDENT, the property the
+    * all-shards scatter-gather ([[graphSearchTopKSharded]]) gives up:
+    * at n=10¹⁰ autoShards reads ~152k shards and probing every one
+    * is ~2.4M candidate cosines per query per round; routing probes
+    * w=2–8 whatever the corpus. The routing loss (true neighbors
+    * living in un-probed shards) is the standard IVF recall
+    * tradeoff, pinned by the d_ann_graph_routed_recall contract. */
   def graphSearchTopKRouted(nodes: DataFrame, queries: DataFrame,
       graph: DataFrame, entries: DataFrame, cents: Array[Seq[Float]],
       vecCol: String, idCol: String, k: Int = 5,
       beamPerShard: Int = 16, rounds: Int = 4,
       probeShards: Int = 2): DataFrame = {
-    // ONE centroid broadcast serves both the multi-probe route and
-    // the beam window's cell derivation (routedShards would build a
-    // second ref per call — executor-block accumulation across a
-    // stream's micro-batches)
     val centRef = broadcastCentroids(nodes, cents)
-    def shardOf(v: Column): Column =
-      Bridge.column(NearestCentroid(Bridge.expression(v), centRef))
-    val seeds = probeLists(queries, vecCol, idCol, centRef,
-        cents.length, probeShards)
-      .select(col("query_id"), col("list_id").cast("int").as("shard"))
-      .join(broadcast(entries), Seq("shard"))
-      .select(col("query_id"), col("entry_id").as("cand"))
-    shardedBeamLoop(nodes, queries, graph, seeds, vecCol, idCol,
-      (_, candVec) => shardOf(candVec), k, beamPerShard, rounds)
+    cellSearch(nodes, queries, graph, entries, centRef,
+      probeLists(queries, vecCol, idCol, centRef, cents.length, probeShards)
+        .select(col("query_id"), col("list_id").cast("int").as("shard")),
+      vecCol, idCol, k, beamPerShard, rounds, None)
+  }
+
+  /** The routed searches' common body: seeds are the entries of each
+    * query's routed cells (`routes`: query_id, shard), beams are kept
+    * per (query, cell), and the seed beam keeps a query that is its
+    * cell's entry ([[graphSearchTopKSharded]]'s exemption). ONE
+    * centroid broadcast serves the route and the table's cells. */
+  private def cellSearch(nodes: DataFrame, queries: DataFrame,
+      graph: DataFrame, entries: DataFrame, centRef: CentroidRef,
+      routes: DataFrame, vecCol: String, idCol: String, k: Int,
+      beamPerShard: Int, rounds: Int, table: Option[DataFrame]): DataFrame = {
+    val seeds = seedsOf(routes.join(broadcast(entries), Seq("shard"))
+      .select(col("query_id"), col("entry_id").as("cand")))
+    beamSearch(queries, vecCol, idCol, table.getOrElse(searchTable(nodes,
+        vecCol, idCol, graph, shard = nearestCell(col(vecCol), centRef))), k)(
+      _.beams(seeds, 0, beamPerShard, rounds, keepSelfSeed = true))
   }
 
   /** Graph-based ANN: greedy BEAM SEARCH over a directed kNN graph —
     * the HNSW/DiskANN search primitive, single-layer. Start the beam
     * at fixed entry points; each round expands the beam's UNDIRECTED
     * neighbors (reverse edges are half the reachability, exactly as
-    * in [[nnDescentRound]]), scores every candidate against the query
-    * exactly, and keeps the best `beam`; after `rounds` rounds the
-    * top-k of the final beam is the answer. Fully deterministic:
+    * in [[nnDescentRound]]), scores every new candidate against the
+    * query exactly, and keeps the best `beam`; after `rounds` rounds
+    * the top-k of the final beam is the answer. Fully deterministic:
     * ranking is by INTEGER cosm = round(cos·10⁴) with neighbor-id
     * ties, so every round's beam replays bit-identically in SQL.
     *
@@ -708,137 +715,31 @@ object Similarity {
     * neighbor_id) graph — [[bruteTopK]] on a bounded set, a
     * [[blockedTopK]] seed, or an [[nnDescentRound]]-refined build.
     *
-    * Scale: per-round work is |queries|·beam·(2·graphK) candidate
-    * rows — QUERY-linear; the corpus enters only through the graph
-    * build. The adjacency join is edge-keyed, candidates join back
-    * to vectors by id, the query set broadcasts, and each round is
-    * two equi-joins + one bounded window — never a corpus scan after
-    * the graph exists, which is the whole point of graph ANN at
-    * 100 TB: the index IS the reachability structure. Beam re-scores
-    * its survivors each round (beam·|queries| rows) to keep the SQL
-    * replay a pure round-unroll. */
+    * Every graph search runs this loop ([[beamSearch]]): one
+    * [[searchTable]] build, then ONE Spark job per round. Ids absent
+    * from `nodes` and nodes with a null embedding are skipped, never
+    * returned; a query with a null embedding returns no rows. The
+    * result is a local (query_id, neighbor_id, cosm, rnk) frame
+    * ordered by (query_id, rnk). */
   def graphSearchTopK(nodes: DataFrame, queries: DataFrame,
       graph: DataFrame, vecCol: String, idCol: String, k: Int = 5,
       beam: Int = 16, rounds: Int = 4,
-      seeds: Seq[Long] = (1L until 600L by 40L)): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"))
-    val seedCands = q.crossJoin(broadcast(
-      queries.sparkSession.range(1).select(
-        explode(array(seeds.map(lit): _*)).as("cand"))))
-    graphSearchTopKFrom(nodes, queries, graph, vecCol, idCol,
-      seedCands, k, beam, rounds)
-  }
+      seeds: Seq[Long] = (1L until 600L by 40L)): DataFrame =
+    beamSearch(queries, vecCol, idCol,
+      searchTable(nodes, vecCol, idCol, graph), k)(
+      _.beams(_ => seeds, 0, beam, rounds, keepSelfSeed = false))
 
   /** [[graphSearchTopK]] with a PER-QUERY initial beam: `seedCands`
     * is a (query_id, cand) frame naming each query's own entry
-    * points. This is the layering hook — an upper-layer search's
-    * survivors become the base layer's entries (HNSW's descent). */
-  /** The undirected adjacency a beam search expands over: edge list ∪
-    * its reverse, deduped, MATERIALIZED (one job). Exposed so a caller
-    * that runs MANY searches against the SAME graph (s_ann_ingest's
-    * per-micro-batch inserts) can compute it once and pass it via
-    * `undPre` instead of once per search. */
-  private[operators] def undirectedOf(graph: DataFrame): DataFrame =
-    graph
-      .select(col("query_id").as("v"), col("neighbor_id").as("u"))
-      .union(graph
-        .select(col("neighbor_id").as("v"), col("query_id").as("u")))
-      .distinct()
-      .localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-
+    * points (collected: it is query-bounded). */
   def graphSearchTopKFrom(nodes: DataFrame, queries: DataFrame,
       graph: DataFrame, vecCol: String, idCol: String,
       seedCands: DataFrame, k: Int = 5,
-      beam: Int = 16, rounds: Int = 4, cut: Boolean = true,
-      undPre: Option[DataFrame] = None): DataFrame = {
-    // The undirected adjacency feeds EVERY round's expand join, and
-    // each round is its own job (the per-round lineage cut below), so
-    // a lazy `und` re-evaluates the whole graph lineage once per round
-    // — for a store-backed graph that is `rounds` parquet scans +
-    // distinct shuffles, and for a derived graph (bruteTopK base in
-    // the insert keys, a chain union in s_ann_ingest) it re-runs the
-    // entire graph build per round (measured: the two insert_recall
-    // keys spent ~2/3 of their time re-deriving the 400-node brute
-    // base graph 12x). Materialize it ONCE per search; at 2+ rounds
-    // the one extra job always beats rounds-1 re-evaluations. The
-    // edge list is index-sized — the same order as the shuffles the
-    // rounds already pay, never queries x corpus. (Cut CADENCE was
-    // re-probed after this fix: cutting only every 2nd round read
-    // 58.4 s vs 48.1 s on the 8-key graph subset, and an uncut upper
-    // layer 59.0 s — the per-round eager cut stays.)
-    val und = undPre.getOrElse {
-      val undRaw = graph
-        .select(col("query_id").as("v"), col("neighbor_id").as("u"))
-        .union(graph
-          .select(col("neighbor_id").as("v"), col("query_id").as("u")))
-        .distinct()
-      if (rounds >= 2) undRaw.localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      else undRaw
-    }
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val vecs = nodes.select(col(idCol).as("cand"), col(vecCol).as("cv"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosm").desc, col("cand"))
-    // FUSED round body (r17, guide §2.4/§3.1): the candidate set is
-    // |queries|·beam·(deg+1) rows — always tiny next to the corpus —
-    // but the checkpointed frames it derives from carry no stats, so
-    // the planner used to SMJ it against `vecs`, shuffling the
-    // corpus-sized vector table EVERY round, plus a distinct exchange
-    // and the window exchange (3 shuffles/round, one corpus-sized).
-    // Broadcasting the candidate side streams `vecs` map-side with no
-    // shuffle, and the distinct collapses into the window stage: for
-    // a fixed query a candidate's cosm is a pure function of (qv, cv),
-    // so duplicate (query_id, cand) rows are ADJACENT under the
-    // window's (cosm desc, cand) sort and one lag()-equality filter
-    // dedups them inside the exchange the ranking already pays.
-    // One candidate-sized exchange per round, zero corpus shuffles;
-    // result set identical (same dedup'd candidates, same cosm, same
-    // deterministic rank order).
-    def topBeam(cands: DataFrame): DataFrame =
-      vecs.join(broadcast(cands), Seq("cand"))
-        .join(broadcast(q), Seq("query_id"))
-        .filter(col("cand") =!= col("query_id"))
-        .select(col("query_id"), col("cand"),
-          round(cosine(col("qv"), col("cv")) * 10000).cast("long")
-            .as("cosm"))
-        .withColumn("prevc", lag(col("cand"), 1).over(w))
-        .filter(col("prevc").isNull || col("prevc") =!= col("cand"))
-        .withColumn("rnk", row_number().over(w).cast("long"))
-        .filter(col("rnk") <= beam)
-        .drop("prevc")
-    // each round's beam feeds BOTH the carry and the expansion, so an
-    // uncut plan tree doubles per round (and re-scores every earlier
-    // round exponentially often — measured 9.1 s for a 600-node demo,
-    // 4.5 s with the cut). localCheckpoint is the Spark analogue of
-    // the oracle's MATERIALIZED, and the beam is bounded at
-    // |queries|·beam rows, so the cut is O(queries), never corpus.
-    // cut=false lets a SHORT bounded search defer to its caller's
-    // next cut (the whole uncut tree collapses into one job) — but
-    // MEASURE before using it: on the layered upper layer the
-    // duplicated shuffles of the uncut tree cost MORE than the jobs
-    // saved (11.1 s vs 8.7 s on the 600-node demo), so the layered
-    // search keeps the default per-round cut.
-    def maybeCut(df: DataFrame): DataFrame =
-      if (cut) df.localCheckpoint(true) else df
-    var cur = maybeCut(topBeam(seedCands.select(col("query_id"), col("cand"))))
-    for (_ <- 1 to rounds) {
-      // broadcast the beam into the adjacency: the expand join used to
-      // SMJ, shuffling the index-sized edge list by v every round
-      // (the checkpointed adjacency is partitioned by (v,u) from its
-      // distinct, which does not satisfy a join on v)
-      val expand = und.join(
-          broadcast(cur.select(col("query_id"), col("cand").as("v"))),
-          Seq("v"))
-        .select(col("query_id"), col("u").as("cand"))
-      cur = maybeCut(
-        topBeam(cur.select(col("query_id"), col("cand")).union(expand)))
-    }
-    cur.filter(col("rnk") <= k)
-      .select(col("query_id"), col("cand").as("neighbor_id"),
-        col("cosm"), col("rnk"))
-      .orderBy(col("query_id"), col("rnk"))
+      beam: Int = 16, rounds: Int = 4): DataFrame = {
+    val seeds = seedsOf(seedCands)
+    beamSearch(queries, vecCol, idCol,
+      searchTable(nodes, vecCol, idCol, graph), k)(
+      _.beams(seeds, 0, beam, rounds, keepSelfSeed = false))
   }
 
   /** LAYERED graph ANN — the actual HNSW descent, two layers: a
@@ -851,26 +752,26 @@ object Similarity {
     * beam 24 and ONE upper round — sf0.01's losses were
     * entry-routing, sf0.1's were beam-width, and the layer + wider
     * beam close both; more upper rounds measured no better: 92/90 at
-    * three for two extra sequential jobs). Upper cost is
-    * |queries|·ubeam rows per round over a √n-node graph —
-    * asymptotically free next to the base search; at corpus scale the
-    * upper node set is a uniform id-sample exactly like HNSW's
-    * level assignment. */
+    * three). Upper cost is |queries|·ubeam rows per round over a
+    * √n-node graph — asymptotically free next to the base search; at
+    * corpus scale the upper node set is a uniform id-sample exactly
+    * like HNSW's level assignment. Both layers share one
+    * [[searchTable]] and one score cache, so the base seeds (upper
+    * survivors) cost no job: 1 + upperRounds + rounds jobs after the
+    * table. `table` is a prebuilt `searchTable(nodes, vecCol, idCol,
+    * graph, Some(upperGraph))` for a caller that searches one index
+    * many times (s_ann_ingest's per-micro-batch inserts). */
   def graphSearchTopKLayered(nodes: DataFrame, queries: DataFrame,
       graph: DataFrame, upperGraph: DataFrame, vecCol: String,
       idCol: String, k: Int = 5, beam: Int = 24, rounds: Int = 4,
       upperSeed: Long = 1L, upperBeam: Int = 8, upperRounds: Int = 1,
-      nEntry: Int = 4, undPre: Option[DataFrame] = None): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"))
-    val upperSeedCands = q.select(col("query_id"),
-      lit(upperSeed).as("cand"))
-    val entries = graphSearchTopKFrom(nodes, queries, upperGraph,
-        vecCol, idCol, upperSeedCands,
-        k = nEntry, beam = upperBeam, rounds = upperRounds, cut = true)
-      .select(col("query_id"), col("neighbor_id").as("cand"))
-    graphSearchTopKFrom(nodes, queries, graph, vecCol, idCol,
-      entries, k, beam, rounds, undPre = undPre)
-  }
+      nEntry: Int = 4, table: Option[DataFrame] = None): DataFrame =
+    beamSearch(queries, vecCol, idCol, table.getOrElse(searchTable(nodes,
+        vecCol, idCol, graph, Some(upperGraph))), k) { s =>
+      val entries = s.topK(s.beams(_ => Seq(upperSeed), 1, upperBeam,
+        upperRounds, keepSelfSeed = false), nEntry)
+      s.beams(entries, 0, beam, rounds, keepSelfSeed = false)
+    }
 
   /** The label post-filter + re-rank stage shared by every filtered
     * graph search: prune the oversampled candidate set by the
@@ -924,109 +825,205 @@ object Similarity {
   }
 
   /** Fan-out-and-merge search over a [[buildGraphIndexSharded]]
-    * index, expressed as ONE dataflow: every query seeds a beam at
-    * EVERY shard's entry node, and the beam window partitions by
-    * (query, shard-of-candidate) — so each shard's greedy search
-    * proceeds independently inside the same two equi-joins per round
-    * (a global beam would let one strong shard evict another shard's
-    * entry before its region is explored; the per-shard partition IS
-    * the fan-out). The merge is the final per-query top-k window
-    * over all shards' survivors — exactly the scatter-gather a
-    * sharded index runs on a cluster (each shard's search touches
-    * only its own edges; the gather is shards·beamPerShard rows per
-    * query). Per-round work is |queries|·shards·beamPerShard·(2k)
-    * candidate rows — query-linear, corpus enters only via the
-    * graph. Deterministic: integer cosm + id ties, per-round
-    * localCheckpoint (the established dual-consumer cut). */
+    * index: every query seeds a beam at EVERY shard's entry node, and
+    * beams are kept per (query, shard-of-candidate), so each shard's
+    * greedy search proceeds independently inside the same rounds (a
+    * global beam would let one strong shard evict another shard's
+    * entry before its region is explored). The merge is the final
+    * per-query top-k over all shards' survivors — the scatter-gather
+    * a sharded index runs on a cluster. Per-round work is
+    * |queries|·shards·beamPerShard·(2k) candidates. The SEED beam is
+    * exempt from the self-filter: a query that coincides with a
+    * shard's entry would otherwise lose that whole shard before any
+    * expansion — instead the self row seeds round 1's expansion of
+    * its own neighborhood, and the self-filter applies from the first
+    * expansion round and at the final merge. */
   def graphSearchTopKSharded(nodes: DataFrame, queries: DataFrame,
       graph: DataFrame, entries: DataFrame, vecCol: String,
       idCol: String, shards: Int, k: Int = 5, beamPerShard: Int = 12,
       rounds: Int = 4): DataFrame = {
-    val seed = queries.select(col(idCol).as("query_id"))
-      .crossJoin(broadcast(entries.select(col("entry_id").as("cand"))))
-    shardedBeamLoop(nodes, queries, graph, seed, vecCol, idCol,
-      (candId, _) => pmod(candId, lit(shards)), k, beamPerShard, rounds)
+    val entryIds = entries.select(col("entry_id").cast("long")).collect()
+      .filterNot(_.isNullAt(0)).map(_.getLong(0)).toSeq
+    beamSearch(queries, vecCol, idCol, searchTable(nodes, vecCol, idCol,
+        graph, shard = pmod(col(idCol), lit(shards))), k)(
+      _.beams(_ => entryIds, 0, beamPerShard, rounds, keepSelfSeed = true))
   }
 
-  /** The per-(query, shard) beam loop behind [[graphSearchTopKSharded]]
-    * and [[graphSearchTopKRouted]]: seeds come in as an explicit
-    * (query_id, cand) frame, `shardOf(candId, candVec)` names the
-    * candidate's shard (pmod of the id for hash-sharded indexes, the
-    * nearest-centroid assignment for routed ones — both map-side), and
-    * the final merge is one per-query top-k window over every probed
-    * shard's survivors. The SEED beam is exempt from the
-    * cand =!= query self-filter: a query that coincides with a
-    * shard's entry node would otherwise lose that whole shard before
-    * any expansion (empty-seed-beam failure mode) — instead the self
-    * row seeds round 1's expansion of the query's own neighborhood
-    * and the self-filter applies from the first expansion round and
-    * at the final merge, where it belongs. */
-  private def shardedBeamLoop(nodes: DataFrame, queries: DataFrame,
-      graph: DataFrame, seedCands: DataFrame, vecCol: String,
-      idCol: String, shardOf: (Column, Column) => Column, k: Int,
-      beamPerShard: Int, rounds: Int,
-      undPre: Option[DataFrame] = None): DataFrame = {
-    // materialized once per search, for the same reason as
-    // graphSearchTopKFrom: every round's expand join re-evaluates a
-    // lazy adjacency from scratch (store scan + distinct, or the full
-    // derived-graph lineage); undPre lets a multi-search caller share
-    // one materialization
-    val und = undPre.getOrElse {
-      val undRaw = graph
-        .select(col("query_id").as("v"), col("neighbor_id").as("u"))
-        .union(graph
-          .select(col("neighbor_id").as("v"), col("query_id").as("u")))
-        .distinct()
-      if (rounds >= 2) undRaw.localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      else undRaw
+  /** The table every graph search scans, built once per search (or
+    * once per stream by a caller that searches one index many times):
+    * one row per node — (id, vec, shard, nbrs, up) — with the node's
+    * UNDIRECTED neighbors in `graph` and in the optional upper graph
+    * (edge list ∪ its reverse, as sets; empty without edges), and
+    * `shard` the caller's column over `nodes`: lit(0) unsharded, pmod
+    * of the id, or the nearest cell ([[cellColumn]]). An edge to an id
+    * absent from `nodes` stays listed; no row answers for it, so the
+    * search drops it. Materialized once, so rounds never re-run the
+    * graph lineage (a chain union or a brute base graph). */
+  private[operators] def searchTable(nodes: DataFrame, vecCol: String,
+      idCol: String, graph: DataFrame, upper: Option[DataFrame] = None,
+      shard: Column = lit(0)): DataFrame = {
+    def both(g: DataFrame, layer: Int): DataFrame = {
+      val e = g.select(col("query_id").cast("long").as("id"),
+        col("neighbor_id").cast("long").as("u"), lit(layer).as("layer"))
+      e.union(e.select(col("u").as("id"), col("id").as("u"), col("layer")))
     }
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val vecs = nodes.select(col(idCol).as("cand"), col(vecCol).as("cv"))
-    val w = Window
-      .partitionBy(col("query_id"), shardOf(col("cand"), col("cv")))
-      .orderBy(col("cosm").desc, col("cand"))
-    // FUSED round body — same rewrite as graphSearchTopKFrom (r17):
-    // broadcast the query-bounded candidate side so `vecs` streams
-    // map-side instead of being shuffled per round, and dedup inside
-    // the window's own sort (duplicate (query_id, cand) rows share
-    // cosm AND shard — shardOf is a pure function of (cand, cv) — so
-    // they are adjacent under the per-shard (cosm desc, cand) order
-    // and one lag()-equality filter replaces the distinct exchange).
-    def topBeam(cands: DataFrame, selfFilter: Boolean): DataFrame = {
-      val scored = vecs.join(broadcast(cands), Seq("cand"))
-        .join(broadcast(q), Seq("query_id"))
-      (if (selfFilter) scored.filter(col("cand") =!= col("query_id"))
-       else scored)
-        .select(col("query_id"), col("cand"), col("cv"),
-          round(cosine(col("qv"), col("cv")) * 10000).cast("long")
-            .as("cosm"))
-        .withColumn("prevc", lag(col("cand"), 1).over(w))
-        .filter(col("prevc").isNull || col("prevc") =!= col("cand"))
-        .withColumn("rnk", row_number().over(w).cast("long"))
-        .filter(col("rnk") <= beamPerShard)
-        .select(col("query_id"), col("cand"), col("cosm"))
+    def layer(i: Int): Column =
+      collect_set(when(col("layer") === i, col("u")))
+    val adj = (both(graph, 0) +: upper.map(both(_, 1)).toSeq)
+      .reduce(_ union _)
+      .groupBy(col("id")).agg(layer(0).as("nbrs"), layer(1).as("up"))
+    val none = typedLit(Array.empty[Long])
+    nodes.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"),
+        shard.cast("int").as("shard"))
+      .join(adj, Seq("id"), "left")
+      .select(col("id"), col("vec"), col("shard"),
+        coalesce(col("nbrs"), none).as("nbrs"),
+        coalesce(col("up"), none).as("up"))
+      .localCheckpoint(true)
+  }
+
+  private val BeamSchema = StructType(Seq(
+    StructField("query_id", LongType), StructField("neighbor_id", LongType),
+    StructField("cosm", LongType),
+    StructField("rnk", LongType, nullable = false)))
+
+  /** Per-query seeds from a (query_id, cand) frame, collected. */
+  private def seedsOf(seedCands: DataFrame): Long => Seq[Long] = {
+    val m = seedCands
+      .select(col("query_id").cast("long"), col("cand").cast("long"))
+      .collect().filterNot(r => r.isNullAt(0) || r.isNullAt(1))
+      .groupMap(_.getLong(0))(_.getLong(1))
+    q => m.get(q).fold(Seq.empty[Long])(_.toSeq)
+  }
+
+  /** THE beam loop behind every graph search: collect the query set,
+    * build the search table (by-name: an empty query set builds
+    * nothing), let `descend` run its layers on a [[BeamSearch]], and
+    * return each query's top `k` as a local frame. */
+  private def beamSearch(queries: DataFrame, vecCol: String,
+      idCol: String, table: => DataFrame, k: Int)(
+      descend: BeamSearch => Array[Array[Long]]): DataFrame = {
+    val qs = queries.select(col(idCol).cast("long"), col(vecCol))
+      .collect().filterNot(_.isNullAt(0)).distinctBy(_.getLong(0))
+    val rows = if (qs.isEmpty) Seq.empty[Row] else {
+      val s = new BeamSearch(table, qs.map(_.getLong(0)),
+        qs.map(r => if (r.isNullAt(1)) null else r.getSeq[Float](1).toArray))
+      try s.rows(descend(s), k) finally s.close()
     }
-    var cur = topBeam(seedCands.select(col("query_id"), col("cand")),
-      selfFilter = false).localCheckpoint(true)
-    for (_ <- 1 to rounds) {
-      val expand = und.join(
-          broadcast(cur.select(col("query_id"), col("cand").as("v"))),
-          Seq("v"))
-        .select(col("query_id"), col("u").as("cand"))
-      cur = topBeam(cur.select(col("query_id"), col("cand")).union(expand),
-          selfFilter = true)
-        .localCheckpoint(true)
+    queries.sparkSession.createDataFrame(rows.asJava, BeamSchema)
+  }
+
+  /** Spark's `round(cos·10⁴)` cast to long, bit for bit: ROUND on a
+    * double is BigDecimal.valueOf(x).setScale(0, HALF_UP). */
+  private def cosmOf(q: ArrayData, v: ArrayData): Long =
+    java.math.BigDecimal.valueOf(VectorOps.cosine(q, v) * 10000)
+      .setScale(0, java.math.RoundingMode.HALF_UP).longValue
+
+  /** One round's executor side: each search-table row whose id is in
+    * the frontier (`ids` sorted, `who(i)` the queries asking for
+    * `ids(i)`) answers its cosms, shard and both adjacency lists;
+    * rows with a null id or embedding answer nothing. */
+  private def scoreRows(it: Iterator[InternalRow], ids: Array[Long],
+      who: Array[Array[Int]], qVecs: Array[Array[Float]])
+      : Iterator[(Long, Array[Long], Int, Array[Array[Long]])] = {
+    val qv = qVecs.map(v =>
+      if (v == null) null else UnsafeArrayData.fromPrimitiveArray(v))
+    it.flatMap { r =>
+      val i = if (r.isNullAt(0) || r.isNullAt(1)) -1
+        else java.util.Arrays.binarySearch(ids, r.getLong(0))
+      Option.when(i >= 0) {
+        val v = r.getArray(1)
+        (ids(i), who(i).map(q => cosmOf(qv(q), v)), r.getInt(2),
+          Array(r.getArray(3).toLongArray(), r.getArray(4).toLongArray()))
+      }
     }
-    val wq = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosm").desc, col("cand"))
-    cur.filter(col("cand") =!= col("query_id"))
-      .select(col("query_id"), col("cand"), col("cosm"))
-      .withColumn("rnk", row_number().over(wq).cast("long"))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("cand").as("neighbor_id"),
-        col("cosm"), col("rnk"))
-      .orderBy(col("query_id"), col("rnk"))
+  }
+
+  /** The driver half of the beam loop over one [[searchTable]]: the
+    * query vectors are broadcast once; each round broadcasts its
+    * frontier (candidate id → asking queries), runs ONE job that
+    * scores it ([[scoreRows]]), and merges the answers into the
+    * per-(query, shard) beams. A (query, id) pair is scored at most
+    * once per search, and candidates come back with their adjacency,
+    * so expansion needs no second pass. State is query-bounded: the
+    * queries and the ids their beams touched. */
+  private final class BeamSearch(table: DataFrame, qIds: Array[Long],
+      qVecs: Array[Array[Float]]) {
+    private val rdd = table.queryExecution.toRdd
+    private val bq = rdd.sparkContext.broadcast(qVecs)
+    private val cosm = Array.fill(qIds.length)(mutable.HashMap.empty[Long, Long])
+    // asked pairs, answered or not (absent id, null embedding)
+    private val tried = Array.fill(qIds.length)(mutable.HashSet.empty[Long])
+    // id -> (shard, [base adjacency, upper adjacency])
+    private val node = mutable.HashMap.empty[Long, (Int, Array[Array[Long]])]
+
+    /** Score every pair of `want` not tried yet: one job, none if
+      * there is nothing new. */
+    private def score(want: Array[Iterable[Long]]): Unit = {
+      val ask = mutable.HashMap.empty[Long, mutable.ArrayBuilder.ofInt]
+      for (qi <- qIds.indices if qVecs(qi) != null; id <- want(qi)
+           if tried(qi).add(id))
+        ask.getOrElseUpdate(id, new mutable.ArrayBuilder.ofInt) += qi
+      if (ask.nonEmpty) {
+        val ids = ask.keys.toArray.sorted
+        val who = ids.map(ask(_).result())
+        val bf = rdd.sparkContext.broadcast((ids, who))
+        val bqv = bq
+        val got = rdd.mapPartitions(it =>
+          scoreRows(it, bf.value._1, bf.value._2, bqv.value)).collect()
+        bf.destroy()
+        for ((id, cs, shard, adj) <- got) {
+          node(id) = (shard, adj)
+          val qis = who(java.util.Arrays.binarySearch(ids, id))
+          for (j <- qis.indices) cosm(qis(j))(id) = cs(j)
+        }
+      }
+    }
+
+    /** `ids` of query `qi` that have a score, by (cosm desc, id asc). */
+    private def ranked(qi: Int, ids: Iterable[Long]): Array[Long] = {
+      val c = cosm(qi)
+      ids.iterator.filter(c.contains).toArray.sortBy(id => (-c(id), id))
+    }
+
+    /** The beam rule over one layer's adjacency (0 base, 1 upper),
+      * `rounds` times from `seeds`: per (query, shard) keep the top
+      * `beam` of cur ∪ N(cur) by (cosm desc, id asc), the query
+      * itself excluded. A seed equal to its query stays in the first
+      * beam only with `keepSelfSeed` (the sharded searches' entry-seed
+      * exemption). Returns each query's beams, all shards. */
+    def beams(seeds: Long => Seq[Long], layer: Int, beam: Int,
+        rounds: Int, keepSelfSeed: Boolean): Array[Array[Long]] = {
+      var cur = Array.empty[Array[Long]]
+      for (round <- 0 to math.max(rounds, 0)) {
+        val cands: Array[Iterable[Long]] = Array.tabulate(qIds.length) { qi =>
+          val c = mutable.HashSet.empty[Long]
+          if (round == 0) c ++= seeds(qIds(qi))
+          else cur(qi).foreach { id => c += id; c ++= node(id)._2(layer) }
+          if (round > 0 || !keepSelfSeed) c -= qIds(qi)
+          c
+        }
+        score(cands)
+        cur = Array.tabulate(qIds.length)(qi =>
+          ranked(qi, cands(qi)).groupBy(node(_)._1).valuesIterator
+            .flatMap(_.take(beam)).toArray)
+      }
+      cur
+    }
+
+    /** Each query's top `k` ids over its beams, self excluded. */
+    def topK(beams: Array[Array[Long]], k: Int): Map[Long, Seq[Long]] =
+      qIds.indices.map(qi =>
+        qIds(qi) -> ranked(qi, beams(qi).filter(_ != qIds(qi))).take(k).toSeq)
+        .toMap
+
+    def rows(beams: Array[Array[Long]], k: Int): Seq[Row] = {
+      val best = topK(beams, k)
+      qIds.indices.sortBy(qIds(_)).flatMap(qi => best(qIds(qi)).zipWithIndex
+        .map { case (id, r) => Row(qIds(qi), id, cosm(qi)(id), r + 1L) })
+    }
+
+    def close(): Unit = bq.destroy()
   }
 
   /** (query_id, neighbor_id, cos, rnk<=k), exact. */

@@ -307,12 +307,18 @@ object StreamQueries {
   /** Read a [[mergeCdcBatch]] chain back as the merged table: anchor
     * rows whose key no link touched, plus every link's rows — ONE
     * [[Relational.mergeUpsert]] pass over anchor ∪ links (one glob
-    * scan of the links, the [[readAnnChain]] shape). */
+    * scan of the links, the [[readAnnChain]] shape). With zero
+    * delivered batches there is no link, and the anchor is the table
+    * (key column first, as the merge emits it). */
   private[graft] def readCdcChain(s: org.apache.spark.sql.SparkSession,
-      storeBase: String, key: String): org.apache.spark.sql.DataFrame =
-    Relational.mergeUpsert(
-      s.read.parquet(s"$storeBase/v0"),
-      s.read.parquet(s"$storeBase/d*"), key)
+      storeBase: String, key: String): org.apache.spark.sql.DataFrame = {
+    val anchor = s.read.parquet(s"$storeBase/v0")
+    val links = new org.apache.hadoop.fs.Path(s"$storeBase/d*")
+    val fs = links.getFileSystem(s.sparkContext.hadoopConfiguration)
+    if (Option(fs.globStatus(links)).forall(_.isEmpty))
+      anchor.select(col(key) +: anchor.columns.filter(_ != key).map(col): _*)
+    else Relational.mergeUpsert(anchor, s.read.parquet(links.toString), key)
+  }
 
   /** s_merge — STREAMING CDC MERGE, the lambda-closing leg of
     * [[Relational.qMerge]] exactly as [[sMv]] closes it for
@@ -695,13 +701,13 @@ object StreamQueries {
       baseGraph: org.apache.spark.sql.DataFrame,
       baseUpper: org.apache.spark.sql.DataFrame, entry: Long,
       batch: org.apache.spark.sql.DataFrame, batchId: Long,
-      baseUnd: Option[org.apache.spark.sql.DataFrame] = None): Unit = {
-    // every batch searches the SAME base graph, so the caller passes
-    // the undirected adjacency materialized once (baseUnd) instead of
-    // paying one materialization per micro-batch
+      baseTable: Option[org.apache.spark.sql.DataFrame] = None): Unit = {
+    // every batch searches the SAME base index, so the caller passes
+    // its search table built once (baseTable) instead of paying one
+    // build per micro-batch
     Similarity.graphSearchTopKLayered(baseNodes, batch,
         baseGraph, baseUpper, "embedding", "vec_id", k = 12,
-        beam = 48, rounds = 6, upperSeed = entry, undPre = baseUnd)
+        beam = 48, rounds = 6, upperSeed = entry, table = baseTable)
       .select(col("query_id"), col("neighbor_id"))
       .write.mode("overwrite").parquet(s"$storeBase/d$batchId")
   }
@@ -765,16 +771,16 @@ object StreamQueries {
           .coalesce(1).write.mode("overwrite").parquet(s"$base/in/f$i")
       }
       val batches = new java.util.concurrent.atomic.AtomicLong(0L)
-      // one adjacency materialization serves all micro-batch inserts
-      val baseUnd = Similarity.undirectedOf(
-        baseGraph.select(col("query_id"), col("neighbor_id")))
+      // one search-table build serves all micro-batch inserts
+      val baseTable = Similarity.searchTable(baseNodes, "embedding",
+        "vec_id", baseGraph, Some(baseUpper))
       val q = s.readStream
         .schema(emb.schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$base/in/*")
         .writeStream
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
           insertAnnBatch(s"$base/store", baseNodes, baseGraph,
-            baseUpper, entry, batch, batchId, Some(baseUnd))
+            baseUpper, entry, batch, batchId, Some(baseTable))
           batches.incrementAndGet()
           ()
         }
@@ -830,11 +836,11 @@ object StreamQueries {
       entries: org.apache.spark.sql.DataFrame,
       cents: Array[Seq[Float]],
       batch: org.apache.spark.sql.DataFrame, batchId: Long,
-      baseUnd: Option[org.apache.spark.sql.DataFrame] = None): Unit = {
-    // shared one-shot adjacency across micro-batches, as insertAnnBatch
+      baseTable: Option[org.apache.spark.sql.DataFrame] = None): Unit = {
+    // one search table shared across micro-batches, as insertAnnBatch
     Similarity.graphSearchTopKAssigned(baseNodes, batch, baseGraph,
         entries, cents, "embedding", "vec_id", k = 12,
-        beamPerShard = 24, rounds = 6, undPre = baseUnd)
+        beamPerShard = 24, rounds = 6, table = baseTable)
       .select(col("query_id"), col("neighbor_id"))
       .write.mode("overwrite").parquet(s"$storeBase/d$batchId")
   }
@@ -890,16 +896,17 @@ object StreamQueries {
           .coalesce(1).write.mode("overwrite").parquet(s"$base/in/f$i")
       }
       val batches = new java.util.concurrent.atomic.AtomicLong(0L)
-      // one adjacency materialization serves all micro-batch inserts
-      val baseUnd = Similarity.undirectedOf(
-        baseGraph.select(col("query_id"), col("neighbor_id")))
+      // one search-table build serves all micro-batch inserts
+      val baseTable = Similarity.searchTable(baseNodes, "embedding",
+        "vec_id", baseGraph,
+        shard = Similarity.cellColumn(baseNodes, "embedding", cents))
       val q = s.readStream
         .schema(emb.schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$base/in/*")
         .writeStream
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
           insertAnnBatchRouted(s"$base/store", baseNodes, baseGraph,
-            entries, cents, batch, batchId, Some(baseUnd))
+            entries, cents, batch, batchId, Some(baseTable))
           batches.incrementAndGet()
           ()
         }

@@ -125,6 +125,15 @@ class RelationalOpsSpec extends SparkSpec {
     assert(got.head._3 === k)
   }
 
+  test("q_kcore on an empty edge set returns no core") {
+    // no lineitem rows: no co-purchase pairs, so no node and no edge
+    val dir = java.nio.file.Files.createTempDirectory("graft_kcore_empty").toString
+    for (t <- Seq("lineitem", "orders"))
+      Tables.load(spark, sf, t).limit(0).write.parquet(s"$dir/$t.parquet")
+    try assert(Graph.qKcore.fn(spark, dir).collect().isEmpty)
+    finally deleteRecursively(new java.io.File(dir))
+  }
+
   test("q_linkpred: non-adjacent, score-bounded, descending top-20") {
     val rows = Graph.qLinkpred.fn(spark, sf).collect()
     assert(rows.length <= 20 && rows.nonEmpty)

@@ -662,6 +662,158 @@ class SimilaritySpec extends SparkSpec {
       s"upper-layer routing must reach node 11's true neighbors, got ${layered.toSeq}")
   }
 
+  /** The beam rule restated over plain collections: per (query, shard)
+    * keep the top `beam` of cur ∪ N(cur) by (cosm desc, id asc) over
+    * the undirected graph, ids without a vector dropped, the query
+    * excluded (its seed kept for the first beam with `keepSelf`);
+    * the answer is the top `k` of the final beams. */
+  private def referenceBeam(vecs: Map[Long, Array[Float]],
+      edges: Seq[(Long, Long)], shardOf: Long => Long, q: Long,
+      seeds: Seq[Long], beam: Int, rounds: Int, k: Int,
+      keepSelf: Boolean): Seq[(Long, Long, Long, Long)] = {
+    val adj = edges.flatMap { case (a, b) => Seq(a -> b, b -> a) }
+      .groupMap(_._1)(_._2)
+    def cosm(id: Long): Long = {
+      val (a, b) = (vecs(q), vecs(id))
+      val dp = a.indices.map(i => a(i).toDouble * b(i)).sum
+      val d = math.sqrt(a.map(x => x.toDouble * x).sum) *
+        math.sqrt(b.map(x => x.toDouble * x).sum)
+      BigDecimal(if (d == 0) 0.0 else dp / d * 10000)
+        .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
+    }
+    def order(ids: Iterable[Long]): Seq[Long] =
+      ids.toSeq.sortBy(id => (-cosm(id), id))
+    def top(c: Set[Long]): Set[Long] = c.filter(vecs.contains)
+      .groupBy(shardOf).values.flatMap(s => order(s).take(beam)).toSet
+    var cur = top(seeds.toSet.filter(id => keepSelf || id != q))
+    for (_ <- 1 to rounds)
+      cur = top(cur ++ cur.flatMap(adj.getOrElse(_, Nil)) - q)
+    order(cur - q).take(k).zipWithIndex
+      .map { case (id, r) => (q, id, cosm(id), r + 1L) }
+  }
+
+  test("beam loop equals the reference rule: unsharded and per-shard, missing ids, self seeds, ties") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(17)
+    // ids 40-49 copy the vectors of 0-9: exact cosm ties for every query
+    val base = (0 until 40).map(_ => Array.fill(4)(rnd.nextGaussian().toFloat))
+    val vecs = ((0 until 40).map(i => i.toLong -> base(i)) ++
+      (40 until 50).map(i => i.toLong -> base(i - 40))).toMap
+    val nodes = vecs.toSeq.toDF("vec_id", "embedding")
+    // a sparse random graph, plus edges into ids 900+ absent from nodes
+    val edges = (0L until 50L).flatMap(a =>
+        Seq.fill(2)(a -> rnd.nextInt(50).toLong).filter(e => e._1 != e._2)) ++
+      Seq(3L -> 900L, 901L -> 7L, 12L -> 902L)
+    val graph = edges.toDF("query_id", "neighbor_id")
+    val qIds = Seq(0L, 3L, 7L, 12L, 41L)
+    val queries = nodes.filter(col("vec_id").isin(qIds: _*))
+    // every query is among its own seeds; 903 is absent from nodes
+    val seeds = qIds.map(q => q -> Seq(q, (q + 20) % 50, 903L)).toMap
+    val seedCands = seeds.toSeq
+      .flatMap { case (q, s) => s.map(q -> _) }.toDF("query_id", "cand")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+    val flat = rows(Similarity.graphSearchTopKFrom(nodes, queries, graph,
+      "embedding", "vec_id", seedCands, k = 4, beam = 3, rounds = 3))
+    val flatRef = qIds.flatMap(q => referenceBeam(vecs, edges, _ => 0L, q,
+      seeds(q), beam = 3, rounds = 3, k = 4, keepSelf = false))
+    assert(flat === flatRef)
+    // per-shard beams with the entry-seed exemption: entries 3 and 8
+    // (pmod 2 shards) — query 3 coincides with its shard's entry
+    val entries = Seq((1, 3L), (0, 8L)).toDF("shard", "entry_id")
+    val sharded = rows(Similarity.graphSearchTopKSharded(nodes, queries,
+      graph, entries, "embedding", "vec_id", shards = 2, k = 5,
+      beamPerShard = 2, rounds = 2))
+    val shardedRef = qIds.flatMap(q => referenceBeam(vecs, edges,
+      id => Math.floorMod(id, 2L), q, Seq(3L, 8L), beam = 2, rounds = 2,
+      k = 5, keepSelf = true))
+    assert(sharded === shardedRef)
+    // the exemption is observable: query 3 expanded its own neighbours
+    assert(shardedRef.exists(_._1 == 3L))
+  }
+
+  test("layered search runs one job per round: bounded and repeatable job count") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.graft.Bridge
+    val nodes = emb.localCheckpoint(true)
+    val n = nodes.count()
+    val (g, u, e) = Similarity.buildGraphIndexFull(nodes, "embedding",
+      "vec_id", n, k = 12, rounds = 2)
+    val (graph, upper) = (g.localCheckpoint(true), u.localCheckpoint(true))
+    val q = nodes.filter(col("vec_id") < 10)
+    val (rounds, upperRounds) = (6, 1)
+    def jobs(): (Int, Seq[org.apache.spark.sql.Row]) = {
+      val c = new java.util.concurrent.atomic.AtomicInteger
+      val l = new SparkListener {
+        override def onJobStart(js: SparkListenerJobStart): Unit =
+          { c.incrementAndGet(); () }
+      }
+      Bridge.drainListenerBus(spark)
+      spark.sparkContext.addSparkListener(l)
+      val out = try {
+        val r = Similarity.graphSearchTopKLayered(nodes, q, graph, upper,
+          "embedding", "vec_id", k = 5, beam = 48, rounds = rounds,
+          upperSeed = e, upperRounds = upperRounds).collect().toSeq
+        Bridge.drainListenerBus(spark); r
+      } finally spark.sparkContext.removeSparkListener(l)
+      (c.get, out)
+    }
+    val (first, a) = jobs()
+    val (second, b) = jobs()
+    // set-up: the query collect and the search-table build; then one
+    // job per round: 1 + upperRounds upper, at most `rounds` base (the
+    // base seeds are upper survivors, already scored)
+    val setup = 4
+    assert(first <= rounds + upperRounds + 1 + setup,
+      s"$first jobs for one layered search")
+    assert(first === second, "job count must repeat exactly")
+    assert(a === b && a.length === 50)
+  }
+
+  test("degenerate search inputs: empty queries, no edges, absent seeds, zero and null vectors") {
+    import spark.implicits._
+    val v = Seq(
+      (1L, Some(Array(1f, 0f))), (2L, Some(Array(0.8f, 0.6f))),
+      (3L, Some(Array(0f, 1f))), (4L, Some(Array(0f, 0f))),
+      (5L, None), (6L, Some(Array(-1f, 0f))))
+    val nodes = v.toDF("vec_id", "embedding")
+    val graph = Seq((1L, 2L), (2L, 3L), (3L, 5L), (5L, 6L), (1L, 4L))
+      .toDF("query_id", "neighbor_id")
+    val noEdges = graph.limit(0)
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val q1 = nodes.filter(col("vec_id") === 1L)
+    // empty query set: no rows, no throw (layered, sharded, flat)
+    assert(ids(Similarity.graphSearchTopKLayered(nodes, q1.limit(0),
+      graph, graph, "embedding", "vec_id", upperSeed = 2L)).isEmpty)
+    assert(ids(Similarity.graphSearchTopKSharded(nodes, q1.limit(0), graph,
+      Seq((0, 2L)).toDF("shard", "entry_id"), "embedding", "vec_id",
+      shards = 2)).isEmpty)
+    // a graph with no edges: the answer is the ranked seeds
+    assert(ids(Similarity.graphSearchTopK(nodes, q1, noEdges, "embedding",
+      "vec_id", k = 3, seeds = Seq(3L, 2L, 6L))) ===
+      Seq((1L, 2L), (1L, 3L), (1L, 6L)))
+    // seeds absent from nodes: nothing to start from, no rows
+    assert(ids(Similarity.graphSearchTopK(nodes, q1, graph, "embedding",
+      "vec_id", seeds = Seq(98L, 99L))).isEmpty)
+    // the zero vector scores cosm 0 as a candidate and as a query
+    val all = Similarity.graphSearchTopK(nodes, nodes, graph, "embedding",
+      "vec_id", k = 5, rounds = 3, seeds = Seq(1L, 3L)).collect()
+    assert(all.filter(_.getLong(1) == 4L).forall(_.getLong(2) == 0L))
+    assert(all.filter(_.getLong(0) == 4L).map(_.getLong(2)).toSet === Set(0L))
+    // a null embedding is skipped: never returned though seeded and
+    // linked, and a query with a null embedding returns no rows
+    assert(!all.exists(_.getLong(1) == 5L))
+    assert(!all.exists(_.getLong(0) == 5L))
+    assert(ids(Similarity.graphSearchTopK(nodes, q1, graph, "embedding",
+      "vec_id", seeds = Seq(5L))).isEmpty)
+    // ... and is never in a beam, so nothing is reached through it:
+    // 6 hangs off 5 only (and 4 off the query itself)
+    assert(ids(Similarity.graphSearchTopK(nodes, q1, graph, "embedding",
+      "vec_id", k = 5, rounds = 4, seeds = Seq(3L))).map(_._2).toSet ===
+      Set(2L, 3L))
+  }
+
   test("graph insert: every delta node links M base neighbors; merged search reaches inserted nodes") {
     import graft.operators.Pipeline
     val edges = Pipeline.dAnnGraphInsert.fn(spark, sf).collect()

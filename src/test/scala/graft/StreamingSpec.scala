@@ -44,6 +44,20 @@ class StreamingSpec extends SparkSpec {
       "chained CDC merge must equal the one-shot batch merge")
   }
 
+  test("CDC chain with zero delivered batches reads back the anchor") {
+    import graft.operators.{Relational, StreamQueries}
+    val store = java.nio.file.Files.createTempDirectory("graft_smerge_empty").toString
+    val base = graft.Tables.load(spark, sf, "orders")
+    base.write.mode("overwrite").parquet(s"$store/v0")
+    val merged = StreamQueries.readCdcChain(spark, store, "o_orderkey")
+    // the same columns, in the same order, as a merge with links emits
+    val withLinks = Relational.mergeUpsert(base, base.limit(0), "o_orderkey")
+    assert(merged.columns.toSeq === withLinks.columns.toSeq)
+    assert(merged.orderBy(col("o_orderkey")).collect().toSeq ===
+      withLinks.orderBy(col("o_orderkey")).collect().toSeq)
+    deleteRecursively(new java.io.File(store))
+  }
+
   test("streaming ANN ingest: redelivered batch is idempotent; chained edges equal the one-shot insert") {
     import graft.operators.{Pipeline, Similarity, StreamQueries}
     val store = java.nio.file.Files.createTempDirectory("graft_sann_spec").toString
