@@ -94,33 +94,8 @@ object Graph {
     // caller benefits.
     val dirs = e0.select(col("src"), col("dst"))
       .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
-    // out-degree tallied over BOTH roles so a dst-only (dangling)
-    // node surfaces as outdeg 0 and trips the in-plan guard, instead
-    // of vanishing in an inner join; when the contract holds the
-    // node set and every outdeg are identical to a src-only tally
-    val deg = dirs
-      .select(col("src").as("node"), lit(1L).as("is_src"))
-      .union(dirs.select(col("dst").as("node"), lit(0L).as("is_src")))
-      .groupBy(col("node"))
-      .agg(sum(col("is_src")).as("outdeg"))
-      // the guard rides the NODE column (not outdeg): every consumer
-      // of deg reads the node id, so column pruning can never drop the
-      // check the way it would an unused guarded outdeg projection
-      .select(
-        when(col("outdeg") > 0, col("node"))
-          .otherwise(raise_error(concat(
-            lit("graft: pagerank dangling node (appears as dst but has " +
-              "no out-edges; feed both directions or drop it): "),
-            col("node").cast("string")))).as("src"),
-        col("outdeg"))
-    // deg is node-sized but derives from a checkpointed RDD (no
-    // stats), so the planner would SMJ here — shuffling the edge list
-    // by src TWICE (join + repartition). Broadcast it explicitly:
-    // the repartition below is then the single edge shuffle.
-    val edges = dirs.join(broadcast(deg), "src")
-      .select(col("src"), col("dst"), col("outdeg"))
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val deg = outDegrees(dirs)
+    val edges = degreeEdges(dirs, deg).persist(StorageLevel.MEMORY_AND_DISK)
     var ranks = deg.select(col("src").as("node"), lit(Scale).as("rank_fp"))
     var i = 0
     var converged = false
@@ -152,6 +127,37 @@ object Graph {
     edges.unpersist()
     out
   }
+
+  /** Pagerank's (src, outdeg) table: out-degree tallied over BOTH
+    * roles so a dst-only (dangling) node surfaces as outdeg 0 and
+    * trips the in-plan guard, instead of vanishing in an inner join;
+    * when the contract holds the node set and every outdeg are
+    * identical to a src-only tally. */
+  private[graft] def outDegrees(dirs: DataFrame): DataFrame =
+    dirs
+      .select(col("src").as("node"), lit(1L).as("is_src"))
+      .union(dirs.select(col("dst").as("node"), lit(0L).as("is_src")))
+      .groupBy(col("node"))
+      .agg(sum(col("is_src")).as("outdeg"))
+      // the guard rides the NODE column (not outdeg): every consumer
+      // of deg reads the node id, so column pruning can never drop the
+      // check the way it would an unused guarded outdeg projection
+      .select(
+        when(col("outdeg") > 0, col("node"))
+          .otherwise(raise_error(concat(
+            lit("graft: pagerank dangling node (appears as dst but has " +
+              "no out-edges; feed both directions or drop it): "),
+            col("node").cast("string")))).as("src"),
+        col("outdeg"))
+
+  /** The edge table every pagerank iteration joins: (src, dst,
+    * outdeg), hash-partitioned by src. The repartition is the one
+    * edge shuffle; the node-sized degree table is shuffled to the
+    * same partitioning and hash-joined there — co-partitioned, never
+    * broadcast, so no node-sized table passes through the driver. */
+  private[graft] def degreeEdges(dirs: DataFrame, deg: DataFrame): DataFrame =
+    dirs.repartition(col("src")).join(deg.hint("shuffle_hash"), "src")
+      .select(col("src"), col("dst"), col("outdeg"))
 
   val qPagerank: QueryDef = QueryDef(
     fn = (s, dir) => {

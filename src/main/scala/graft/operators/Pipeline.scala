@@ -2481,19 +2481,9 @@ object Pipeline {
   val dKnnDescent: QueryDef = QueryDef(
     fn = (s, dir) => {
       val nodes = Tables.load(s, dir, "embeddings").filter(col("vec_id") < 600)
-      // Per-round lineage cut (buildGraphIndexFull's own discipline —
-      // each round's output feeds the next round's adjacency TWICE,
-      // carry + 2-hop self-join, so an uncut tree multiplies per
-      // round: the uncut plan here measured 402 Exchange nodes /
-      // 7,636 plan lines; cut it is 2 bounded plans). Output rows
-      // unchanged — the cut is execution-only.
       val seed = Similarity.blockedTopK(nodes, "embedding", "vec_id",
         k = 5, blocks = 4)
-        .select(col("query_id"), col("neighbor_id"))
-        .localCheckpoint(true)
       val g1 = Similarity.nnDescentRound(nodes, seed, "embedding", "vec_id", k = 5)
-        .select(col("query_id"), col("neighbor_id"))
-        .localCheckpoint(true)
       Similarity.nnDescentRound(nodes, g1, "embedding", "vec_id", k = 5)
         .select(col("query_id"), col("neighbor_id"),
           round(col("cos") * 10000).cast("long").as("cosm"), col("rnk"))
@@ -2520,16 +2510,10 @@ object Pipeline {
   val dKnnDescentRecall: QueryDef = QueryDef(
     fn = (s, dir) => {
       val nodes = Tables.load(s, dir, "embeddings").filter(col("vec_id") < 600)
-      // Same per-round lineage cuts as dKnnDescent, doubly needed
-      // here: every stage is consumed TWICE (next round's adjacency +
-      // its own recall intersect), so the uncut tree multiplies per
-      // round AND per leg. rnk is kept — top3 reads it.
       val seed = Similarity.blockedTopK(nodes, "embedding", "vec_id",
-        k = 5, blocks = 4).localCheckpoint(true)
+        k = 5, blocks = 4)
       val g1 = Similarity.nnDescentRound(nodes, seed, "embedding", "vec_id", k = 5)
-        .localCheckpoint(true)
       val g2 = Similarity.nnDescentRound(nodes, g1, "embedding", "vec_id", k = 5)
-        .localCheckpoint(true)
       def top3(g: DataFrame) = g.filter(col("rnk") <= 3)
         .select(col("query_id"), col("neighbor_id"))
       val brute = Similarity.bruteTopK(nodes, nodes, "embedding", "vec_id", k = 3)

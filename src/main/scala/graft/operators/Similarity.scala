@@ -6,12 +6,12 @@ import scala.jdk.CollectionConverters._
 import graft.plans.{BroadcastCentroids, BroadcastCodebooks, BroadcastSq8, CentroidCosines, CentroidRef, CosineSim, HyperplaneSig, NearestCentroid, PQCosine, PQEncode64, SQ8Cosine, SQ8Encode, VectorOps}
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -31,24 +31,149 @@ object Similarity {
   private def sig(c: Column, bits: Int, seed: Long): Column =
     Bridge.column(HyperplaneSig(Bridge.expression(c), bits, seed))
 
-  /** The blocked-pairs scored join every blocked kNN seed is built
-    * from: nodes self-joined on a block key, scored by rounded
-    * cosine, self-pairs dropped. `blk` is evaluated against the
-    * `nodes` frame's own columns (the argument is `col(idCol)` for
-    * convenience — a block key may also reference other columns of
-    * `nodes`, e.g. a precomputed shard assignment). Shared by
-    * [[blockedTopK]], [[hashBlockedTopK]], the sharded and routed
-    * graph builds — one join body to keep in sync, not four. */
-  private def blockScored(nodes: DataFrame, vecCol: String,
-      idCol: String, blk: Column => Column): DataFrame = {
-    val q = nodes.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-      blk(col(idCol)).as("blk"))
-    val c = nodes.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-      blk(col(idCol)).as("blk"))
-    q.join(c, Seq("blk")).filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(cosine(col("qv"), col("cv")), 4).as("cos"))
+  /** THE pair-scoring kernel of every graph-index build (NN-descent's
+    * local join, Dong et al. 2011). `members` is (gids, id, vec), the
+    * node `id` belonging to every group in `gids`: each group is
+    * streamed inside one task, every pair of distinct ids in it is
+    * scored ONCE ([[LocalJoin.cos4]], bit for bit the SQL
+    * `round(graft_cosine(a, b), 4)`), and the score goes to BOTH ends'
+    * bounded top-k by (cos desc, id asc), deduplicated by neighbour —
+    * a pair several groups share counts once. Returns (query_id,
+    * neighbor_id, cos, rnk ≤ k), long ids. Two UnsafeRow exchanges:
+    * each member once per task that scores one of its groups, then at
+    * most k rows per (task, node) — never a pair-sized relation, and
+    * no vector reaches the driver. A null gid or id takes no part; a
+    * null embedding scores a null cos, ranked after every non-null one
+    * (SQL `desc`: nulls last). The exchanges run when this is called. */
+  private[operators] def groupTopK(members: DataFrame, k: Int): DataFrame = {
+    val spark = members.sparkSession
+    val tasks = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    def task(g: Column): Column = pmod(hash(g), lit(tasks))
+    // a member row per task, keyed by one of that task's groups (hash
+    // partitioning by it IS `task`), fans out to its groups after the
+    // exchange: a vector crosses it once per task, not once per group
+    val grouped = members.filter(col("id").isNotNull)
+      .select(filter(col("gids").cast("array<bigint>"), _.isNotNull).as("gids"),
+        col("id").cast("long").as("id"), col("vec"))
+      .select(explode(array_distinct(transform(col("gids"), task(_)))).as("t"),
+        col("gids"), col("id"), col("vec"))
+      .select(filter(col("gids"), task(_) === col("t")).as("gids"),
+        col("id"), col("vec"))
+      .repartition(tasks, array_min(col("gids")))
+      .select(explode(col("gids")).as("gid"), col("id"), col("vec"))
+      .sortWithinPartitions(col("gid"), col("id"))
+    val partial = Bridge.frame(spark, grouped.queryExecution.toRdd
+      .mapPartitions(LocalJoin.scoreGroups(_, k)), LocalJoin.PairSchema)
+    Bridge.frame(spark, partial.repartition(col("query_id"))
+      .queryExecution.toRdd.mapPartitions(LocalJoin.mergeLists(_, k)),
+      LocalJoin.TopKSchema)
   }
+
+  /** The executor side of [[groupTopK]]. */
+  private[operators] object LocalJoin {
+    val PairSchema: StructType = StructType(Seq(
+      StructField("query_id", LongType, nullable = false),
+      StructField("neighbor_id", LongType, nullable = false),
+      StructField("cos", DoubleType)))
+    val TopKSchema: StructType =
+      PairSchema.add(StructField("rnk", LongType, nullable = false))
+
+    /** A null cos's sort key: below every rounded cosine (SQL `desc`
+      * puts nulls last, and NaN first as Double.compare does). */
+    private val NullCos = Double.NegativeInfinity
+
+    /** round(graft_cosine(a, b), 4) bit for bit: Spark's ROUND on a
+      * double is BigDecimal.valueOf(x).setScale(4, HALF_UP). */
+    def cos4(a: ArrayData, b: ArrayData): Double =
+      if (a == null || b == null) NullCos
+      else {
+        val c = VectorOps.cosine(a, b)
+        if (c.isNaN || c.isInfinite) c
+        else java.math.BigDecimal.valueOf(c)
+          .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue
+      }
+
+    /** One node's bounded top-k by (cos desc, id asc); an offer equal
+      * to a kept entry (same id, same cos) is a duplicate and dropped. */
+    final class TopK(k: Int) {
+      val cos = new Array[Double](k)
+      val ids = new Array[Long](k)
+      var size = 0
+      def offer(c: Double, id: Long): Unit = {
+        var p = size
+        while (p > 0 && {
+          val o = java.lang.Double.compare(c, cos(p - 1))
+          o > 0 || (o == 0 && id < ids(p - 1))
+        }) p -= 1
+        if (p < k && !(p > 0 && ids(p - 1) == id && cos(p - 1) == c)) {
+          val moved = math.min(size, k - 1) - p
+          System.arraycopy(cos, p, cos, p + 1, moved)
+          System.arraycopy(ids, p, ids, p + 1, moved)
+          cos(p) = c
+          ids(p) = id
+          size = math.min(size + 1, k)
+        }
+      }
+    }
+
+    /** Each list's entries as (query_id, neighbor_id, cos[, rnk]). */
+    private def emit(lists: mutable.LongMap[TopK], ranked: Boolean): Iterator[InternalRow] =
+      lists.iterator.flatMap { case (q, t) =>
+        Iterator.range(0, t.size).map { i =>
+          val c = if (t.cos(i) == NullCos) null else t.cos(i)
+          new GenericInternalRow(if (ranked) Array[Any](q, t.ids(i), c, i + 1L)
+            else Array[Any](q, t.ids(i), c))
+        }
+      }
+
+    /** Stream (gid, id, vec) rows sorted by (gid, id): score each
+      * group's pairs of distinct ids into per-node lists, and emit the
+      * task's partial lists. */
+    def scoreGroups(in: Iterator[InternalRow], k: Int): Iterator[InternalRow] = {
+      val lists = mutable.LongMap.empty[TopK]
+      val ids = mutable.ArrayBuffer.empty[Long]
+      val vecs = mutable.ArrayBuffer.empty[ArrayData]
+      def flush(): Unit = {
+        if (ids.length > 1) {
+          val tops = ids.map(lists.getOrElseUpdate(_, new TopK(k)))
+          for (i <- ids.indices; j <- i + 1 until ids.length) {
+            val c = cos4(vecs(i), vecs(j))
+            tops(i).offer(c, ids(j))
+            tops(j).offer(c, ids(i))
+          }
+        }
+        ids.clear(); vecs.clear()
+      }
+      var gid = 0L
+      in.foreach { r =>
+        if (ids.nonEmpty && r.getLong(0) != gid) flush()
+        gid = r.getLong(0)
+        if (ids.isEmpty || ids.last != r.getLong(1)) { // duplicates are adjacent
+          ids += r.getLong(1)
+          vecs += (if (r.isNullAt(2)) null else r.getArray(2).copy())
+        }
+      }
+      flush()
+      emit(lists, ranked = false)
+    }
+
+    /** Merge partial lists into each node's final ranked top-k. */
+    def mergeLists(in: Iterator[InternalRow], k: Int): Iterator[InternalRow] = {
+      val lists = mutable.LongMap.empty[TopK]
+      in.foreach(r => lists.getOrElseUpdate(r.getLong(0), new TopK(k))
+        .offer(if (r.isNullAt(2)) NullCos else r.getDouble(2), r.getLong(1)))
+      emit(lists, ranked = true)
+    }
+  }
+
+  /** Directed top-k among nodes that share a block key in ANY of
+    * `blockings` (columns over `nodes`): one [[groupTopK]] group per
+    * (blocking, key). */
+  private def blockedGroups(nodes: DataFrame, vecCol: String,
+      idCol: String, k: Int, blockings: Seq[Column]): DataFrame =
+    groupTopK(nodes.select(array(blockings.zipWithIndex.map { case (b, i) =>
+      b.cast("long") * blockings.length + i }: _*).as("gids"),
+      col(idCol).as("id"), col(vecCol).as("vec")), k)
 
   /** Mutual k-NN graph over a node set: (a, b, cosm) with a < b,
     * kept only when each node is in the other's top-k by rounded
@@ -76,159 +201,120 @@ object Similarity {
 
   /** Blocked directed kNN seed from TWO cross-cutting blockings —
     * per-node top-k by rounded cosine among nodes sharing EITHER
-    * block key (id mod `blocks`, and id div `blocks` mod `blocks`) —
-    * the deliberately-approximate starting graph NN-descent refines.
-    * The id-arithmetic blockings are the SQL-replayable stand-in for
-    * the bucketed shortlists a production build seeds from (LSH
-    * tables, IVF lists).
-    *
-    * Two blockings is load-bearing, not decoration: a SINGLE blocking
-    * produces a graph whose every edge stays inside one block, so
-    * neighbors-of-neighbors never leave the block either and
-    * NN-descent is at a (bad) fixed point before it starts — measured
-    * on the test corpus: one-blocking seed recall@3 = 24%, unchanged
-    * after THREE descent rounds. Cross-cutting blockings are exactly
-    * what multi-table LSH gives a production seed. Each blocking is
-    * one equi-join on its block key; the union dedupes pairs caught
-    * by both. */
+    * block key (id mod `blocks`, and id div `blocks` mod `blocks`),
+    * one [[groupTopK]] group per (blocking, key): the deliberately
+    * approximate, SQL-replayable starting graph NN-descent refines.
+    * Two blockings is load-bearing: under ONE, every edge stays in
+    * its block, neighbors-of-neighbors never leave it, and NN-descent
+    * starts at a (bad) fixed point (measured: one-blocking seed
+    * recall@3 = 24%, unchanged after three rounds). Cross-cutting
+    * blockings are what multi-table LSH gives a production seed. */
   def blockedTopK(nodes: DataFrame, vecCol: String, idCol: String,
-      k: Int = 5, blocks: Int = 4): DataFrame = {
-    def scored(blk: Column => Column): DataFrame =
-      blockScored(nodes, vecCol, idCol, blk)
-    val both = scored(id => pmod(id, lit(blocks)))
-      .union(scored(id => pmod(expr(s"`$idCol` div $blocks"), lit(blocks))))
-      .distinct()
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    both.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
-  }
+      k: Int = 5, blocks: Int = 4): DataFrame =
+    blockedGroups(nodes, vecCol, idCol, k, Seq(pmod(col(idCol), lit(blocks)),
+      pmod(expr(s"`$idCol` div $blocks"), lit(blocks))))
 
   /** One NN-descent refinement round (Dong et al. 2011, WWW — the
     * algorithm behind pynndescent/HNSW-adjacent graph builds): a
-    * node's improved neighbor candidates are its current neighbors
-    * and its NEIGHBORS' NEIGHBORS (over the UNDIRECTED current graph
-    * — reverse edges are half the signal), exact rounded cosines are
-    * computed for candidates ONLY, and each node keeps its new top-k.
+    * node's candidates are its neighbors and its NEIGHBORS' NEIGHBORS
+    * over the UNDIRECTED current graph (reverse edges are half the
+    * signal); each node keeps its top-k of them by rounded cosine.
     * `seed` is any directed (query_id, neighbor_id) graph, e.g.
-    * [[blockedTopK]].
+    * [[blockedTopK]]; an edge may name an id absent from `nodes` (it
+    * still links its neighbours to each other); self-loops are
+    * ignored.
     *
-    * Scale shape: with bounded degree k the undirected adjacency has
-    * ≤ 2k rows per node and the 2-hop join fans out to ≤ (2k)²
-    * candidates per node, so the whole round is O(n·k²) cosines —
-    * never a cross join, never corpus². Each further round is this
-    * same function applied to its own output: convergence in a few
-    * rounds is the paper's result, and each round is two equi-joins
-    * + one window. */
+    * The round is the paper's LOCAL JOIN: one [[groupTopK]] group per
+    * node w, its closed neighbourhood w ∪ N(w). A pair shares a group
+    * exactly when one is the other's neighbour or both neighbour some
+    * w, so the candidates are unchanged, and no candidate-pair
+    * relation is built: one aggregation of the edge list by node names
+    * each node's groups, and its vector crosses the exchange once per
+    * task that scores one of them — O(n·min(tasks, 2k+1)·dim) shuffle
+    * and O(n·k²) cosines per round. */
   def nnDescentRound(nodes: DataFrame, seed: DataFrame,
       vecCol: String, idCol: String, k: Int = 3): DataFrame = {
-    val und = seed.select(col("query_id").as("v"), col("neighbor_id").as("u"))
-      .union(seed.select(col("neighbor_id").as("v"), col("query_id").as("u")))
-      .distinct()
-    val twoHop = und.as("e1")
-      .join(und.select(col("v").as("w"), col("u").as("u2")).as("e2"),
-        col("e1.u") === col("e2.w"))
-      .select(col("e1.v").as("v"), col("e2.u2").as("u"))
-      .filter(col("v") =!= col("u"))
-    val cand = und.union(twoHop).distinct()
-    val vecs = nodes.select(col(idCol).as("id"), col(vecCol).as("vec"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    cand
-      .join(vecs.select(col("id").as("v"), col("vec").as("vv")), Seq("v"))
-      .join(vecs.select(col("id").as("u"), col("vec").as("uv")), Seq("u"))
-      .select(col("v").as("query_id"), col("u").as("neighbor_id"),
-        round(cosine(col("vv"), col("uv")), 4).as("cos"))
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
+    val e = seed.select(col("query_id").cast("long").as("v"),
+      col("neighbor_id").cast("long").as("u"))
+    // u's groups besides its own: its undirected neighbours
+    val adj = e.union(e.select(col("u").as("v"), col("v").as("u")))
+      .groupBy(col("u")).agg(collect_set(col("v")).as("nbrs"))
+    groupTopK(nodes.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
+      .join(adj.hint("shuffle_hash"), col("id") === col("u"), "left")
+      .select(concat(array(col("id")), coalesce(col("nbrs"),
+        typedLit(Array.empty[Long]))).as("gids"), col("id"), col("vec")), k)
   }
 
-  /** [[blockedTopK]]'s two cross-cutting blockings with SEEDED-HASH
-    * block keys — the structure-robust seed the production builds
-    * use. The id-ARITHMETIC blockings (id mod B, id div B mod B) are
-    * only uniform when ids are dense and unstructured; on a
-    * STRUCTURED id space they can collapse catastrophically.
-    * Measured: the 100× scale replica offsets ids by i·10⁸, and for
-    * the insert leg's base corpus (n=160k ⇒ B=1250, which divides
-    * 10⁸ exactly) `id div 1250 mod 1250` mapped EVERY node to two
-    * blocks — a 6.4-billion-pair block whose single hash-aggregate
-    * task span-sorted for two hours. `xxhash64(seed, id) mod B`
-    * is uniform for ANY id structure; two seeds give the two
-    * cross-cutting views (a single blocking is a NN-descent fixed
-    * point — see [[blockedTopK]]). Deterministic: xxhash64 is a pure
-    * function of (seed, id). Not SQL-replayable — the capped demo
-    * family keeps [[blockedTopK]] for the oracle-replayed path. */
+  /** [[blockedTopK]] with SEEDED-HASH block keys — xxhash64(seed, id)
+    * mod `blocks` for seeds 1 and 2 — the seed the production builds
+    * use. Id arithmetic is only uniform on dense, unstructured ids:
+    * the 100× replica offsets ids by i·10⁸, and at n=160k (B=1250,
+    * which divides 10⁸) `id div B mod B` put EVERY node in two blocks,
+    * a 6.4-billion-pair block. A seeded hash is uniform for any id
+    * structure, and deterministic. Not SQL-replayable: the capped
+    * demo family keeps [[blockedTopK]]. */
   private[operators] def hashBlockedTopK(nodes: DataFrame,
-      vecCol: String, idCol: String, k: Int, blocks: Int): DataFrame = {
-    def scored(seed: Int): DataFrame =
-      blockScored(nodes, vecCol, idCol,
-        id => pmod(xxhash64(lit(seed), id), lit(blocks)))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored(1).union(scored(2)).distinct()
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
-  }
+      vecCol: String, idCol: String, k: Int, blocks: Int): DataFrame =
+    blockedGroups(nodes, vecCol, idCol, k, Seq(1, 2).map(seed =>
+      pmod(xxhash64(lit(seed), col(idCol)), lit(blocks))))
 
-  /** FULL-CORPUS graph-ANN index build — the production composition
-    * the bounded demo keys (d_ann_graph*) stand in for, with every
-    * stage linear in the corpus:
-    *  - seed: [[hashBlockedTopK]] whose block COUNT scales with n
-    *    (fixed ≈`blockRows` rows per block), so seed pair mass is
-    *    O(n·blockRows) — never n² — and whose seeded-hash block keys
-    *    stay uniform on structured id spaces (the id-arithmetic
-    *    blocking collapsed at 100×; see [[hashBlockedTopK]]);
-    *  - refine: `rounds` [[nnDescentRound]]s, O(n·k²) cosines each,
-    *    each round localCheckpointed (its output feeds the next
-    *    round's adjacency TWICE — carry + 2-hop self-join — the
-    *    established dual-consumer cut);
+  /** FULL-CORPUS graph-ANN index build, every stage linear in the
+    * corpus:
+    *  - seed: [[hashBlockedTopK]] with ≈`blockRows` rows per block,
+    *    so seed pair mass is O(n·blockRows), never n²;
+    *  - refine: `rounds` [[nnDescentRound]]s, O(n·k²) cosines each
+    *    ([[refine]]);
     *  - upper layer: a uniform ≈√n id-sample (HNSW's level
-    *    assignment) with its own exact kNN graph — (√n)² = n cosines,
-    *    also linear.
+    *    assignment) with its own exact kNN graph — ONE [[groupTopK]]
+    *    group, (√n)² = n cosines in one task.
     * Returns (baseGraph, upperGraph, entryId): the directed
-    * (query_id, neighbor_id) edge lists ready for
-    * [[graphSearchTopKLayered]], plus the global entry node — the
-    * SMALLEST ACTUAL upper-layer id ≥ 10, read from the sampled node
-    * set itself (one column-pruned min over ≈√n rows — the build is
-    * a multi-job operation already). Deriving from real ids makes
-    * the off-the-probe-set guarantee unconditional: the former
-    * 1 + upStep arithmetic landed back inside the vec_id < 10 probe
-    * set for n ≲ 72 and assumed contiguous ids — and staying off the
-    * probe set matters because the search's self-filter empties a
-    * query's seed beam when the query IS the entry (measured: probe
-    * query 1 returned zero rows with entry 1, costing 5 of 50 recall
-    * slots). If every upper id is < 10 (a sub-dozen-row corpus) the
-    * smallest upper id is used — self-filter losses are then the
-    * corpus's own property, not an id-arithmetic artifact. `n` is
-    * the caller-supplied corpus row count (it already has it from
-    * sizing decisions; recounting here would add a job). */
+    * (query_id, neighbor_id) edge lists for [[graphSearchTopKLayered]]
+    * and the global entry node — the SMALLEST ACTUAL upper-layer id
+    * ≥ 10 (the smallest upper id if there is none), read from the
+    * sampled ids. Staying off the vec_id < 10 probe set matters: the
+    * search's self-filter empties a query's seed beam when the query
+    * IS the entry (measured: probe query 1 returned no rows with
+    * entry 1). `n` is the caller's corpus row count (recounting would
+    * add a job). */
   def buildGraphIndexFull(nodes: DataFrame, vecCol: String,
       idCol: String, n: Long, k: Int = 8, rounds: Int = 2,
       blockRows: Int = 128,
       upperK: Int = 4): (DataFrame, DataFrame, Long) = {
     val blocks = math.max(4L, n / blockRows).toInt
-    var g = hashBlockedTopK(nodes, vecCol, idCol, k = k, blocks = blocks)
-      .select(col("query_id"), col("neighbor_id"))
-      .localCheckpoint(true)
-    for (_ <- 1 to rounds)
-      g = nnDescentRound(nodes, g, vecCol, idCol, k = k)
-        .select(col("query_id"), col("neighbor_id"))
-        .localCheckpoint(true)
+    val g = refine(nodes, hashBlockedTopK(nodes, vecCol, idCol, k = k,
+      blocks = blocks), vecCol, idCol, k, rounds)
     val upStep = math.max(2L, math.round(math.sqrt(n.toDouble)))
     val upperNodes = nodes.filter(pmod(col(idCol), lit(upStep)) === 1)
-    val entryRow = upperNodes.agg(
-        min(when(col(idCol) >= 10, col(idCol))).as("offProbe"),
-        min(col(idCol)).as("anyId")).head()
-    require(!entryRow.isNullAt(1),
-      s"graft: buildGraphIndexFull upper layer is empty (n=$n, " +
-        s"upStep=$upStep) — no id ≡ 1 mod $upStep exists in $idCol")
-    val entry =
-      if (!entryRow.isNullAt(0)) entryRow.getLong(0) else entryRow.getLong(1)
-    val upperGraph = bruteTopK(upperNodes, upperNodes, vecCol, idCol,
-        k = upperK)
+    val entry = entriesBy(upperNodes, idCol, lit(0)).collect()
+      .headOption.filterNot(_.isNullAt(1)).map(_.getLong(1)).getOrElse(
+        throw new IllegalArgumentException("graft: buildGraphIndexFull " +
+          s"upper layer is empty (n=$n, upStep=$upStep) — no id ≡ 1 mod " +
+          s"$upStep exists in $idCol"))
+    val upperGraph = groupTopK(upperNodes.select(array(lit(0L)).as("gids"),
+        col(idCol).as("id"), col(vecCol).as("vec")), upperK)
       .select(col("query_id"), col("neighbor_id"))
     (g, upperGraph, entry)
   }
+
+  /** (shard, entry_id): each shard's entry node, its smallest id ≥ 10
+    * — off the vec_id < 10 probe set ([[buildGraphIndexFull]]) — or
+    * its smallest id if it has none. */
+  private def entriesBy(nodes: DataFrame, idCol: String,
+      shard: Column): DataFrame =
+    nodes.groupBy(shard.as("shard")).agg(coalesce(
+      min(when(col(idCol) >= 10, col(idCol))), min(col(idCol))).as("entry_id"))
+
+  /** The build loop every graph index shares: the seed, then `rounds`
+    * [[nnDescentRound]]s. Nothing is checkpointed: each stage's edge
+    * list reads its merge exchange's output, so the next round's two
+    * reads of it (one per edge direction) re-merge lists, never
+    * re-score pairs, and every plan stays one stage deep. */
+  private def refine(nodes: DataFrame, seed: DataFrame, vecCol: String,
+      idCol: String, k: Int, rounds: Int): DataFrame =
+    (1 to rounds).foldLeft(seed.select(col("query_id"), col("neighbor_id"))) {
+      (g, _) => nnDescentRound(nodes, g, vecCol, idCol, k = k)
+        .select(col("query_id"), col("neighbor_id"))
+    }
 
   /** Column-metadata key carrying the shape a graph-index store was
     * written with — (entry, k, n) — so a probe always uses the
@@ -250,11 +336,7 @@ object Similarity {
     * adjacency join becomes shuffle-bound. */
   def writeGraphIndex(graph: DataFrame, upper: DataFrame, entry: Long,
       n: Long, k: Int, path: String): Unit = {
-    val meta = new org.apache.spark.sql.types.MetadataBuilder()
-      .putString(GraphIndexShapeKey, s"$entry,$k,$n").build()
-    graph.select(col("query_id").as("query_id", meta),
-        col("neighbor_id"))
-      .write.mode("overwrite").parquet(s"$path/graph")
+    writeEdges(graph, GraphIndexShapeKey, s"$entry,$k,$n", path)
     upper.select(col("query_id"), col("neighbor_id"))
       .write.mode("overwrite").parquet(s"$path/upper")
   }
@@ -266,19 +348,37 @@ object Similarity {
     * failure mode: wrong results, no error). */
   def readGraphIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): (DataFrame, DataFrame, Long, Long, Int) = {
-    val g = spark.read.parquet(s"$path/graph")
-    val field = g.schema.find(_.name == "query_id").getOrElse(
-      throw new IllegalArgumentException(
-        "graft: graph-index store needs a query_id column " +
-          "(see Similarity.writeGraphIndex)"))
-    require(field.metadata.contains(GraphIndexShapeKey),
-      "graft: graph-index store carries no shape metadata — rebuild " +
-        "it with Similarity.writeGraphIndex, or the search would " +
-        "silently seed from a guessed entry node")
-    val Array(entry, k, n) =
-      field.metadata.getString(GraphIndexShapeKey).split(",")
+    val (g, Array(entry, k, n)) = readEdges(spark, path,
+      GraphIndexShapeKey, "writeGraphIndex", "seed from a guessed entry node")
     (g, spark.read.parquet(s"$path/upper"), entry.toLong, n.toLong,
       k.toInt)
+  }
+
+  /** Write an edge list to `path`/graph with its store's shape in the
+    * `query_id` column metadata under `key` (parquet round-trips field
+    * metadata — the [[Dedup.signatureStore]] device). */
+  private def writeEdges(graph: DataFrame, key: String, shape: String,
+      path: String): Unit = {
+    val meta = new org.apache.spark.sql.types.MetadataBuilder()
+      .putString(key, shape).build()
+    graph.select(col("query_id").as("query_id", meta), col("neighbor_id"))
+      .write.mode("overwrite").parquet(s"$path/graph")
+  }
+
+  /** Read a [[writeEdges]] edge list back with its shape fields; a
+    * store without the shape is rejected loudly, never probed with a
+    * guessed one (the search would `guess`, silently). */
+  private def readEdges(spark: org.apache.spark.sql.SparkSession,
+      path: String, key: String, writer: String,
+      guess: String): (DataFrame, Array[String]) = {
+    val g = spark.read.parquet(s"$path/graph")
+    val meta = g.schema.find(_.name == "query_id").getOrElse(
+      throw new IllegalArgumentException("graft: graph-index store " +
+        s"needs a query_id column (see Similarity.$writer)")).metadata
+    require(meta.contains(key), "graft: graph-index store carries no " +
+      s"shape metadata — rebuild it with Similarity.$writer, or the " +
+      s"search would silently $guess")
+    (g, meta.getString(key).split(","))
   }
 
   /** Default shard count for [[buildGraphIndexSharded]]: one shard
@@ -297,68 +397,37 @@ object Similarity {
 
   /** SHARD-PARALLEL graph-ANN build — the multi-executor composition
     * [[buildGraphIndexFull]]'s monolithic build trades away: the
-    * corpus splits into `shards` disjoint pmod-shards and each shard
-    * gets its OWN independent NN-descent subgraph. The payoff is in
-    * the dataflow, not the driver: because every seed edge stays
-    * inside one shard, and NN-descent candidates are neighbors plus
-    * neighbors-of-neighbors of EXISTING edges, the 2-hop closure can
-    * never leave a shard either — so ONE distributed pass of the
-    * ordinary [[nnDescentRound]] over the union edge list refines
-    * ALL shards' subgraphs simultaneously, with zero cross-shard
-    * shuffle mass (shard isolation is a construction invariant, and
-    * the d_ann_graph_sharded_recall contract pins it). This is the
-    * DiskANN/partitioned-HNSW deployment shape: at 10¹⁰ vectors a
-    * single NN-descent's candidate shuffles span the whole corpus,
-    * while sharded builds bound every join to within-shard rows and
-    * shards build embarrassingly parallel across executors.
+    * corpus splits into `shards` disjoint pmod-shards, each with its
+    * OWN NN-descent subgraph. Every seed edge stays inside one shard,
+    * and NN-descent candidates are neighbors and neighbors-of-
+    * neighbors of existing edges, so no round can leave a shard
+    * either: ONE pass of the ordinary [[nnDescentRound]] over the
+    * union edge list refines every shard at once (shard isolation is
+    * a construction invariant; d_ann_graph_sharded_recall pins it) —
+    * the DiskANN/partitioned-HNSW deployment shape.
     *
-    * Seed: the [[hashBlockedTopK]] device restricted within shard —
-    * two CROSS-CUTTING seeded-hash blockings prefixed by the shard
-    * id, ≈`blockRows` rows per block, so seed pair mass is
-    * O(n·blockRows) exactly like the full build (one blocking alone
-    * is a NN-descent fixed point — see [[blockedTopK]]; seeded
-    * hashes, not id arithmetic, so structured id spaces cannot
-    * collapse the blocks — see [[hashBlockedTopK]]).
+    * Seed: [[hashBlockedTopK]]'s two seeded-hash blockings, prefixed
+    * by the shard id, ≈`blockRows` rows per block — O(n·blockRows)
+    * seed pairs, as in the full build.
     *
-    * Returns (graph, entries): the union edge list plus one entry
-    * node per shard — the smallest in-shard id ≥ 10 (off the
-    * standard probe set; the [[buildGraphIndexFull]] self-filter
-    * lesson), falling back to the shard's smallest id. Search fans
-    * out with [[graphSearchTopKSharded]]. */
+    * Returns (graph, entries): the union edge list plus one entry node
+    * per shard ([[entriesBy]]). Search fans out with
+    * [[graphSearchTopKSharded]]. */
   def buildGraphIndexSharded(nodes: DataFrame, vecCol: String,
       idCol: String, n: Long, shards: Int, k: Int = 8,
       rounds: Int = 2, blockRows: Int = 128): (DataFrame, DataFrame) = {
     require(shards >= 2,
       s"graft: sharded graph build needs >= 2 shards (got $shards)")
     val bps = math.max(4L, (n / shards) / blockRows)
-    def scored(blk: Column => Column): DataFrame =
-      blockScored(nodes, vecCol, idCol, blk)
     // both blockings prefix with the shard id, so block keys never
     // collide across shards and every seed edge is within-shard;
     // within-shard keys are seeded hashes (id arithmetic collapses
     // on structured id spaces — see hashBlockedTopK)
-    val blk1: Column => Column = id =>
-      pmod(id, lit(shards)) * bps + pmod(xxhash64(lit(1), id), lit(bps))
-    val blk2: Column => Column = id =>
-      pmod(id, lit(shards)) * bps + pmod(xxhash64(lit(2), id), lit(bps))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    var g = scored(blk1).union(scored(blk2)).distinct()
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("neighbor_id"))
-      .localCheckpoint(true)
-    for (_ <- 1 to rounds)
-      g = nnDescentRound(nodes, g, vecCol, idCol, k = k)
-        .select(col("query_id"), col("neighbor_id"))
-        .localCheckpoint(true)
-    val entries = nodes
-      .groupBy(pmod(col(idCol), lit(shards)).as("shard"))
-      .agg(min(when(col(idCol) >= 10, col(idCol))).as("offProbe"),
-        min(col(idCol)).as("anyId"))
-      .select(col("shard"),
-        coalesce(col("offProbe"), col("anyId")).as("entry_id"))
-    (g, entries)
+    val id = col(idCol)
+    val seed = blockedGroups(nodes, vecCol, idCol, k, Seq(1, 2).map(h =>
+      pmod(id, lit(shards)) * bps + pmod(xxhash64(lit(h), id), lit(bps))))
+    (refine(nodes, seed, vecCol, idCol, k, rounds),
+      entriesBy(nodes, idCol, pmod(col(idCol), lit(shards))))
   }
 
   /** Column-metadata key for a [[writeShardedGraphIndex]] store:
@@ -374,11 +443,7 @@ object Similarity {
     * partition-pruned read. */
   def writeShardedGraphIndex(graph: DataFrame, entries: DataFrame,
       n: Long, k: Int, shards: Int, path: String): Unit = {
-    val meta = new org.apache.spark.sql.types.MetadataBuilder()
-      .putString(ShardedGraphShapeKey, s"$k,$n,$shards").build()
-    graph.select(col("query_id").as("query_id", meta),
-        col("neighbor_id"))
-      .write.mode("overwrite").parquet(s"$path/graph")
+    writeEdges(graph, ShardedGraphShapeKey, s"$k,$n,$shards", path)
     entries.select(col("shard"), col("entry_id"))
       .write.mode("overwrite").parquet(s"$path/entries")
   }
@@ -387,17 +452,9 @@ object Similarity {
     * shards). Bare stores rejected, as in [[readGraphIndex]]. */
   def readShardedGraphIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): (DataFrame, DataFrame, Long, Int, Int) = {
-    val g = spark.read.parquet(s"$path/graph")
-    val field = g.schema.find(_.name == "query_id").getOrElse(
-      throw new IllegalArgumentException(
-        "graft: sharded graph-index store needs a query_id column " +
-          "(see Similarity.writeShardedGraphIndex)"))
-    require(field.metadata.contains(ShardedGraphShapeKey),
-      "graft: sharded graph-index store carries no shape metadata — " +
-        "rebuild it with Similarity.writeShardedGraphIndex, or the " +
-        "search would fan out with a guessed shard count")
-    val Array(k, n, shards) =
-      field.metadata.getString(ShardedGraphShapeKey).split(",")
+    val (g, Array(k, n, shards)) = readEdges(spark, path,
+      ShardedGraphShapeKey, "writeShardedGraphIndex",
+      "fan out with a guessed shard count")
     (g, spark.read.parquet(s"$path/entries"), n.toLong, k.toInt,
       shards.toInt)
   }
@@ -462,19 +519,13 @@ object Similarity {
       s"graft: routed graph build needs >= 2 shards (got $shards)")
     val trained = trainQuantizer(nodes, vecCol, idCol, shards, lloydIters)
     val refAll = broadcastCentroids(nodes, trained)
-    // Occupancy over the TRAINED cells — one bounded aggregate
-    // (≤ shards rows to the driver) that serves three masters: it
-    // detects EMPTY cells, sizes per-cell seed blocks, and orders the
-    // renumbering. Empty cells are DROPPED from the stored quantizer:
-    // an empty cell is nobody's argmax, so removing its centroid
-    // changes no node's assignment (the winning centroid is by
-    // definition occupied and stays; renumbered argmax ≡ renumbering
-    // of the original argmax) — but keeping it would make every probe
-    // routed there a SILENT no-op (no entries to seed: a query loses
-    // a probe, a new vector inserted by assignment gets zero seeds
-    // and falls out of the index), which no contract downstream could
-    // see. With the drop, entries cover every stored cell 0..m-1 by
-    // construction.
+    // Occupancy over the TRAINED cells — one bounded aggregate (≤
+    // shards rows to the driver): it finds EMPTY cells, sizes per-cell
+    // seed blocks, and orders the renumbering. Empty cells are DROPPED
+    // from the stored quantizer: an empty cell is nobody's argmax, so
+    // dropping it changes no assignment, while keeping it would make
+    // every probe routed there a SILENT no-op (no entry to seed). So
+    // entries cover every stored cell 0..m-1 by construction.
     val occAll = nodes
       .groupBy(nearestCell(col(vecCol), refAll).as("shard")).count()
       .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
@@ -485,16 +536,12 @@ object Similarity {
         "the monolithic or pmod-sharded build")
     val centRef = broadcastCentroids(nodes, cents)
     def shardOf(v: Column): Column = nearestCell(v, centRef)
-    // Per-cell block counts from the MEASURED occupancy, not the
-    // average: k-means cells skew, and under a global block count a
-    // cell at c× the average carries c² its share of seed pairs — the
-    // same quadratic-in-one-reducer failure shape the id-arithmetic
-    // seed had. Cumulative offsets keep block ids globally unique;
-    // the per-row lookup is a broadcast join on the cell id — no
-    // plan-sized literals, any shard count. (shardOf itself is
-    // re-evaluated map-side per consumer — ≈shards·dim flops per row,
-    // deliberately cheaper at corpus scale than materializing an
-    // assignment column and re-shuffling it back onto the nodes.)
+    // Per-cell block counts from the MEASURED occupancy: k-means cells
+    // skew, and under one global count a cell at c× the average
+    // carries c² its share of seed pairs. Cumulative offsets keep
+    // block ids globally unique; the lookup is a broadcast join on the
+    // cell id. (shardOf is re-evaluated map-side per consumer — cheaper
+    // at corpus scale than shuffling an assignment column back.)
     val occ = occAll.zipWithIndex.map { case ((_, c), i) => (i, c) }
     val bpsByShard = occ.map { case (sh, c) =>
       (sh, math.max(4L, c / blockRows)) }
@@ -507,27 +554,10 @@ object Similarity {
     val tagged = nodes
       .withColumn("blk_shard", shardOf(col(vecCol)))
       .join(shardBlocks, Seq("blk_shard"))
-    def blk(seed: Int): Column => Column = id =>
-      col("blk_off") + pmod(xxhash64(lit(seed), id), col("blk_bps"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    var g = blockScored(tagged, vecCol, idCol, blk(1))
-      .union(blockScored(tagged, vecCol, idCol, blk(2))).distinct()
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("neighbor_id"))
-      .localCheckpoint(true)
-    for (_ <- 1 to rounds)
-      g = nnDescentRound(nodes, g, vecCol, idCol, k = k)
-        .select(col("query_id"), col("neighbor_id"))
-        .localCheckpoint(true)
-    val entries = nodes
-      .groupBy(shardOf(col(vecCol)).as("shard"))
-      .agg(min(when(col(idCol) >= 10, col(idCol))).as("offProbe"),
-        min(col(idCol)).as("anyId"))
-      .select(col("shard"),
-        coalesce(col("offProbe"), col("anyId")).as("entry_id"))
-    (g, entries, cents)
+    val seed = blockedGroups(tagged, vecCol, idCol, k, Seq(1, 2).map(h =>
+      col("blk_off") + pmod(xxhash64(lit(h), col(idCol)), col("blk_bps"))))
+    (refine(nodes, seed, vecCol, idCol, k, rounds),
+      entriesBy(nodes, idCol, shardOf(col(vecCol))), cents)
   }
 
   /** Column-metadata key for a [[writeRoutedGraphIndex]] store:
@@ -542,11 +572,7 @@ object Similarity {
     * metadata on the edge list as in [[writeShardedGraphIndex]]. */
   def writeRoutedGraphIndex(graph: DataFrame, entries: DataFrame,
       cents: Array[Seq[Float]], n: Long, k: Int, path: String): Unit = {
-    val meta = new org.apache.spark.sql.types.MetadataBuilder()
-      .putString(RoutedGraphShapeKey, s"$k,$n,${cents.length}").build()
-    graph.select(col("query_id").as("query_id", meta),
-        col("neighbor_id"))
-      .write.mode("overwrite").parquet(s"$path/graph")
+    writeEdges(graph, RoutedGraphShapeKey, s"$k,$n,${cents.length}", path)
     entries.select(col("shard"), col("entry_id"))
       .write.mode("overwrite").parquet(s"$path/entries")
     val spark = graph.sparkSession
@@ -563,17 +589,9 @@ object Similarity {
     * truncated centroid read would silently mis-route every query. */
   def readRoutedGraphIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): (DataFrame, DataFrame, Array[Seq[Float]], Long, Int) = {
-    val g = spark.read.parquet(s"$path/graph")
-    val field = g.schema.find(_.name == "query_id").getOrElse(
-      throw new IllegalArgumentException(
-        "graft: routed graph-index store needs a query_id column " +
-          "(see Similarity.writeRoutedGraphIndex)"))
-    require(field.metadata.contains(RoutedGraphShapeKey),
-      "graft: routed graph-index store carries no shape metadata — " +
-        "rebuild it with Similarity.writeRoutedGraphIndex, or the " +
-        "search would route with a guessed quantizer")
-    val Array(k, n, shards) =
-      field.metadata.getString(RoutedGraphShapeKey).split(",")
+    val (g, Array(k, n, shards)) = readEdges(spark, path,
+      RoutedGraphShapeKey, "writeRoutedGraphIndex",
+      "route with a guessed quantizer")
     val centRows = spark.read.parquet(s"$path/centroids")
       .orderBy(col("shard")).collect()
     require(centRows.length == shards.toInt &&

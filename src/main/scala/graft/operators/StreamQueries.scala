@@ -294,10 +294,10 @@ object StreamQueries {
     * construction (StreamingSpec applies a batch twice and pins the
     * identical merged view). Per-batch write cost is |batch|-sized,
     * never store-sized. DEVICE CONTRACT (same as insertAnnBatch's
-    * disjoint-links argument): a change key appears in at most ONE
-    * batch of a run — the merged view applies all links against the
-    * anchor in one NOT-IN + UNION-ALL pass ([[readCdcChain]]), which
-    * is order-free exactly when links are key-disjoint. Factored out
+    * disjoint-links argument): the merged view applies the links
+    * against the anchor in one NOT-IN + UNION-ALL pass
+    * ([[readCdcChain]]), and a key several batches change keeps the
+    * rows of the last one (by batch id). Factored out
     * so the spec drives the exact production code path. */
   private[graft] def mergeCdcBatch(
       storeBase: String,
@@ -305,11 +305,15 @@ object StreamQueries {
     batch.write.mode("overwrite").parquet(s"$storeBase/d$batchId")
 
   /** Read a [[mergeCdcBatch]] chain back as the merged table: anchor
-    * rows whose key no link touched, plus every link's rows — ONE
+    * rows whose key no link touched, plus, for every key the links
+    * touch, the rows of the LAST batch that touched it (batch ids
+    * compare as numbers: d10 is later than d9) — ONE
     * [[Relational.mergeUpsert]] pass over anchor ∪ links (one glob
-    * scan of the links, the [[readAnnChain]] shape). With zero
-    * delivered batches there is no link, and the anchor is the table
-    * (key column first, as the merge emits it). */
+    * scan of the links, the [[readAnnChain]] shape). Last-wins makes
+    * the view exact without the key-disjoint-links contract: a key
+    * two batches change is emitted once, as the later batch left it.
+    * With zero delivered batches there is no link, and the anchor is
+    * the table (key column first, as the merge emits it). */
   private[graft] def readCdcChain(s: org.apache.spark.sql.SparkSession,
       storeBase: String, key: String): org.apache.spark.sql.DataFrame = {
     val anchor = s.read.parquet(s"$storeBase/v0")
@@ -317,7 +321,17 @@ object StreamQueries {
     val fs = links.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (Option(fs.globStatus(links)).forall(_.isEmpty))
       anchor.select(col(key) +: anchor.columns.filter(_ != key).map(col): _*)
-    else Relational.mergeUpsert(anchor, s.read.parquet(links.toString), key)
+    else {
+      val raw = s.read.parquet(links.toString)
+      val batch = regexp_extract(col("_metadata.file_path"),
+        "/d([0-9]+)/[^/]*$", 1).cast("long")
+      val latest = raw.withColumn("_batch", batch)
+        .withColumn("_last", max(col("_batch")).over(
+          org.apache.spark.sql.expressions.Window.partitionBy(col(key))))
+        .filter(col("_batch") === col("_last"))
+        .select(raw.columns.map(col): _*)
+      Relational.mergeUpsert(anchor, latest, key)
+    }
   }
 
   /** s_merge — STREAMING CDC MERGE, the lambda-closing leg of

@@ -14,6 +14,17 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** A DataFrame over an RDD of Catalyst rows with the given schema —
+    * lets an executor-side kernel (mapPartitions over
+    * `queryExecution.toRdd`) hand its rows back to the planner
+    * without a Row round trip. `internalCreateDataFrame` is
+    * private[sql]. */
+  def frame(spark: org.apache.spark.sql.SparkSession,
+      rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .internalCreateDataFrame(rows, schema)
+
   /** Force-create the driver's StateStoreCoordinator RPC endpoint.
     * A streaming query registers it as a side effect of starting; a
     * BATCH transformWithState plan skips that path, and its executors

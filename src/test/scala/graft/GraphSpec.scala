@@ -136,6 +136,25 @@ class GraphSpec extends SparkSpec {
     assert(got(1L) > got(4L))
   }
 
+  test("pagerank degree table joins co-partitioned after the one edge shuffle, never broadcast") {
+    import spark.implicits._
+    val und = Seq((1L,2L),(2L,3L),(1L,3L),(1L,4L))
+    val dirs = (und ++ und.map(e => (e._2, e._1))).toDF("src", "dst")
+    val edges = Graph.degreeEdges(dirs, Graph.outDegrees(dirs))
+    val deg = Map(1L -> 3L, 2L -> 2L, 3L -> 2L, 4L -> 1L)
+    assert(edges.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet ===
+      (und ++ und.map(e => (e._2, e._1))).map(e => (e._1, e._2, deg(e._1))).toSet)
+    val plan = edges.queryExecution.executedPlan.toString
+    val finalPlan = plan.substring(plan.indexOf("== Final Plan =="),
+      plan.indexOf("== Initial Plan =="))
+    assert(!plan.contains("BroadcastExchange"), plan)
+    assert(finalPlan.contains("ShuffledHashJoin"), plan)
+    // three exchanges: the edges ONCE (the repartition by src), the
+    // degree tally, and the tally to the edges' partitioning
+    assert("REPARTITION_BY_COL".r.findAllIn(finalPlan).length === 1, plan)
+    assert("Exchange hashpartitioning".r.findAllIn(finalPlan).length === 3, plan)
+  }
+
   test("pagerank early exit: converged result equals the fixed-iteration one") {
     import spark.implicits._
     val und = Seq((1L,2L),(2L,3L),(1L,3L),(1L,4L))

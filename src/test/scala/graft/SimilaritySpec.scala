@@ -1,6 +1,8 @@
 package graft
 
 import graft.operators.Similarity
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 class SimilaritySpec extends SparkSpec {
@@ -1274,6 +1276,201 @@ class SimilaritySpec extends SparkSpec {
     bestSeed.foreach { case (q, c) =>
       assert(bestRef(q) >= c, s"node $q: refined best ${bestRef(q)} < seed best $c")
     }
+  }
+
+  // The pair-join rules the local-join kernel replaced, restated: a
+  // blocked seed is the distinct union of one self-join per blocking,
+  // an NN-descent round joins its und ∪ twoHop candidates to the
+  // vectors twice, and both rank by a window over (cos desc, id).
+  private def oldRank(scored: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("cos").desc, col("neighbor_id"))
+    scored.withColumn("rnk", row_number().over(w).cast("long"))
+      .filter(col("rnk") <= k)
+  }
+
+  private def oldBlocked(nodes: DataFrame, k: Int, blks: Seq[Column]): DataFrame =
+    oldRank(blks.map { b =>
+      val q = nodes.select(col("vec_id").as("query_id"),
+        col("embedding").as("qv"), b.as("blk"))
+      val c = nodes.select(col("vec_id").as("neighbor_id"),
+        col("embedding").as("cv"), b.as("blk"))
+      q.join(c, Seq("blk")).filter(col("query_id") =!= col("neighbor_id"))
+        .select(col("query_id"), col("neighbor_id"),
+          round(expr("graft_cosine(qv, cv)"), 4).as("cos"))
+    }.reduce(_ union _).distinct(), k)
+
+  private def oldRound(nodes: DataFrame, seed: DataFrame, k: Int): DataFrame = {
+    val und = seed.select(col("query_id").as("v"), col("neighbor_id").as("u"))
+      .union(seed.select(col("neighbor_id").as("v"), col("query_id").as("u")))
+      .distinct()
+    val twoHop = und.as("e1")
+      .join(und.select(col("v").as("w"), col("u").as("u2")).as("e2"),
+        col("e1.u") === col("e2.w"))
+      .select(col("e1.v").as("v"), col("e2.u2").as("u"))
+      .filter(col("v") =!= col("u"))
+    val vecs = nodes.select(col("vec_id").as("id"), col("embedding").as("vec"))
+    oldRank(und.union(twoHop).distinct()
+      .join(vecs.select(col("id").as("v"), col("vec").as("vv")), Seq("v"))
+      .join(vecs.select(col("id").as("u"), col("vec").as("uv")), Seq("u"))
+      .select(col("v").as("query_id"), col("u").as("neighbor_id"),
+        round(expr("graft_cosine(vv, uv)"), 4).as("cos")), k)
+  }
+
+  /** (query, neighbour, cos bits or None for null, rnk) */
+  private def ranked(df: DataFrame): Set[(Long, Long, Option[Long], Long)] =
+    df.select("query_id", "neighbor_id", "cos", "rnk").collect().map(r =>
+      (r.getLong(0), r.getLong(1), Option.when(!r.isNullAt(2))(
+        java.lang.Double.doubleToRawLongBits(r.getDouble(2))), r.getLong(3)))
+      .toSet
+
+  private def edgeSet(df: DataFrame): Set[(Long, Long)] =
+    df.select("query_id", "neighbor_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  test("local-join kernel equals the pair-join rules: blocked seeds and NN-descent rounds, ties, absent ids, one-member groups") {
+    import spark.implicits._
+    for (seed <- 1 to 3) {
+      val rnd = new scala.util.Random(seed)
+      val base = Array.fill(50)(Array.fill(6)((rnd.nextGaussian() * 4).round.toFloat / 4))
+      // ids 50-59 duplicate 0-9 (exact cos ties, broken by id); 60 is
+      // the zero vector
+      val vecs = base.indices.map(i => i.toLong -> base(i)) ++
+        (50 until 60).map(i => i.toLong -> base(i - 50)) :+ (60L -> Array.fill(6)(0f))
+      val nodes = vecs.toDF("vec_id", "embedding")
+      // 40 blocks: many one-member groups in the first blocking
+      for (blocks <- Seq(4, 40))
+        assert(ranked(Similarity.blockedTopK(nodes, "embedding", "vec_id",
+            k = 3, blocks = blocks)) ===
+          ranked(oldBlocked(nodes, 3, Seq(pmod(col("vec_id"), lit(blocks)),
+            pmod(expr(s"vec_id div $blocks"), lit(blocks))))), s"seed $seed")
+      // a random graph with edges into ids 900+ absent from nodes
+      val graph = ((0L until 61L).flatMap(a =>
+          Seq.fill(2)(a -> rnd.nextInt(61).toLong).filter(e => e._1 != e._2)) ++
+        Seq(3L -> 900L, 901L -> 7L, 12L -> 901L, 900L -> 44L))
+        .toDF("query_id", "neighbor_id")
+      assert(ranked(Similarity.nnDescentRound(nodes, graph, "embedding",
+          "vec_id", k = 4)) === ranked(oldRound(nodes, graph, 4)), s"seed $seed")
+      // a round over a ranked seed, as the builds chain them
+      val s0 = Similarity.blockedTopK(nodes, "embedding", "vec_id", k = 3, blocks = 4)
+      assert(ranked(Similarity.nnDescentRound(nodes, s0, "embedding",
+          "vec_id", k = 5)) === ranked(oldRound(nodes, s0, 5)), s"seed $seed")
+    }
+  }
+
+  test("graph-index builds keep their edges: full seed, rounds and upper layer; sharded seed and rounds") {
+    val nodes = emb.localCheckpoint(true)
+    val n = nodes.count()
+    val k = 12
+    val blocks = math.max(4L, n / 128).toInt
+    val hashSeed = oldBlocked(nodes, k, Seq(1, 2).map(h =>
+      pmod(xxhash64(lit(h), col("vec_id")), lit(blocks)))).localCheckpoint(true)
+    val r1 = oldRound(nodes, hashSeed, k).localCheckpoint(true)
+    val r2 = oldRound(nodes, r1, k)
+    for ((rounds, want) <- Seq(0 -> hashSeed, 1 -> r1, 2 -> r2)) {
+      val (g, _, _) = Similarity.buildGraphIndexFull(nodes, "embedding",
+        "vec_id", n, k = k, rounds = rounds)
+      assert(edgeSet(g) === edgeSet(want), s"$rounds rounds")
+    }
+    val (_, upper, _) = Similarity.buildGraphIndexFull(nodes, "embedding",
+      "vec_id", n, k = k, rounds = 0)
+    val upStep = math.max(2L, math.round(math.sqrt(n.toDouble)))
+    val upperNodes = nodes.filter(pmod(col("vec_id"), lit(upStep)) === 1)
+    assert(edgeSet(upper) === edgeSet(Similarity.bruteTopK(upperNodes,
+      upperNodes, "embedding", "vec_id", k = 4)))
+    val shards = 4
+    val bps = math.max(4L, (n / shards) / 128)
+    val shardSeed = oldBlocked(nodes, k, Seq(1, 2).map(h =>
+      pmod(col("vec_id"), lit(shards)) * bps +
+        pmod(xxhash64(lit(h), col("vec_id")), lit(bps))))
+    val (sg, _) = Similarity.buildGraphIndexSharded(nodes, "embedding",
+      "vec_id", n, shards, k = k, rounds = 1)
+    assert(edgeSet(sg) === edgeSet(oldRound(nodes, shardSeed, k)))
+  }
+
+  test("local-join kernel on degenerate inputs: empty node set, zero vector, null embedding") {
+    import spark.implicits._
+    val v = Seq(
+      (1L, Some(Array(1f, 0f))), (2L, Some(Array(0.8f, 0.6f))),
+      (3L, Some(Array(0f, 1f))), (4L, Some(Array(0f, 0f))),
+      (5L, None), (6L, Some(Array(-1f, 0f))))
+    val nodes = v.toDF("vec_id", "embedding")
+    val none = nodes.limit(0)
+    val graph = Seq((1L, 2L), (2L, 3L), (3L, 5L), (5L, 6L), (1L, 4L))
+      .toDF("query_id", "neighbor_id")
+    assert(Similarity.blockedTopK(none, "embedding", "vec_id").collect().isEmpty)
+    assert(Similarity.nnDescentRound(none, graph, "embedding", "vec_id")
+      .collect().isEmpty)
+    assert(Similarity.nnDescentRound(nodes, graph.limit(0), "embedding",
+      "vec_id").collect().isEmpty)
+    intercept[IllegalArgumentException](Similarity.buildGraphIndexFull(
+      none, "embedding", "vec_id", 0L))
+    // one group holds every node: the zero vector scores cos 0, and a
+    // null embedding scores a null cos that ranks after every non-null
+    // one (ties by id) — as the pair-join rules ranked it
+    val all = Similarity.blockedTopK(nodes, "embedding", "vec_id", k = 5,
+      blocks = 1)
+    val got = ranked(all)
+    assert(got === ranked(oldBlocked(nodes, 5, Seq(lit(0)))))
+    assert(got.filter(_._1 == 1L).toSeq.sortBy(_._4).map(r => (r._2, r._3.isDefined)) ===
+      Seq((2L, true), (3L, true), (4L, true), (6L, true), (5L, false)))
+    assert(got.filter(r => r._1 == 4L || r._2 == 4L).forall(r =>
+      r._3.isEmpty || r._3.contains(java.lang.Double.doubleToRawLongBits(0.0))))
+    assert(got.filter(_._1 == 5L).toSeq.sortBy(_._4).map(r => (r._2, r._3)) ===
+      Seq(1L, 2L, 3L, 4L, 6L).map(_ -> None))
+    assert(ranked(Similarity.nnDescentRound(nodes, graph, "embedding",
+      "vec_id", k = 3)) === ranked(oldRound(nodes, graph, 3)))
+  }
+
+  test("one full graph-index build: bounded jobs and shuffle records that repeat exactly") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+    import org.apache.spark.sql.graft.Bridge
+    val nodes = emb.localCheckpoint(true)
+    val n = nodes.count()
+    def build(): (Int, Long, Set[(Long, Long)]) = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val records = new java.util.concurrent.atomic.AtomicLong
+      val l = new SparkListener {
+        override def onJobStart(js: SparkListenerJobStart): Unit =
+          { jobs.incrementAndGet(); () }
+        override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
+          Option(te.taskMetrics).foreach(m =>
+            records.addAndGet(m.shuffleWriteMetrics.recordsWritten))
+      }
+      Bridge.drainListenerBus(spark)
+      spark.sparkContext.addSparkListener(l)
+      val (g, u) = try {
+        val (g, u, _) = Similarity.buildGraphIndexFull(nodes, "embedding",
+          "vec_id", n, k = 12, rounds = 2)
+        val gu = (edgeSet(g), edgeSet(u))
+        Bridge.drainListenerBus(spark)
+        gu
+      } finally spark.sparkContext.removeSparkListener(l)
+      (jobs.get, records.get, g ++ u)
+    }
+    val (jobs1, rec1, e1) = build()
+    val (jobs2, rec2, e2) = build()
+    assert((jobs1, rec1) === (jobs2, rec2), "counts must repeat exactly")
+    assert(e1 === e2)
+    // the pair-join build ran 27 jobs on the bench corpus. Records:
+    // the seed ships each node to its two groups' tasks and their
+    // lists; a round ships at most its 2nk directed edges to the
+    // node-adjacency aggregate, the n vectors to that join, each node
+    // once per task (p of them) and at most k rows per (task, node) —
+    // never a candidate pair (n·(2k)² of them)
+    val (k, p) = (12L, spark.conf.get("spark.sql.shuffle.partitions").toLong)
+    assert(jobs1 < 27, s"$jobs1 jobs")
+    assert(rec1 <= n * (2 + 2 * k + 2 * (2 * k + 1 + p + p * k) + 1),
+      s"$rec1 shuffle records")
+  }
+
+  test("graphIndexStore leaves no RDD of its build persisted") {
+    import graft.operators.Pipeline
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    // a spelling of the spec corpus no other test has built a store for
+    Pipeline.graphIndexStore(spark, s"$sf/.", "compact")
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"build left RDDs ${left.toSeq.sorted} persisted")
   }
 
   test("filtered search: every neighbor shares the query's label, exact == brute-on-slice") {

@@ -44,6 +44,25 @@ class StreamingSpec extends SparkSpec {
       "chained CDC merge must equal the one-shot batch merge")
   }
 
+  test("CDC chain: a key changed by several batches reads back once, as the last batch left it") {
+    import graft.operators.StreamQueries
+    import spark.implicits._
+    val store = java.nio.file.Files.createTempDirectory("graft_smerge_lastwins").toString
+    Seq((1L, "a0"), (2L, "b0"), (3L, "c0")).toDF("k", "v")
+      .write.parquet(s"$store/v0")
+    // key 1 changes in batches 2, 9 and 10 (10 is the last, though it
+    // sorts first as text); key 2 only in batch 9; key 4 is inserted
+    // by batch 2 and changed by batch 9
+    StreamQueries.mergeCdcBatch(store, Seq((1L, "a2"), (4L, "d2")).toDF("k", "v"), 2L)
+    StreamQueries.mergeCdcBatch(store,
+      Seq((1L, "a9"), (2L, "b9"), (4L, "d9")).toDF("k", "v"), 9L)
+    StreamQueries.mergeCdcBatch(store, Seq((1L, "a10")).toDF("k", "v"), 10L)
+    val merged = StreamQueries.readCdcChain(spark, store, "k")
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toSeq.sorted
+    assert(merged === Seq(1L -> "a10", 2L -> "b9", 3L -> "c0", 4L -> "d9"))
+    deleteRecursively(new java.io.File(store))
+  }
+
   test("CDC chain with zero delivered batches reads back the anchor") {
     import graft.operators.{Relational, StreamQueries}
     val store = java.nio.file.Files.createTempDirectory("graft_smerge_empty").toString
