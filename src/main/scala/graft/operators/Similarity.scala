@@ -778,7 +778,8 @@ object Similarity {
     * survivors) cost no job: 1 + upperRounds + rounds jobs after the
     * table. `table` is a prebuilt `searchTable(nodes, vecCol, idCol,
     * graph, Some(upperGraph))` for a caller that searches one index
-    * many times (s_ann_ingest's per-micro-batch inserts). */
+    * many times (s_ann_ingest's per-micro-batch inserts, the full
+    * store's searches). */
   def graphSearchTopKLayered(nodes: DataFrame, queries: DataFrame,
       graph: DataFrame, upperGraph: DataFrame, vecCol: String,
       idCol: String, k: Int = 5, beam: Int = 24, rounds: Int = 4,

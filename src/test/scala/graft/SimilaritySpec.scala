@@ -1473,6 +1473,34 @@ class SimilaritySpec extends SparkSpec {
     assert(left.isEmpty, s"build left RDDs ${left.toSeq.sorted} persisted")
   }
 
+  test("full-store searches share one search table: a repeat search shuffles nothing, same rows") {
+    import graft.operators.Pipeline
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    import org.apache.spark.sql.graft.Bridge
+    def rows(df: DataFrame): Seq[Seq[Any]] = df.collect().map(_.toSeq).toSeq
+    val first = rows(Pipeline.dAnnGraphFull.fn(spark, sf))
+    val written = new java.util.concurrent.atomic.AtomicLong
+    val l = new SparkListener {
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
+        if (te.taskMetrics != null)
+          { written.addAndGet(te.taskMetrics.shuffleWriteMetrics.recordsWritten); () }
+    }
+    Bridge.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(l)
+    val again = try {
+      val r = rows(Pipeline.dAnnGraphFull.fn(spark, sf))
+      Bridge.drainListenerBus(spark); r
+    } finally spark.sparkContext.removeSparkListener(l)
+    // the repeat runs the query collect and the rounds only; building
+    // the table aggregates the store's edge lists through a shuffle
+    assert(written.get === 0L, s"repeat search wrote ${written.get} shuffle records")
+    assert(again === first)
+    val (graph, upper, entry, _, _) = Pipeline.graphIndexStore(spark, sf, "full")
+    assert(rows(Similarity.graphSearchTopKLayered(emb, queries, graph, upper,
+      "embedding", "vec_id", k = 5, beam = 48, rounds = 6,
+      upperSeed = entry)) === first, "a search over its own table differs")
+  }
+
   test("filtered search: every neighbor shares the query's label, exact == brute-on-slice") {
     val labels = emb.select(col("vec_id"), col("label")).collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
