@@ -182,6 +182,25 @@ object Bench {
       }
   }
 
+  /** Where the full-precision record goes. `explicitOut`
+    * (SPARK_GRAFT_FULL_OUT) names a destination at any sfDir (the ~sf1
+    * replica artifact). The implicit `bench_full.json` is BY DEFINITION
+    * the canonical full suite at sf0.1 on a 32-way session with no extra
+    * JVM flags, so it is written only when all of that holds: a filtered
+    * profiling run, another SF or replica dir, a low-core scaling run
+    * (round 16's 8-core run clobbered it) and a config A/B run through
+    * SPARK_GRAFT_JAVA_OPTS would each overwrite it with numbers the
+    * README/SURVEY claims no longer back. `parallelism` is the resolved
+    * session's, not the SPARK_GRAFT_CPUS request. Pure — pinned by
+    * BenchSpec. */
+  def fullOutPath(explicitOut: Option[String], only: Option[Set[String]],
+      sfDir: String, parallelism: Int, javaOpts: Option[String]): Option[String] =
+    explicitOut.orElse(
+      if (only.isEmpty && parallelism == 32 && javaOpts.forall(_.trim.isEmpty) &&
+          new java.io.File(sfDir).getName == "sf0.1")
+        Some("bench_full.json")
+      else None)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP_DIR", "/root/testdata/sf0.001")
@@ -267,22 +286,8 @@ object Bench {
     catch { case NonFatal(_) => () }
     // Full-precision per-query timings for local profiling only (file,
     // so no tail-window limit: full failed list, full precision).
-    // Skipped under SPARK_GRAFT_ONLY and for non-sf0.1 dirs: the
-    // committed artifact is BY DEFINITION the full suite at sf0.1, and
-    // both a filtered profiling run and a full run at another SF (or a
-    // ScaleProbe replica dir) would silently clobber it with numbers
-    // the README/SURVEY claims no longer back.
-    // SPARK_GRAFT_FULL_OUT names an explicit destination for the
-    // full-precision record at ANY sfDir (the ~sf1 replica artifact);
-    // the implicit bench_full.json stays sf0.1-only AND default-cpus-only
-    // so neither a replica run nor the driver's low-core scaling run
-    // can clobber the canonical c32 sidecar (round 16's 8-core run did
-    // exactly that — the sfDir-only guard was incomplete).
-    val defaultCpus = sys.env.get("SPARK_GRAFT_CPUS").forall(_ == "32")
-    val fullOut = sys.env.get("SPARK_GRAFT_FULL_OUT")
-      .orElse(if (only.isEmpty && defaultCpus &&
-        new java.io.File(sfDir).getName == "sf0.1")
-        Some("bench_full.json") else None)
+    val fullOut = fullOutPath(sys.env.get("SPARK_GRAFT_FULL_OUT"), only, sfDir,
+      spark.sparkContext.defaultParallelism, sys.env.get("SPARK_GRAFT_JAVA_OPTS"))
     fullOut.foreach { out =>
       val fullQs = timings.map { case (k, v) => "\"" + k + "\":" + v }
         .mkString("{", ",", "}")

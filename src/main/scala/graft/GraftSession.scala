@@ -25,6 +25,15 @@ object GraftSession {
       // silently flipping the provider mid-session for later queries.
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      // Checkpoint writes without forking: Hadoop's local file systems
+      // start a `chmod`/`readlink` process per file without libhadoop
+      // (see LocalCheckpointFileManager), and changelog checkpointing
+      // makes each state commit one changelog file instead of a snapshot
+      // upload.
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        classOf[graft.streaming.LocalCheckpointFileManager].getName)
+      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
+        "true")
       .config("spark.ui.enabled", "false")
 
   def local(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")): SparkSession = {

@@ -295,4 +295,25 @@ class BenchSpec extends AnyFunSuite {
     assert(line.length <= 600)
     assert(math.abs(parse(line).get("value").asDouble() - total) < 0.1)
   }
+
+  test("bench_full.json is written only by a plain full sf0.1 run on a 32-way session") {
+    val sf01 = "/data/tpch/sf0.1"
+    def out(parallelism: Int = 32, javaOpts: Option[String] = None,
+        only: Option[Set[String]] = None, sfDir: String = sf01,
+        explicitOut: Option[String] = None) =
+      Bench.fullOutPath(explicitOut, only, sfDir, parallelism, javaOpts)
+    assert(out() === Some("bench_full.json"))
+    assert(out(javaOpts = Some("")) === Some("bench_full.json"))
+    // the resolved session decides, not the SPARK_GRAFT_CPUS request:
+    // an unset request that resolves to another width is not canonical
+    assert(out(parallelism = 8) === None)
+    assert(out(parallelism = 4) === None)
+    // extra JVM flags make an A/B run, never the canonical record
+    assert(out(javaOpts = Some("-Dspark.sql.adaptive.enabled=false")) === None)
+    assert(out(only = Some(Set("q1_agg"))) === None)
+    assert(out(sfDir = "/data/tpch/sf1") === None)
+    // an explicit destination is honoured whatever the run
+    assert(out(parallelism = 8, javaOpts = Some("-Dx=y"),
+      explicitOut = Some("bench_sf1.json")) === Some("bench_sf1.json"))
+  }
 }

@@ -463,7 +463,7 @@ class StreamingSpec extends SparkSpec {
             emitted.synchronized { emitted ++= rows; () }
         }.start()
       cuts.zipWithIndex.foreach { case (c, i) =>
-        ev.filter(c).write.parquet(s"$path/b$i")
+        ev.filter(c).coalesce(1).write.parquet(s"$path/b$i")
         q.processAllAvailable()
       }
       q.stop()
@@ -483,11 +483,15 @@ class StreamingSpec extends SparkSpec {
     // emitted x-island) plus a legitimate successor at ts 4000
     val batchA = Seq((1L, 1L, 1000L, "x"), (1L, 2L, 3000L, "y"))
     val batchB = Seq((1L, 3L, 2000L, "x"), (1L, 4L, 4000L, "x"))
+    // one file per batch: a running query sees a batch whole, never one
+    // part file of it first, which would split the batch across
+    // micro-batches out of event-time order (every test here that feeds
+    // a running query writes one file per batch for the same reason)
     def write(path: String, n: Int, rows: Seq[(Long, Long, Long, String)]): Unit =
       rows.toDF("user_id", "event_id", "ms", "event_type")
         .select(col("user_id"), col("event_id"),
           timestamp_millis(col("ms")).as("ts"), col("event_type"))
-        .write.parquet(s"$path/b$n")
+        .coalesce(1).write.parquet(s"$path/b$n")
     def src(path: String) = spark.readStream
       .schema("user_id long, event_id long, ts timestamp, event_type string")
       .parquet(path + "/*")
@@ -599,7 +603,7 @@ class StreamingSpec extends SparkSpec {
       rows.toDF("user_id", "event_id", "ms", "event_type")
         .select(col("user_id"), col("event_id"),
           timestamp_millis(col("ms")).as("ts"), col("event_type"))
-        .write.parquet(s"$path/b$n")
+        .coalesce(1).write.parquet(s"$path/b$n")
     def src(path: String) = spark.readStream
       .schema("user_id long, event_id long, ts timestamp, event_type string")
       .parquet(path + "/*")
@@ -794,50 +798,66 @@ class StreamingSpec extends SparkSpec {
     // checkpoint dir, and the recovered run must (a) not reprocess
     // committed input — exactly-once offsets — and (b) resume per-key
     // RocksDB state, so post-restart totals include pre-kill history.
-    val path = java.nio.file.Files.createTempDirectory("graft_ckpt_src").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_dir").toString
-    def batch(n: Int, rows: Seq[(Long, Double)]): Unit =
-      rows.toDF("user_id", "value").write.parquet(s"$path/b$n")
-    batch(1, Seq((1L, 1.0), (1L, 2.0), (2L, 10.0)))
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      // the memory sink refuses checkpoint recovery by design (not
-      // fault-tolerant), so emissions land in a driver-side buffer via
-      // foreachBatch — the recoverable sink shape
-      val emitted = scala.collection.mutable.ArrayBuffer[(Long, Long, Long)]()
-      def run(): Unit = {
-        val src = spark.readStream.schema("user_id long, value double")
-          .option("maxFilesPerTrigger", "1").parquet(path + "/*")
-        val q = Streaming.runningCents(src)
-          .writeStream.outputMode("update")
-          .option("checkpointLocation", ckpt)
-          .foreachBatch {
-            (d: org.apache.spark.sql.Dataset[Streaming.UserTotalsCents], _: Long) =>
-              val rows = d.collect().map(t => (t.user_id, t.n_events, t.total_cents))
-              emitted.synchronized { emitted ++= rows; () }
-          }.start()
-        q.processAllAvailable(); q.stop()
+    // Two inputs: one micro-batch before the kill, and twelve, so that
+    // recovery replays a chain of changelog files (GraftSession turns
+    // RocksDB changelog checkpointing on).
+    for (preKill <- Seq(1, 12)) {
+      val path = java.nio.file.Files.createTempDirectory("graft_ckpt_src").toString
+      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_dir").toString
+      val input = scala.collection.mutable.ArrayBuffer[(Long, Double)]()
+      def batch(n: Int, rows: Seq[(Long, Double)]): Unit = {
+        input ++= rows
+        rows.toDF("user_id", "value").coalesce(1).write.parquet(f"$path/b$n%02d")
       }
-      run() // run 1, then killed
-      val afterRun1 = emitted.size
-      // data keeps arriving while the job is down
-      batch(2, Seq((1L, 4.0), (3L, 7.0)))
-      run() // restart from the same checkpoint
-      // post-restart emissions only: what they say about user 1 could
-      // only have come from recovered state
-      val finals = emitted.drop(afterRun1)
-        .map { case (u, n, c) => u -> ((n, c)) }.toMap
-      // uninterrupted run over the full input (batch mode, same processor)
-      val want = Streaming.runningCents(spark.read.parquet(path + "/*"))
-        .collect().map(t => t.user_id -> ((t.n_events, t.total_cents))).toMap
-      assert(finals(1L) === want(1L)) // (3, 700): includes pre-kill rows
-      assert(finals(3L) === want(3L)) // (1, 700): new key post-restart
-      // a key untouched by batch 2 is NOT re-emitted: committed input
-      // was not replayed
-      assert(!finals.contains(2L), s"batch 1 was reprocessed: $finals")
-    } finally
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      batch(1, Seq((1L, 1.0), (1L, 2.0), (2L, 10.0)))
+      (2 to preKill).foreach(n => batch(n, Seq((1L, n * 0.25), (4L + n % 3, n + 0.01))))
+      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      try {
+        // the memory sink refuses checkpoint recovery by design (not
+        // fault-tolerant), so emissions land in a driver-side buffer via
+        // foreachBatch — the recoverable sink shape
+        val emitted = scala.collection.mutable.ArrayBuffer[(Long, Long, Long)]()
+        def run(): Unit = {
+          val src = spark.readStream.schema("user_id long, value double")
+            .option("maxFilesPerTrigger", "1").parquet(path + "/*")
+          val q = Streaming.runningCents(src)
+            .writeStream.outputMode("update")
+            .option("checkpointLocation", ckpt)
+            .foreachBatch {
+              (d: org.apache.spark.sql.Dataset[Streaming.UserTotalsCents], _: Long) =>
+                val rows = d.collect().map(t => (t.user_id, t.n_events, t.total_cents))
+                emitted.synchronized { emitted ++= rows; () }
+            }.start()
+          q.processAllAvailable(); q.stop()
+        }
+        run() // run 1, then killed
+        val afterRun1 = emitted.size
+        // data keeps arriving while the job is down
+        batch(preKill + 1, Seq((1L, 4.0), (3L, 7.0)))
+        run() // restart from the same checkpoint
+        // post-restart emissions only: what they say about user 1 could
+        // only have come from recovered state
+        val finals = emitted.drop(afterRun1)
+          .map { case (u, n, c) => u -> ((n, c)) }.toMap
+        // uninterrupted run over the full input (batch mode, same processor)
+        val want = Streaming.runningCents(spark.read.parquet(path + "/*"))
+          .collect().map(t => t.user_id -> ((t.n_events, t.total_cents))).toMap
+        // exact totals straight from the input rows
+        val exact = input.groupBy(_._1).map { case (u, rs) =>
+          u -> ((rs.size.toLong, rs.map(r => math.round(r._2 * 100)).sum)) }
+        assert(want === exact)
+        assert(finals(1L) === want(1L)) // includes pre-kill rows
+        assert(finals(3L) === want(3L)) // (1, 700): new key post-restart
+        // a key untouched by the last batch is NOT re-emitted: committed
+        // input was not replayed
+        assert(!finals.contains(2L), s"pre-kill input was reprocessed: $finals")
+        // the last emission per key, across the kill, is its exact total
+        assert(emitted.map { case (u, n, c) => u -> ((n, c)) }.toMap === exact,
+          s"$preKill micro-batches before the kill")
+      } finally
+        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
   }
 
   test("checkpoint recovery: dedup survivor state survives a kill-and-restart") {
@@ -952,7 +972,7 @@ class StreamingSpec extends SparkSpec {
             emitted.synchronized { emitted ++= rows; () }
         }.start()
       cuts.zipWithIndex.foreach { case (c, i) =>
-        ev.filter(c).write.parquet(s"$path/b$i")
+        ev.filter(c).coalesce(1).write.parquet(s"$path/b$i")
         q.processAllAvailable()
       }
       q.stop()
@@ -996,7 +1016,7 @@ class StreamingSpec extends SparkSpec {
       }.start()
     (cuts.zipWithIndex.map { case (c, i) => (ev.filter(c), i) } :+
       ((sentinel, cuts.size))).foreach { case (d, i) =>
-      d.write.parquet(s"$path/b$i")
+      d.coalesce(1).write.parquet(s"$path/b$i")
       q.processAllAvailable()
     }
     q.stop()
@@ -1038,7 +1058,7 @@ class StreamingSpec extends SparkSpec {
         }
       }.start()
     cuts.zipWithIndex.foreach { case (c, i) =>
-      ev.filter(c).write.parquet(s"$path/b$i")
+      ev.filter(c).coalesce(1).write.parquet(s"$path/b$i")
       q.processAllAvailable()
     }
     q.stop()
@@ -1085,7 +1105,7 @@ class StreamingSpec extends SparkSpec {
             emitted.synchronized { emitted ++= rows; () }
         }.start()
       cuts.zipWithIndex.foreach { case (c, i) =>
-        ev.filter(c).write.parquet(s"$path/b$i")
+        ev.filter(c).coalesce(1).write.parquet(s"$path/b$i")
         q.processAllAvailable()
       }
       q.stop()
@@ -1138,7 +1158,7 @@ class StreamingSpec extends SparkSpec {
             emitted.synchronized { emitted ++= rows; () }
         }.start()
       cuts.zipWithIndex.foreach { case (c, i) =>
-        ev.filter(c).write.parquet(s"$path/b$i")
+        ev.filter(c).coalesce(1).write.parquet(s"$path/b$i")
         q.processAllAvailable()
       }
       q.stop()
@@ -1210,7 +1230,7 @@ class StreamingSpec extends SparkSpec {
             perBatch.synchronized { if (rows.nonEmpty) perBatch += rows; () }
         }.start()
       cuts.zipWithIndex.foreach { case (c, i) =>
-        ev.filter(c).write.parquet(s"$path/b$i")
+        ev.filter(c).coalesce(1).write.parquet(s"$path/b$i")
         q.processAllAvailable()
       }
       q.stop()
@@ -1266,7 +1286,7 @@ class StreamingSpec extends SparkSpec {
             emitted.synchronized { emitted ++= rows; () }
         }.start()
       cuts.zipWithIndex.foreach { case (c, i) =>
-        cnt.filter(c).write.parquet(s"$path/b$i")
+        cnt.filter(c).coalesce(1).write.parquet(s"$path/b$i")
         q.processAllAvailable()
       }
       q.stop()
