@@ -269,7 +269,7 @@ object Corpus {
     * `groupSize`², linear in corpus); the inter leg compares each
     * group's representative to the NEXT group only (linear), so the
     * contract itself survives a 100x corpus. Measured at sf0.01/sf0.1
-    * (tools/PhashProbe): intra max 6/6 (mean 0.8), inter-adjacent min
+    * (SURVEY §18): intra max 6/6 (mean 0.8), inter-adjacent min
     * 24/16, full cross-group min 16/14 — pinned with headroom at
     * intra ≤ 8 / inter ≥ 12, inside the measured 8-bit gap. */
   val mModalPhashContract: QueryDef = QueryDef(

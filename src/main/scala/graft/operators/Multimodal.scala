@@ -262,7 +262,7 @@ object Multimodal {
   }
 
   /** The pHash quality distributions — shared DEFINITIONALLY by the
-    * m_modal_phash_contract row and tools/PhashProbe (the measurement
+    * m_modal_phash_contract row and the SURVEY §18 measurement (the one
     * the contract's thresholds come from): `intra` = all within-group
     * Hamming distances (same photo, different scales; join keyed by
     * group_id, bounded groupSize² fan-out), `inter` = adjacent-group

@@ -2090,7 +2090,7 @@ object Pipeline {
     * seeds-by-id is the deterministic oracle shape, not the production
     * one) and multi-probe blocking `probes = 4`: recall 0.91/0.78 at
     * sf0.01/sf0.1 on the capped truth (0.91/0.77 uncapped;
-    * tools/SemRecallProbe reports both). Single-assignment probes=1
+    * SURVEY §16.4a records both). Single-assignment probes=1
     * measures 0.25/0.18 — the paper's blocking trades exactly this
     * away, which is why the knob exists. Floor pinned under the worst
     * measurement, r7 PQ-contract methodology. The precision leg is
@@ -3136,7 +3136,7 @@ object Pipeline {
   /** SQ8 recall contracts the RAW-score path — no rerank: per-dimension
     * resolution (error <= span_i/510 per coordinate) keeps rank order
     * near-exact, unlike PQ where only the reranked path is stable.
-    * Measured 1.0 at sf0.01, 0.96 at sf0.1 (tools/Sq8Probe); pinned
+    * Measured 1.0 at sf0.01, 0.96 at sf0.1 (SURVEY §17); pinned
     * at 0.9. */
   val dAnnSqRecall: QueryDef = QueryDef(
     fn = (s, dir) => {
@@ -3389,7 +3389,7 @@ object Pipeline {
     * the dequantized cosine must sit close to the true cosine of the
     * same pair. 8-bit per-dimension codes reconstruct far tighter than
     * 8-subspace PQ (measured mean error ~7e-4 at both SFs vs PQ's
-    * ~0.04-0.05, tools/Sq8Probe); pinned at 0.005 — an order under
+    * ~0.04-0.05, SURVEY §17); pinned at 0.005 — an order under
     * the PQ bound, so a regression to PQ-grade error fails loudly. */
   val dAnnSqFidelity: QueryDef = QueryDef(
     fn = (s, dir) => {
@@ -3421,7 +3421,7 @@ object Pipeline {
     * r=32/64 explained-variance ratio: the top half of ANY spectrum
     * carries >= 0.5 of the trace by construction, so the floor must
     * clear that tautology — measured 0.6512/0.5737 at sf0.01/sf0.1
-    * (tools/Sq8Probe), pinned at 0.55: a model that stops capturing
+    * (SURVEY §17), pinned at 0.55: a model that stops capturing
     * the corpus's real anisotropy fails. identity_gap measured ~1e-16
     * at both SFs; pinned at 1e-6 relative. */
   /** d_embed_prefix — MATRYOSHKA-TRUNCATION audit: recall@5 of brute
@@ -3543,7 +3543,7 @@ object Pipeline {
   /** PCA-ANN recall contracts the reduce-then-rerank path: the true
     * top-5 must appear in the 100-deep projected shortlist (then
     * exact rerank restores order). Measured 1.0 at sf0.01, 0.84 at
-    * sf0.1 at the r=32/shortlist=100 defaults (tools/Sq8Probe sweep —
+    * sf0.1 at the r=32/shortlist=100 defaults (SURVEY §17 sweep —
     * the corpus is near-isotropic, the hard case for linear
     * reduction; r=16 reads 0.60, which is why 32 is the default);
     * pinned at 0.75. */
@@ -3639,7 +3639,7 @@ object Pipeline {
 
   /** RP-ANN recall at the defaults (r=32, shortlist=200 — twice
     * PCA's shortlist, the price of a data-blind matrix): measured
-    * 0.92/0.78 at sf0.01/sf0.1 (tools/Sq8Probe sweep; trained PCA
+    * 0.92/0.78 at sf0.01/sf0.1 (SURVEY §17 sweep; trained PCA
     * reads 1.0/0.84 at shortlist=100 — the corpus's anisotropy is
     * real signal RP cannot see); pinned at 0.7. */
   val dAnnRpRecall: QueryDef = QueryDef(
@@ -3669,7 +3669,7 @@ object Pipeline {
     * d_ann_ivf_recall / d_ann_ivfpq_recall (nlist=16, nprobe=4), NO
     * rerank: SQ8 scores are near-exact, so recall must track the
     * IVF-flat contract — measured 0.90/0.94 at sf0.01/sf0.1
-    * (tools/Sq8Probe; flat reads 0.90/0.98 — the ~7e-4 score error
+    * (SURVEY §17; flat reads 0.90/0.98 — the ~7e-4 score error
     * flips rank only at near-ties) — and pins the same 0.6 floor. */
   val dAnnIvfSqRecall: QueryDef = QueryDef(
     fn = (s, dir) => {
@@ -3686,7 +3686,7 @@ object Pipeline {
     * explicit configurations (24x4, nlist=16); these two pin what a
     * user gets with NO tuning — autoBits/autoNlist sized from the
     * corpus count, the shapes every scale argument about occupancy
-    * rests on. Floors from tools/AnnAutoRecallProbe at both SFs (r7
+    * rests on. Floors from the SURVEY §16.4a measurements at both SFs (r7
     * PQ-contract methodology, pinned under the worst measurement):
     * IVF-AUTO 0.94/0.98 at sf0.01/sf0.1 -> floor 0.85 (sqrt-n lists,
     * nprobe=4 — occupancy falls as n grows, so probed lists hold a
@@ -4359,20 +4359,17 @@ object Pipeline {
              new_covered * 2 >= n_new AS new_reachable_ok
       FROM counts"""))
 
-  // Graph-ANN index store: [[Similarity.buildGraphIndexFull]]'s edge
-  // lists written to parquet ONCE per (session, dir, variant) and read
-  // back with their (entry, k, n) shape metadata — the ivfListStore /
-  // Corpus.sigStore device, now for the build that was the suite's
-  // most expensive stage (each lifecycle key used to rebuild the same
+  // Graph-ANN index stores: a [[Similarity.buildGraphIndex]] index
+  // written to parquet ONCE per (session, dir, layout, variant) and
+  // read back with its shape metadata — the ivfListStore /
+  // Corpus.sigStore device, for the build that was the suite's most
+  // expensive stage (each lifecycle key used to rebuild the same
   // index). An index is built once and probed many times — the
   // production topology — so the search/insert/delete/compact legs
-  // read the store. Variants: "full" = the whole embeddings table
-  // (search + delete legs), "base" = the 4/5 pmod split the insert
-  // leg indexes, "compact" = survivors of the delete leg's tombstone
-  // predicate (the compaction rebuild).
+  // read the store.
   private val graphStoreCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String, String),
-      (DataFrame, DataFrame, Long, Long, Int)]
+    .empty[(org.apache.spark.sql.SparkSession, String, String, String),
+      Similarity.GraphIndex]
 
   /** Tombstone predicate shared by the delete and compaction legs:
     * vec_id ≡ 7 mod 10 (pmod — replica-stable, unlike an id
@@ -4387,15 +4384,24 @@ object Pipeline {
   private[graft] def graphDelta(c: org.apache.spark.sql.Column)
       : org.apache.spark.sql.Column = pmod(c, lit(5)) === 4
 
-  private[graft] def graphIndexStore(
-      s: org.apache.spark.sql.SparkSession, dir: String,
-      variant: String): (DataFrame, DataFrame, Long, Long, Int) = {
+  /** The graph-index store over `dir`'s embeddings, built at degree
+    * 12 with 2 NN-descent rounds. Layouts: "one" = one shard with the
+    * √n upper layer, "pmod" = [[Similarity.autoShards]] pmod shards,
+    * "cells" = [[Similarity.autoRoutedShards]] k-means cells (the
+    * centroids are stored with the edges). Variants: "full" = the
+    * whole embeddings table (search + delete legs), "base" =
+    * everything but the insert-leg delta ([[graphDelta]]), "compact"
+    * = survivors of the tombstone predicate ([[graphTombstoned]]) —
+    * the compaction rebuild, one code path with the fresh build. */
+  private[graft] def graphStore(s: org.apache.spark.sql.SparkSession,
+      dir: String, layout: String,
+      variant: String = "full"): Similarity.GraphIndex = {
     graphStoreCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    graphStoreCache.getOrElseUpdate((s, dir, variant), {
+    graphStoreCache.getOrElseUpdate((s, dir, layout, variant), {
       val dirTag = java.lang.Integer.toHexString(
         java.util.Arrays.hashCode(dir.getBytes("UTF-8")))
       val path = s"${sys.props("java.io.tmpdir")}/graft_graphstore_" +
-        s"${new java.io.File(dir).getName}_${dirTag}_$variant"
+        s"${new java.io.File(dir).getName}_${dirTag}_${layout}_$variant"
       val emb = Tables.load(s, dir, "embeddings")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val nodes = variant match {
@@ -4406,9 +4412,16 @@ object Pipeline {
           s"graft: unknown graph-index store variant '$other'")
       }
       val n = nodes.count()
-      val (g, u, e) = Similarity.buildGraphIndexFull(
-        nodes, "embedding", "vec_id", n, k = 12, rounds = 2)
-      Similarity.writeGraphIndex(g, u, e, n, 12, path)
+      val shape = layout match {
+        case "one" => Similarity.GraphLayout.OneShard
+        case "pmod" => Similarity.GraphLayout.Pmod(Similarity.autoShards(n))
+        case "cells" =>
+          Similarity.GraphLayout.Cells(Similarity.autoRoutedShards(n))
+        case other => throw new IllegalArgumentException(
+          s"graft: unknown graph-index store layout '$other'")
+      }
+      Similarity.writeGraphIndex(Similarity.buildGraphIndex(nodes,
+        "embedding", "vec_id", n, shape, k = 12, rounds = 2), path)
       emb.unpersist()
       Similarity.readGraphIndex(s, path)
     })
@@ -4419,8 +4432,8 @@ object Pipeline {
   private val graphTableCache = scala.collection.concurrent.TrieMap
     .empty[(org.apache.spark.sql.SparkSession, String), DataFrame]
 
-  /** The search table of [[graphIndexStore]] "full" over `dir`'s
-    * embeddings, built by the store's first search and kept like the
+  /** The search table of the one-shard "full" [[graphStore]] over
+    * `dir`'s embeddings, built by the store's first search and kept like the
     * store: a later full-store search runs only its beam rounds, not
     * the aggregation of the store's edge lists that is most of a
     * search's jobs and wall time. Only the latest corpus's table is
@@ -4431,19 +4444,19 @@ object Pipeline {
     graphTableCache.filterInPlace((k, _) =>
       k == (s, dir) && !s.sparkContext.isStopped)
     graphTableCache.getOrElseUpdate((s, dir), {
-      val (graph, upper, _, _, _) = graphIndexStore(s, dir, "full")
+      val index = graphStore(s, dir, "one")
       Similarity.searchTable(Tables.load(s, dir, "embeddings"),
-        "embedding", "vec_id", graph, Some(upper))
+        "embedding", "vec_id", index.graph, index.upper)
     })
   }
 
   /** d_ann_graph_full — the UN-CAPPED graph-ANN composition (the
     * scale story the bounded demo keys d_ann_graph* stand in for):
     * the index over the FULL embeddings table is built by
-    * [[Similarity.buildGraphIndexFull]] — corpus-scaled blocked seed
-    * (≈128 rows/block, O(n) pair mass) + two NN-descent rounds
+    * [[Similarity.buildGraphIndex]] in one shard — corpus-scaled
+    * blocked seed (≈128 rows/block, O(n) pair mass) + two NN-descent rounds
     * (O(n·k²) each) at degree k=12, plus the √n uniform-sample upper
-    * layer — PERSISTED once per corpus ([[graphIndexStore]]: parquet
+    * layer — PERSISTED once per corpus ([[graphStore]]: parquet
     * edge lists + shape metadata, bare store rejected) and
     * layer-searched at beam 48 / 6 rounds. Every build stage is
     * LINEAR in the corpus and the search is query-linear, so unlike
@@ -4454,19 +4467,19 @@ object Pipeline {
     * graph: the sweep read 50→74→86→88 recall at sf0.1 for
     * (k8·b24·r4, k8·b48·r6, k12·b48·r6, k16·b48·r6) — degree 16 buys
     * +2 points for 33% more graph mass, rejected; fixing the entry
-    * node off the probe set (see [[Similarity.buildGraphIndexFull]])
+    * node off the probe set (see [[Similarity.buildGraphIndex]])
     * then lifted the chosen shape to 100/94. Rows-only (an
     * NN-descent build is not SQL-replayable);
     * [[dAnnGraphFullRecall]] is the contract. */
   val dAnnGraphFull: QueryDef = QueryDef(
     fn = (s, dir) => {
       val nodes = Tables.load(s, dir, "embeddings")
-      val (graph, upper, entry, _, _) = graphIndexStore(s, dir, "full")
+      val index = graphStore(s, dir, "one")
       // the search returns a local frame: nothing to materialize
       Similarity.graphSearchTopKLayered(nodes,
-          nodes.filter(col("vec_id") < 10), graph, upper,
+          nodes.filter(col("vec_id") < 10), index.graph, index.upper.get,
           "embedding", "vec_id", k = 5, beam = 48, rounds = 6,
-          upperSeed = entry, table = Some(graphFullTable(s, dir)))
+          upperSeed = index.entry, table = Some(graphFullTable(s, dir)))
     },
     oracle = None)
 
@@ -4476,7 +4489,7 @@ object Pipeline {
     * Measured 100% at sf0.01 (n=500) and 90% at sf0.1 (n=2000) under
     * the seeded-hash blocked seed (the id-arithmetic seed read
     * 100/94 but collapsed on structured id spaces at 100× — see
-    * [[Similarity.hashBlockedTopK]]) — above the exact-graph demo
+    * [[Similarity.buildGraphIndex]]) — above the exact-graph demo
     * (dAnnGraphRecall 94/85) because the probe queries are corpus
     * members whose own neighborhoods the NN-descent build already
     * routes well, and NOTHING is capped: the 10× replica row scales
@@ -4487,10 +4500,11 @@ object Pipeline {
       val nodes = Tables.load(s, dir, "embeddings")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val q = nodes.filter(col("vec_id") < 10)
-      val (graph, upper, entry, _, _) = graphIndexStore(s, dir, "full")
-      val approx = Similarity.graphSearchTopKLayered(nodes, q, graph,
-          upper, "embedding", "vec_id", k = 5, beam = 48, rounds = 6,
-          upperSeed = entry, table = Some(graphFullTable(s, dir)))
+      val index = graphStore(s, dir, "one")
+      val approx = Similarity.graphSearchTopKLayered(nodes, q, index.graph,
+          index.upper.get, "embedding", "vec_id", k = 5, beam = 48,
+          rounds = 6, upperSeed = index.entry,
+          table = Some(graphFullTable(s, dir)))
         .select(col("query_id"), col("neighbor_id"), col("cosm"))
       val out = annRecall(approx,
           Similarity.bruteTopK(nodes, q, "embedding", "vec_id", k = 5),
@@ -4507,7 +4521,7 @@ object Pipeline {
     * split is REPLICA-STABLE: an id-threshold split degenerated on
     * replica dirs whose ids are offset by i·10⁸, silently turning
     * the 80/20 scenario into ~10/90) enters the NN-descent index
-    * built — and PERSISTED, [[graphIndexStore]] "base" — over the
+    * built — and PERSISTED, [[graphStore]] "base" — over the
     * other 80% by running the layered search as its insert routine
     * (link to top-12 found); the standard 10-query probe then
     * searches the MERGED graph (base ∪ insert edges — reverse edges
@@ -4523,8 +4537,9 @@ object Pipeline {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val base = nodes.filter(!graphDelta(col("vec_id")))
       val delta = nodes.filter(graphDelta(col("vec_id")))
-      val (baseGraph, baseUpper, entry, _, _) =
-        graphIndexStore(s, dir, "base")
+      val index = graphStore(s, dir, "one", "base")
+      val (baseGraph, baseUpper, entry) =
+        (index.graph, index.upper.get, index.entry)
       val inserts = Similarity.graphSearchTopKLayered(base, delta,
           baseGraph, baseUpper, "embedding", "vec_id", k = 12,
           beam = 48, rounds = 6, upperSeed = entry)
@@ -4585,14 +4600,15 @@ object Pipeline {
     fn = (s, dir) => {
       val nodes = Tables.load(s, dir, "embeddings")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val (graph, upper, entry, _, _) = graphIndexStore(s, dir, "full")
+      val index = graphStore(s, dir, "one")
       val q = nodes.filter(col("vec_id") < 10)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("query_id"))
         .orderBy(col("cosm").desc, col("neighbor_id"))
-      val approx = Similarity.graphSearchTopKLayered(nodes, q, graph,
-          upper, "embedding", "vec_id", k = 15, beam = 48, rounds = 6,
-          upperSeed = entry, table = Some(graphFullTable(s, dir)))
+      val approx = Similarity.graphSearchTopKLayered(nodes, q, index.graph,
+          index.upper.get, "embedding", "vec_id", k = 15, beam = 48,
+          rounds = 6, upperSeed = index.entry,
+          table = Some(graphFullTable(s, dir)))
         .filter(!graphTombstoned(col("neighbor_id")))
         .withColumn("rnk2", row_number().over(w).cast("long"))
         .filter(col("rnk2") <= 5)
@@ -4628,9 +4644,9 @@ object Pipeline {
     * crosses the rebuild threshold (5% here — hnswlib's
     * deleted-fraction heuristic, checked by a loud require so the
     * key can never silently degrade into a no-op), the index is
-    * REBUILT over survivors and persisted ([[graphIndexStore]]
+    * REBUILT over survivors and persisted ([[graphStore]]
     * "compact"). Because the rebuild IS [[Similarity
-    * .buildGraphIndexFull]] over the survivor set — one code path,
+    * .buildGraphIndex]] over the survivor set — one code path,
     * no incremental patching — "rebuilt ≡ fresh build over
     * survivors" holds by construction (the s_mv full-recompute
     * identity; SimilaritySpec pins it structurally). Contracts:
@@ -4653,12 +4669,12 @@ object Pipeline {
         s"graft: compaction leg expects tombstone fraction >= 5% " +
           s"(got ${n - nSurv} of $n) — below the rebuild threshold " +
           "the correct action is to keep the tombstoned index")
-      val (graph, upper, entry, storedN, _) =
-        graphIndexStore(s, dir, "compact")
+      val index = graphStore(s, dir, "one", "compact")
+      val (graph, storedN) = (index.graph, index.n)
       val q = nodes.filter(col("vec_id") < 10)
       val approx = Similarity.graphSearchTopKLayered(survivors, q,
-          graph, upper, "embedding", "vec_id", k = 5, beam = 48,
-          rounds = 6, upperSeed = entry)
+          graph, index.upper.get, "embedding", "vec_id", k = 5, beam = 48,
+          rounds = 6, upperSeed = index.entry)
         .select(col("query_id"), col("neighbor_id"))
         .localCheckpoint(eager = true)
       val brute = Similarity.bruteTopK(survivors, q, "embedding",
@@ -4689,41 +4705,11 @@ object Pipeline {
              TRUE AS tombstones_gone, TRUE AS recall_ok, TRUE AS full_k
       FROM embeddings WHERE vec_id < 10"""))
 
-  private val shardedStoreCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String),
-      (DataFrame, DataFrame, Long, Int, Int)]
-
-  /** Build-once/probe-many for the SHARDED graph index
-    * ([[graphIndexStore]]'s discipline): built at
-    * [[Similarity.autoShards]] shards, persisted via
-    * [[Similarity.writeShardedGraphIndex]], probes read the store —
-    * fan-out shape always comes from the store's own metadata. */
-  private[graft] def shardedGraphStore(
-      s: org.apache.spark.sql.SparkSession, dir: String)
-      : (DataFrame, DataFrame, Long, Int, Int) = {
-    shardedStoreCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    shardedStoreCache.getOrElseUpdate((s, dir), {
-      val dirTag = java.lang.Integer.toHexString(
-        java.util.Arrays.hashCode(dir.getBytes("UTF-8")))
-      val path = s"${sys.props("java.io.tmpdir")}/graft_graphstore_" +
-        s"${new java.io.File(dir).getName}_${dirTag}_sharded"
-      val emb = Tables.load(s, dir, "embeddings")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val n = emb.count()
-      val shards = Similarity.autoShards(n)
-      val (g, entries) = Similarity.buildGraphIndexSharded(
-        emb, "embedding", "vec_id", n, shards, k = 12, rounds = 2)
-      Similarity.writeShardedGraphIndex(g, entries, n, 12, shards, path)
-      emb.unpersist()
-      Similarity.readShardedGraphIndex(s, path)
-    })
-  }
-
   /** d_ann_graph_sharded — the SHARD-PARALLEL graph-ANN deployment
     * (DiskANN/partitioned-HNSW shape): the corpus splits into
     * [[Similarity.autoShards]] pmod-shards, each with its own
     * independent NN-descent subgraph built by ONE distributed pass
-    * ([[Similarity.buildGraphIndexSharded]] — shard isolation is a
+    * ([[Similarity.buildGraphIndex]] — shard isolation is a
     * construction invariant: seed edges are within-shard and the
     * NN-descent 2-hop closure cannot leave a shard, so subgraph
     * builds are embarrassingly parallel with ZERO cross-shard
@@ -4736,16 +4722,16 @@ object Pipeline {
     * right shape while shards stay in the tens, while at corpus
     * scale the ROUTED variant ([[dAnnGraphRouted]]) caps per-query
     * work at w probed shards. Index persisted once
-    * ([[shardedGraphStore]]). Rows-only (NN-descent not
+    * ([[graphStore]] "pmod"). Rows-only (NN-descent not
     * SQL-replayable); [[dAnnGraphShardedRecall]] is the contract. */
   val dAnnGraphSharded: QueryDef = QueryDef(
     fn = (s, dir) => {
       val nodes = Tables.load(s, dir, "embeddings")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val (graph, entries, _, _, shards) = shardedGraphStore(s, dir)
+      val index = graphStore(s, dir, "pmod")
       val out = Similarity.graphSearchTopKSharded(nodes,
-          nodes.filter(col("vec_id") < 10), graph, entries,
-          "embedding", "vec_id", shards, k = 5, beamPerShard = 16,
+          nodes.filter(col("vec_id") < 10), index.graph, index.entries,
+          "embedding", "vec_id", index.shards, k = 5, beamPerShard = 16,
           rounds = 6)
         .localCheckpoint(eager = true)
       nodes.unpersist()
@@ -4766,7 +4752,8 @@ object Pipeline {
       val nodes = Tables.load(s, dir, "embeddings")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val q = nodes.filter(col("vec_id") < 10)
-      val (graph, entries, _, _, shards) = shardedGraphStore(s, dir)
+      val index = graphStore(s, dir, "pmod")
+      val (graph, entries, shards) = (index.graph, index.entries, index.shards)
       val approx = Similarity.graphSearchTopKSharded(nodes, q, graph,
           entries, "embedding", "vec_id", shards, k = 5,
           beamPerShard = 16, rounds = 6)
@@ -4807,67 +4794,27 @@ object Pipeline {
              TRUE AS shard_isolated, TRUE AS entries_cover, TRUE AS full_k
       FROM embeddings WHERE vec_id < 10"""))
 
-  private val routedStoreCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String, String),
-      (DataFrame, DataFrame, Array[Seq[Float]], Long, Int)]
-
-  /** Build-once/probe-many for the ROUTED (k-means-sharded) graph
-    * index: built at [[Similarity.autoRoutedShards]] shards, persisted
-    * via [[Similarity.writeRoutedGraphIndex]] (edge list + entries +
-    * the shard centroids the index is only meaningful with), probes
-    * read the store. Variants as [[graphIndexStore]]: "full" = the
-    * whole embeddings table, "base" = everything but the insert-leg
-    * delta ([[graphDelta]]) — the streaming routed-ingest leg's
-    * starting index, "compact" = survivors of the tombstone
-    * predicate ([[graphTombstoned]]) — the compaction rebuild. */
-  private[graft] def routedGraphStore(
-      s: org.apache.spark.sql.SparkSession, dir: String,
-      variant: String = "full")
-      : (DataFrame, DataFrame, Array[Seq[Float]], Long, Int) = {
-    routedStoreCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    routedStoreCache.getOrElseUpdate((s, dir, variant), {
-      val dirTag = java.lang.Integer.toHexString(
-        java.util.Arrays.hashCode(dir.getBytes("UTF-8")))
-      val path = s"${sys.props("java.io.tmpdir")}/graft_graphstore_" +
-        s"${new java.io.File(dir).getName}_${dirTag}_routed_$variant"
-      val emb = Tables.load(s, dir, "embeddings")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val nodes = variant match {
-        case "full" => emb
-        case "base" => emb.filter(!graphDelta(col("vec_id")))
-        case "compact" => emb.filter(!graphTombstoned(col("vec_id")))
-        case other => throw new IllegalArgumentException(
-          s"graft: unknown routed graph-index store variant '$other'")
-      }
-      val n = nodes.count()
-      val shards = Similarity.autoRoutedShards(n)
-      val (g, entries, cents) = Similarity.buildGraphIndexRouted(
-        nodes, "embedding", "vec_id", shards, k = 12, rounds = 2)
-      Similarity.writeRoutedGraphIndex(g, entries, cents, n, 12, path)
-      emb.unpersist()
-      Similarity.readRoutedGraphIndex(s, path)
-    })
-  }
-
   /** d_ann_graph_routed — ROUTED sharded graph ANN, the query-cost
     * fix for [[dAnnGraphSharded]]'s scatter-gather: that key's search
     * probes EVERY shard and [[Similarity.autoShards]] grows shards
     * linearly with n, so per-query work is corpus-LINEAR at the
     * 100-TB frame (n=10¹⁰ → ~152k shards → ~2.4M candidate cosines
     * per query per round). Here shards are k-means cells
-    * ([[Similarity.buildGraphIndexRouted]] — geometry-aware, which is
+    * ([[Similarity.GraphLayout.Cells]] — geometry-aware, which is
     * what makes routing possible: pmod shards are uniform random
     * subsamples no router can beat), each query probes only its 2
     * nearest-by-centroid shards ([[Similarity.graphSearchTopKRouted]]),
     * and per-query cost is probeShards·beamPerShard·2k —
-    * corpus-INDEPENDENT. Index persisted once ([[routedGraphStore]],
+    * corpus-INDEPENDENT. Index persisted once ([[graphStore]] "cells",
     * centroids stored with the edges). Rows-only (NN-descent + Lloyd
     * not SQL-replayable); [[dAnnGraphRoutedRecall]] is the contract. */
   val dAnnGraphRouted: QueryDef = QueryDef(
     fn = (s, dir) => {
       val nodes = Tables.load(s, dir, "embeddings")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val (graph, entries, cents, _, _) = routedGraphStore(s, dir)
+      val index = graphStore(s, dir, "cells")
+      val (graph, entries, cents) =
+        (index.graph, index.entries, index.centroids.get)
       val out = Similarity.graphSearchTopKRouted(nodes,
           nodes.filter(col("vec_id") < 10), graph, entries, cents,
           "embedding", "vec_id", k = 5, beamPerShard = 16,
@@ -4893,7 +4840,9 @@ object Pipeline {
       val nodes = Tables.load(s, dir, "embeddings")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val q = nodes.filter(col("vec_id") < 10)
-      val (graph, entries, cents, _, _) = routedGraphStore(s, dir)
+      val index = graphStore(s, dir, "cells")
+      val (graph, entries, cents) =
+        (index.graph, index.entries, index.centroids.get)
       val probeShards = 2
       val approx = Similarity.graphSearchTopKRouted(nodes, q, graph,
           entries, cents, "embedding", "vec_id", k = 5,
@@ -4956,7 +4905,9 @@ object Pipeline {
       val nodes = Tables.load(s, dir, "embeddings")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val q = nodes.filter(col("vec_id") < 10)
-      val (graph, entries, cents, _, _) = routedGraphStore(s, dir)
+      val index = graphStore(s, dir, "cells")
+      val (graph, entries, cents) =
+        (index.graph, index.entries, index.centroids.get)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("query_id"))
         .orderBy(col("cosm").desc, col("neighbor_id"))
@@ -4995,7 +4946,7 @@ object Pipeline {
     * index ([[dAnnGraphFullCompactRecall]]'s semantics on the
     * scale-path index): past the 5% tombstone threshold (loud
     * require) the index — cells, centroids, entries, edges — is
-    * REBUILT over survivors ([[routedGraphStore]] "compact": ONE
+    * REBUILT over survivors ([[graphStore]] "cells" "compact": ONE
     * code path with the fresh build, so rebuilt ≡ fresh-over-
     * survivors by construction; the quantizer retrains on survivors,
     * which is what compaction MEANS for a routed index — the cells
@@ -5014,8 +4965,9 @@ object Pipeline {
       require((n - nSurv) * 20 >= n,
         s"graft: routed compaction expects tombstone fraction >= 5% " +
           s"(got ${n - nSurv} of $n)")
-      val (graph, entries, cents, storedN, _) =
-        routedGraphStore(s, dir, "compact")
+      val index = graphStore(s, dir, "cells", "compact")
+      val (graph, entries, cents, storedN) =
+        (index.graph, index.entries, index.centroids.get, index.n)
       val q = nodes.filter(col("vec_id") < 10)
       val approx = Similarity.graphSearchTopKRouted(survivors, q,
           graph, entries, cents, "embedding", "vec_id", k = 5,
@@ -5073,7 +5025,9 @@ object Pipeline {
       val nodes = Tables.load(s, dir, "embeddings")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val q = nodes.filter(col("vec_id") < 10)
-      val (graph, entries, cents, _, _) = routedGraphStore(s, dir)
+      val index = graphStore(s, dir, "cells")
+      val (graph, entries, cents) =
+        (index.graph, index.entries, index.centroids.get)
       val out = annRecall(
           Similarity.graphSearchTopKRoutedFiltered(nodes, q, graph,
             entries, cents, "embedding", "vec_id", "label", k = 5,
@@ -5102,11 +5056,11 @@ object Pipeline {
       val nodes = Tables.load(s, dir, "embeddings")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val q = nodes.filter(col("vec_id") < 10)
-      val (graph, upper, entry, _, _) = graphIndexStore(s, dir, "full")
+      val index = graphStore(s, dir, "one")
       val out = annRecall(
-          Similarity.graphSearchTopKLayeredFiltered(nodes, q, graph,
-            upper, "embedding", "vec_id", "label", k = 5, beam = 96,
-            rounds = 6, upperSeed = entry),
+          Similarity.graphSearchTopKLayeredFiltered(nodes, q, index.graph,
+            index.upper.get, "embedding", "vec_id", "label", k = 5,
+            beam = 96, rounds = 6, upperSeed = index.entry),
           Similarity.bruteTopKFiltered(nodes, q, "embedding",
             "vec_id", "label"),
           0.7)

@@ -245,64 +245,159 @@ object Similarity {
         typedLit(Array.empty[Long]))).as("gids"), col("id"), col("vec")), k)
   }
 
-  /** [[blockedTopK]] with SEEDED-HASH block keys — xxhash64(seed, id)
-    * mod `blocks` for seeds 1 and 2 — the seed the production builds
-    * use. Id arithmetic is only uniform on dense, unstructured ids:
-    * the 100× replica offsets ids by i·10⁸, and at n=160k (B=1250,
-    * which divides 10⁸) `id div B mod B` put EVERY node in two blocks,
-    * a 6.4-billion-pair block. A seeded hash is uniform for any id
-    * structure, and deterministic. Not SQL-replayable: the capped
-    * demo family keeps [[blockedTopK]]. */
-  private[operators] def hashBlockedTopK(nodes: DataFrame,
-      vecCol: String, idCol: String, k: Int, blocks: Int): DataFrame =
-    blockedGroups(nodes, vecCol, idCol, k, Seq(1, 2).map(seed =>
-      pmod(xxhash64(lit(seed), col(idCol)), lit(blocks))))
+  /** How a graph index splits its nodes into shards. Every layout
+    * builds through [[buildGraphIndex]] and is stored by
+    * [[writeGraphIndex]]; a layout fixes only each node's shard, each
+    * shard's size, and what the index keeps beside its edges. */
+  sealed trait GraphLayout
+  object GraphLayout {
+    /** The whole corpus as one shard, plus a ≈√n upper layer whose
+      * entry is the index's single entry: searched by
+      * [[graphSearchTopKLayered]]. */
+    case object OneShard extends GraphLayout
 
-  /** FULL-CORPUS graph-ANN index build, every stage linear in the
-    * corpus:
-    *  - seed: [[hashBlockedTopK]] with ≈`blockRows` rows per block,
-    *    so seed pair mass is O(n·blockRows), never n²;
-    *  - refine: `rounds` [[nnDescentRound]]s, O(n·k²) cosines each
-    *    ([[refine]]);
-    *  - upper layer: a uniform ≈√n id-sample (HNSW's level
-    *    assignment) with its own exact kNN graph — ONE [[groupTopK]]
-    *    group, (√n)² = n cosines in one task.
-    * Returns (baseGraph, upperGraph, entryId): the directed
-    * (query_id, neighbor_id) edge lists for [[graphSearchTopKLayered]]
-    * and the global entry node — the SMALLEST ACTUAL upper-layer id
-    * ≥ 10 (the smallest upper id if there is none), read from the
-    * sampled ids. Staying off the vec_id < 10 probe set matters: the
-    * search's self-filter empties a query's seed beam when the query
-    * IS the entry (measured: probe query 1 returned no rows with
-    * entry 1). `n` is the caller's corpus row count (recounting would
-    * add a job). */
-  def buildGraphIndexFull(nodes: DataFrame, vecCol: String,
-      idCol: String, n: Long, k: Int = 8, rounds: Int = 2,
-      blockRows: Int = 128,
-      upperK: Int = 4): (DataFrame, DataFrame, Long) = {
-    val blocks = math.max(4L, n / blockRows).toInt
-    val g = refine(nodes, hashBlockedTopK(nodes, vecCol, idCol, k = k,
-      blocks = blocks), vecCol, idCol, k, rounds)
-    val upStep = math.max(2L, math.round(math.sqrt(n.toDouble)))
-    val upperNodes = nodes.filter(pmod(col(idCol), lit(upStep)) === 1)
-    val entry = entriesBy(upperNodes, idCol, lit(0)).collect()
-      .headOption.filterNot(_.isNullAt(1)).map(_.getLong(1)).getOrElse(
-        throw new IllegalArgumentException("graft: buildGraphIndexFull " +
-          s"upper layer is empty (n=$n, upStep=$upStep) — no id ≡ 1 mod " +
-          s"$upStep exists in $idCol"))
-    val upperGraph = groupTopK(upperNodes.select(array(lit(0L)).as("gids"),
-        col(idCol).as("id"), col(vecCol).as("vec")), upperK)
-      .select(col("query_id"), col("neighbor_id"))
-    (g, upperGraph, entry)
+    /** `shards` pmod-of-id shards, one entry each: searched by
+      * [[graphSearchTopKSharded]], which probes every shard. */
+    final case class Pmod(shards: Int) extends GraphLayout {
+      require(shards >= 2,
+        s"graft: sharded graph build needs >= 2 shards (got $shards)")
+    }
+
+    /** `shards` trained k-means cells — the IVF coarse quantizer
+      * reused as the shard assignment — one entry per occupied cell,
+      * kept with the cell centroids: searched by
+      * [[graphSearchTopKRouted]]. With pmod shards every shard is a
+      * uniform random subsample, a query's top-k spreads uniformly and
+      * no router can beat probing everything; geometry-aware cells
+      * concentrate a query's true neighbours in a few cells, so a
+      * search probes only the `w` nearest and its per-query cost is
+      * w·beamPerShard·2k, independent of the corpus (the
+      * DiskANN/partitioned-HNSW deployment: cluster the corpus, graph
+      * per cluster, route by centroid). */
+    final case class Cells(shards: Int) extends GraphLayout {
+      require(shards >= 2,
+        s"graft: routed graph build needs >= 2 shards (got $shards)")
+    }
   }
 
-  /** (shard, entry_id): each shard's entry node, its smallest id ≥ 10
-    * — off the vec_id < 10 probe set ([[buildGraphIndexFull]]) — or
-    * its smallest id if it has none. */
+  /** A graph index, built or read from its store: the directed
+    * (query_id, neighbor_id) edge list; the upper layer's edge list
+    * (one-shard layout only); the local (shard, entry_id) table, one
+    * entry per shard; the cell centroids (cells layout only), which
+    * the index is only meaningful with; the node count, the degree
+    * and the shard count. */
+  final case class GraphIndex(graph: DataFrame, upper: Option[DataFrame],
+      entries: DataFrame, centroids: Option[Array[Seq[Float]]], n: Long,
+      k: Int, shards: Int) {
+    /** Shard 0's entry node: where the one-shard index's upper-layer
+      * search starts. `entries` is local, so reading it runs no job. */
+    lazy val entry: Long = entries.collect()(0).getLong(1)
+  }
+
+  /** THE graph-index build, every stage linear in the corpus, for
+    * every [[GraphLayout]]:
+    *  - seed: each node's top-k among the nodes sharing a seed block
+    *    under either of two blockings h ∈ {1, 2}, with block key
+    *    offset(shard) + pmod(xxhash64(h, id), blocks(shard)). A shard
+    *    of c nodes has blocks = max(4, c / `blockRows`), and its offset
+    *    is the block count of the shards before it. So every block
+    *    holds ≈`blockRows` rows (O(n·blockRows) seed pairs, never n²),
+    *    block keys never collide across shards, and every seed edge
+    *    stays inside its shard. Keys are seeded hashes, not id
+    *    arithmetic: the 100× replica offsets ids by i·10⁸, and at
+    *    n=160k (1250 blocks, which divide 10⁸) `id div blocks mod
+    *    blocks` put every node in two blocks, a 6.4-billion-pair block.
+    *    A seeded hash is uniform for any id structure, and
+    *    deterministic; it is not SQL-replayable, so the capped demo
+    *    family keeps [[blockedTopK]];
+    *  - refine: `rounds` [[nnDescentRound]]s, O(n·k²) cosines each
+    *    ([[refine]]). A round's candidates are neighbours and
+    *    neighbours' neighbours, so no round leaves a shard either: one
+    *    pass refines every shard at once, with no cross-shard shuffle
+    *    mass (d_ann_graph_sharded_recall pins the isolation);
+    *  - entries: each shard's smallest id ≥ 10 ([[entriesBy]]);
+    *  - one shard only: the upper layer, a uniform ≈√n id-sample
+    *    (HNSW's level assignment) with its own exact 4-NN graph — ONE
+    *    [[groupTopK]] group, (√n)² = n cosines in one task. The
+    *    entry is the smallest upper id ≥ 10 (the smallest upper id if
+    *    there is none). Staying off the vec_id < 10 probe set matters:
+    *    the search's self-filter empties a query's seed beam when the
+    *    query IS the entry (measured: probe query 1 returned no rows
+    *    with entry 1);
+    *  - cells only: the centroids train on the [[trainQuantizer]]
+    *    sample and one Lloyd step (deterministic, a few KB), and one
+    *    bounded occupancy aggregate sizes each cell:
+    *    under one global block count a cell at c× the average would
+    *    carry c² its share of seed pairs. Empty cells are dropped and
+    *    the rest renumbered: an empty cell is nobody's argmax, so
+    *    dropping it changes no assignment, while keeping it would make
+    *    every probe routed there a silent no-op. So entries cover every
+    *    stored cell 0..m-1; `shards` is the trained count, and the
+    *    index's may be smaller.
+    * `n` is the caller's corpus row count (recounting would add a
+    * job). */
+  def buildGraphIndex(nodes: DataFrame, vecCol: String, idCol: String,
+      n: Long, layout: GraphLayout, k: Int = 8, rounds: Int = 2,
+      blockRows: Int = 128): GraphIndex = {
+    val id = col(idCol)
+    // each node's shard (map-side: no assignment column is shuffled),
+    // each shard's size, and the centroids
+    val (shardOf, sizes, cents) = layout match {
+      case GraphLayout.OneShard => (lit(0), Array(n), None)
+      case GraphLayout.Pmod(shards) =>
+        (pmod(id, lit(shards)).cast("int"), Array.fill(shards)(n / shards),
+          None)
+      case GraphLayout.Cells(shards) =>
+        val trained = trainQuantizer(nodes, vecCol, idCol, shards, 1)
+        val occ = nodes
+          .groupBy(nearestCell(col(vecCol), broadcastCentroids(nodes, trained)))
+          .count().collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
+        val cents = occ.map { case (cell, _) => trained(cell) }
+        require(cents.length >= 2,
+          s"graft: routed graph build collapsed to ${cents.length} " +
+            "occupied cell(s) — the corpus cannot support routing; use " +
+            "the one-shard or pmod layout")
+        (nearestCell(col(vecCol), broadcastCentroids(nodes, cents)),
+          occ.map(_._2), Some(cents))
+    }
+    val blocks = sizes.map(c => math.max(4L, c / blockRows))
+    val offsets = blocks.scanLeft(0L)(_ + _)
+    val seed = blockedGroups(nodes, vecCol, idCol, k, Seq(1, 2).map(h =>
+      typedLit(offsets).getItem(shardOf) +
+        pmod(xxhash64(lit(h), id), typedLit(blocks).getItem(shardOf))))
+    val graph = refine(nodes, seed, vecCol, idCol, k, rounds)
+    val upStep = math.max(2L, math.round(math.sqrt(n.toDouble)))
+    val upperNodes = Option.when(layout == GraphLayout.OneShard)(
+      nodes.filter(pmod(id, lit(upStep)) === 1))
+    val entries = entriesBy(upperNodes.getOrElse(nodes), idCol, shardOf)
+    require(upperNodes.isEmpty || entries.collect().nonEmpty, "graft: " +
+      s"graph-index upper layer is empty (n=$n, upStep=$upStep) — no id ≡ 1 mod " +
+      s"$upStep exists in $idCol")
+    val upper = upperNodes.map(u => groupTopK(u.select(array(lit(0L))
+      .as("gids"), id.as("id"), col(vecCol).as("vec")), 4)
+      .select(col("query_id"), col("neighbor_id")))
+    GraphIndex(graph, upper, entries, cents, n, k,
+      cents.fold(sizes.length)(_.length))
+  }
+
+  /** Each shard's entry node, (shard, entry_id): its smallest id ≥ 10
+    * — off the vec_id < 10 probe set ([[buildGraphIndex]]) — or its
+    * smallest id if it has none. */
   private def entriesBy(nodes: DataFrame, idCol: String,
       shard: Column): DataFrame =
-    nodes.groupBy(shard.as("shard")).agg(coalesce(
-      min(when(col(idCol) >= 10, col(idCol))), min(col(idCol))).as("entry_id"))
+    localEntries(nodes.groupBy(shard.as("shard")).agg(coalesce(
+      min(when(col(idCol) >= 10, col(idCol))), min(col(idCol))).as("entry_id")))
+
+  private val EntrySchema = "shard INT, entry_id BIGINT"
+
+  /** An entry table collected (one job, a row per shard) into a local
+    * frame by shard, null shards and entries dropped: reading it later
+    * runs no job. */
+  private def localEntries(entries: DataFrame): DataFrame =
+    entries.sparkSession.createDataFrame(entries
+      .select(col("shard").cast("int"), col("entry_id").cast("long"))
+      .collect().filterNot(r => r.isNullAt(0) || r.isNullAt(1))
+      .sortBy(_.getInt(0)).toSeq.asJava, StructType.fromDDL(EntrySchema))
 
   /** The build loop every graph index shares: the seed, then `rounds`
     * [[nnDescentRound]]s. Nothing is checkpointed: each stage's edge
@@ -317,150 +412,92 @@ object Similarity {
     }
 
   /** Column-metadata key carrying the shape a graph-index store was
-    * written with — (entry, k, n) — so a probe always uses the
-    * STORE's own entry node and degree instead of trusting the
-    * caller to re-specify them identically
-    * ([[graft.operators.Dedup.SignatureShapeKey]]'s discipline for
-    * the vector index). */
+    * written with — (k, n, shards, has upper layer, has centroids) — so
+    * a search always uses the STORE's own entries, shard count and
+    * quantizer instead of trusting the caller to re-specify them
+    * identically ([[graft.operators.Dedup.SignatureShapeKey]]'s
+    * discipline for the vector index). */
   private[graft] val GraphIndexShapeKey = "graft.graphstore.shape"
 
-  /** Persist a [[buildGraphIndexFull]] result: base edge list →
-    * `path`/graph, upper edge list → `path`/upper, with (entry, k, n)
-    * in the base list's `query_id` column metadata (parquet
-    * round-trips field metadata — the [[Dedup.signatureStore]]
-    * device). THE production shape for graph ANN: an index is built
-    * once and probed many times, so search/insert/delete/compact
-    * paths read the store instead of re-running the O(n·k²) NN
-    * descent per query batch. At 100 TB the edge lists are
-    * corpus-sized parquet — partition them by pmod(query_id) if the
-    * adjacency join becomes shuffle-bound. */
-  def writeGraphIndex(graph: DataFrame, upper: DataFrame, entry: Long,
-      n: Long, k: Int, path: String): Unit = {
-    writeEdges(graph, GraphIndexShapeKey, s"$entry,$k,$n", path)
-    upper.select(col("query_id"), col("neighbor_id"))
-      .write.mode("overwrite").parquet(s"$path/upper")
-  }
-
-  /** Read a [[writeGraphIndex]] store back: (graph, upper, entry, n,
-    * k). A bare store — no shape metadata on `query_id` — is rejected
-    * loudly, never probed with a guessed entry node (searching from a
-    * non-upper-layer entry silently returns an empty beam, the worst
-    * failure mode: wrong results, no error). */
-  def readGraphIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): (DataFrame, DataFrame, Long, Long, Int) = {
-    val (g, Array(entry, k, n)) = readEdges(spark, path,
-      GraphIndexShapeKey, "writeGraphIndex", "seed from a guessed entry node")
-    (g, spark.read.parquet(s"$path/upper"), entry.toLong, n.toLong,
-      k.toInt)
-  }
-
-  /** Write an edge list to `path`/graph with its store's shape in the
-    * `query_id` column metadata under `key` (parquet round-trips field
-    * metadata — the [[Dedup.signatureStore]] device). */
-  private def writeEdges(graph: DataFrame, key: String, shape: String,
-      path: String): Unit = {
+  /** Persist a [[GraphIndex]] under `path`: the edge list (graph/) with
+    * the shape in its `query_id` column metadata (parquet round-trips
+    * field metadata — the [[Dedup.signatureStore]] device), the entry
+    * table (entries/), and the upper layer (upper/) and centroids
+    * (centroids/) when the layout has them. THE production shape for
+    * graph ANN: an index is built once and probed many times, so
+    * search/insert/delete/compact paths read the store instead of
+    * re-running the O(n·k²) NN-descent per query batch. Storing the
+    * centroids with the edges binds a routed index to the exact
+    * quantizer that assigned its cells. At 100 TB the edge list is
+    * corpus-sized parquet: partition it by shard, so each shard's
+    * subgraph is one partition-pruned read. */
+  def writeGraphIndex(index: GraphIndex, path: String): Unit = {
+    val shape = Seq(index.k, index.n, index.shards, index.upper.isDefined,
+      index.centroids.isDefined).mkString(",")
     val meta = new org.apache.spark.sql.types.MetadataBuilder()
-      .putString(key, shape).build()
-    graph.select(col("query_id").as("query_id", meta), col("neighbor_id"))
+      .putString(GraphIndexShapeKey, shape).build()
+    index.graph.select(col("query_id").as("query_id", meta), col("neighbor_id"))
       .write.mode("overwrite").parquet(s"$path/graph")
+    index.entries.write.mode("overwrite").parquet(s"$path/entries")
+    index.upper.foreach(_.write.mode("overwrite").parquet(s"$path/upper"))
+    val spark = index.graph.sparkSession
+    import spark.implicits._
+    index.centroids.foreach(cents => cents.zipWithIndex.toSeq
+      .map { case (c, i) => (i, c.map(_.toFloat)) }.toDF("shard", "centroid")
+      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids"))
   }
 
-  /** Read a [[writeEdges]] edge list back with its shape fields; a
-    * store without the shape is rejected loudly, never probed with a
-    * guessed one (the search would `guess`, silently). */
-  private def readEdges(spark: org.apache.spark.sql.SparkSession,
-      path: String, key: String, writer: String,
-      guess: String): (DataFrame, Array[String]) = {
+  /** Read a [[writeGraphIndex]] store back. A bare store — no shape
+    * metadata on `query_id` — is rejected loudly, never searched with a
+    * guessed entry node, shard count or quantizer (searching from a
+    * non-upper-layer entry silently returns an empty beam, the worst
+    * failure mode: wrong results, no error). So is a centroid table
+    * whose shard ids are not exactly 0..shards-1: a truncated centroid
+    * read would silently mis-route every query. The parts beside the
+    * edge list are read with their known schemas: inferring one is a
+    * Spark job each. */
+  def readGraphIndex(spark: org.apache.spark.sql.SparkSession,
+      path: String): GraphIndex = {
     val g = spark.read.parquet(s"$path/graph")
-    val meta = g.schema.find(_.name == "query_id").getOrElse(
-      throw new IllegalArgumentException("graft: graph-index store " +
-        s"needs a query_id column (see Similarity.$writer)")).metadata
-    require(meta.contains(key), "graft: graph-index store carries no " +
-      s"shape metadata — rebuild it with Similarity.$writer, or the " +
-      s"search would silently $guess")
-    (g, meta.getString(key).split(","))
-  }
-
-  /** Default shard count for [[buildGraphIndexSharded]]: one shard
-    * per ≈64k nodes, floor 4 — per-shard build state (seed blocks +
-    * NN-descent adjacency) stays bounded however large the corpus,
-    * which is the property that lets every executor build its shards
-    * without cross-shard traffic. Fan-out cost at search time grows
-    * with the shard count (each query carries shards·beamPerShard
-    * beam rows) — fine while shards stay in the tens, but since this
-    * law grows shards linearly with n, per-query cost is
-    * corpus-LINEAR at the 100-TB frame; the scale path for SEARCH is
-    * the ROUTED index ([[buildGraphIndexRouted]]): geometry-aware
-    * shards + centroid routing make per-query cost
-    * corpus-independent. */
-  def autoShards(n: Long): Int = math.max(4L, n / 65536L + 1L).toInt
-
-  /** SHARD-PARALLEL graph-ANN build — the multi-executor composition
-    * [[buildGraphIndexFull]]'s monolithic build trades away: the
-    * corpus splits into `shards` disjoint pmod-shards, each with its
-    * OWN NN-descent subgraph. Every seed edge stays inside one shard,
-    * and NN-descent candidates are neighbors and neighbors-of-
-    * neighbors of existing edges, so no round can leave a shard
-    * either: ONE pass of the ordinary [[nnDescentRound]] over the
-    * union edge list refines every shard at once (shard isolation is
-    * a construction invariant; d_ann_graph_sharded_recall pins it) —
-    * the DiskANN/partitioned-HNSW deployment shape.
-    *
-    * Seed: [[hashBlockedTopK]]'s two seeded-hash blockings, prefixed
-    * by the shard id, ≈`blockRows` rows per block — O(n·blockRows)
-    * seed pairs, as in the full build.
-    *
-    * Returns (graph, entries): the union edge list plus one entry node
-    * per shard ([[entriesBy]]). Search fans out with
-    * [[graphSearchTopKSharded]]. */
-  def buildGraphIndexSharded(nodes: DataFrame, vecCol: String,
-      idCol: String, n: Long, shards: Int, k: Int = 8,
-      rounds: Int = 2, blockRows: Int = 128): (DataFrame, DataFrame) = {
-    require(shards >= 2,
-      s"graft: sharded graph build needs >= 2 shards (got $shards)")
-    val bps = math.max(4L, (n / shards) / blockRows)
-    // both blockings prefix with the shard id, so block keys never
-    // collide across shards and every seed edge is within-shard;
-    // within-shard keys are seeded hashes (id arithmetic collapses
-    // on structured id spaces — see hashBlockedTopK)
-    val id = col(idCol)
-    val seed = blockedGroups(nodes, vecCol, idCol, k, Seq(1, 2).map(h =>
-      pmod(id, lit(shards)) * bps + pmod(xxhash64(lit(h), id), lit(bps))))
-    (refine(nodes, seed, vecCol, idCol, k, rounds),
-      entriesBy(nodes, idCol, pmod(col(idCol), lit(shards))))
-  }
-
-  /** Column-metadata key for a [[writeShardedGraphIndex]] store:
-    * (k, n, shards). */
-  private[graft] val ShardedGraphShapeKey = "graft.graphstore.sharded.shape"
-
-  /** Persist a [[buildGraphIndexSharded]] result — edge list +
-    * per-shard entry table, (k, n, shards) in the edge list's
-    * `query_id` metadata so a probe always fans out with the STORE's
-    * own shard count (a mismatched count would mis-route pmod shard
-    * assignment silently). At 100 TB the natural layout partitions
-    * the edge parquet BY shard — each shard's subgraph is then one
-    * partition-pruned read. */
-  def writeShardedGraphIndex(graph: DataFrame, entries: DataFrame,
-      n: Long, k: Int, shards: Int, path: String): Unit = {
-    writeEdges(graph, ShardedGraphShapeKey, s"$k,$n,$shards", path)
-    entries.select(col("shard"), col("entry_id"))
-      .write.mode("overwrite").parquet(s"$path/entries")
-  }
-
-  /** Read a [[writeShardedGraphIndex]] store: (graph, entries, n, k,
-    * shards). Bare stores rejected, as in [[readGraphIndex]]. */
-  def readShardedGraphIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): (DataFrame, DataFrame, Long, Int, Int) = {
-    val (g, Array(k, n, shards)) = readEdges(spark, path,
-      ShardedGraphShapeKey, "writeShardedGraphIndex",
-      "fan out with a guessed shard count")
-    (g, spark.read.parquet(s"$path/entries"), n.toLong, k.toInt,
+    val meta = g.schema.find(_.name == "query_id").map(_.metadata)
+      .filter(_.contains(GraphIndexShapeKey))
+    require(meta.isDefined, "graft: graph-index store carries no shape " +
+      "metadata — rebuild it with Similarity.writeGraphIndex, or a " +
+      "search would silently start from a guessed entry node, shard " +
+      "count or quantizer")
+    val Array(k, n, shards, hasUpper, hasCents) =
+      meta.get.getString(GraphIndexShapeKey).split(",")
+    def part(name: String, schema: String): DataFrame =
+      spark.read.schema(schema).parquet(s"$path/$name")
+    val cents = Option.when(hasCents.toBoolean) {
+      val rows = part("centroids", "shard INT, centroid ARRAY<FLOAT>")
+        .orderBy(col("shard")).collect()
+      require(rows.length == shards.toInt &&
+        rows.zipWithIndex.forall { case (r, i) => r.getInt(0) == i },
+        s"graft: graph-index centroid table is not 0..${shards.toInt - 1}")
+      rows.map(_.getSeq[Float](1).toSeq)
+    }
+    GraphIndex(g, Option.when(hasUpper.toBoolean)(
+        part("upper", "query_id BIGINT, neighbor_id BIGINT")),
+      localEntries(part("entries", EntrySchema)), cents, n.toLong, k.toInt,
       shards.toInt)
   }
 
-  /** Default shard count for [[buildGraphIndexRouted]]: same growth
-    * law as [[autoShards]] but floor 12 — routing needs enough cells
+  /** Default shard count for the pmod layout: one shard per ≈64k
+    * nodes, floor 4 — per-shard build state (seed blocks + NN-descent
+    * adjacency) stays bounded however large the corpus, which is the
+    * property that lets every executor build its shards without
+    * cross-shard traffic. Fan-out cost at search time grows with the
+    * shard count (each query carries shards·beamPerShard beam rows) —
+    * fine while shards stay in the tens, but since this law grows
+    * shards linearly with n, per-query cost is corpus-LINEAR at the
+    * 100-TB frame; the scale path for SEARCH is the cells layout:
+    * geometry-aware shards + centroid routing make per-query cost
+    * corpus-independent. */
+  def autoShards(n: Long): Int = math.max(4L, n / 65536L + 1L).toInt
+
+  /** Default shard count for the cells layout: same growth law as
+    * [[autoShards]] but floor 12 — routing needs enough cells
     * that probing a quarter of them is a real cut even at demo
     * corpus sizes, and the measured recall knee sits there (the
     * embedding space's latent cluster structure resolves at ~12
@@ -472,137 +509,7 @@ object Similarity {
   def autoRoutedShards(n: Long): Int =
     math.max(12L, n / 65536L + 1L).toInt
 
-  /** ROUTED shard-parallel graph-ANN build — the fix for the
-    * scatter-gather search's corpus-linear query cost: shards are
-    * GEOMETRY-AWARE (k-means cells over the embedding space, the IVF
-    * coarse quantizer reused as the shard assignment) instead of
-    * pmod-of-id, so a query's true neighbors concentrate in a few
-    * shards and search probes only the `w` nearest-by-centroid
-    * shards ([[graphSearchTopKRouted]]) — per-query cost becomes
-    * w·beamPerShard·2k, INDEPENDENT of the shard count and hence of
-    * the corpus (with pmod shards every shard is a uniform random
-    * subsample, a query's top-k spreads uniformly, and NO router can
-    * beat probing everything — geometry-aware assignment is what
-    * makes routing possible at all; this is the DiskANN/partitioned-
-    * HNSW deployment: cluster the corpus, graph per cluster, route
-    * by centroid).
-    *
-    * Build dataflow is [[buildGraphIndexSharded]]'s with the shard
-    * prefix swapped: assignment is one map-side [[NearestCentroid]]
-    * projection (no shuffle), seed blockings are seeded-hash blocks
-    * PREFIXED by the assigned shard, so every seed edge is
-    * within-shard and the NN-descent 2-hop closure stays
-    * shard-closed — one distributed pass refines all shards' graphs,
-    * zero cross-shard shuffle mass. Per-cell block counts come from
-    * MEASURED occupancy (one bounded aggregate), so every seed block
-    * holds ≈`blockRows` rows however skewed the quantizer's cells —
-    * under an average-based global count a cell at c× the average
-    * would carry c² its share of seed pairs, the quadratic-in-one-
-    * reducer shape [[hashBlockedTopK]] exists to prevent. Centroids
-    * train on the [[trainQuantizer]] sample + Lloyd budget —
-    * deterministic, a few KB on the driver.
-    *
-    * Returns (graph, entries, centroids): the union edge list, one
-    * entry per stored cell (EVERY stored cell is occupied — empty
-    * trained cells are dropped and the rest renumbered, see the
-    * occupancy note in the body; entry = smallest in-cell id ≥ 10,
-    * the off-probe-set discipline), and the cell centroids the index
-    * is only meaningful with (persist all three together —
-    * [[writeRoutedGraphIndex]]). `shards` is the TRAINED cell count;
-    * the returned quantizer may be smaller if training left cells
-    * empty. */
-  def buildGraphIndexRouted(nodes: DataFrame, vecCol: String,
-      idCol: String, shards: Int, k: Int = 8,
-      rounds: Int = 2, blockRows: Int = 128, lloydIters: Int = 1)
-      : (DataFrame, DataFrame, Array[Seq[Float]]) = {
-    require(shards >= 2,
-      s"graft: routed graph build needs >= 2 shards (got $shards)")
-    val trained = trainQuantizer(nodes, vecCol, idCol, shards, lloydIters)
-    val refAll = broadcastCentroids(nodes, trained)
-    // Occupancy over the TRAINED cells — one bounded aggregate (≤
-    // shards rows to the driver): it finds EMPTY cells, sizes per-cell
-    // seed blocks, and orders the renumbering. Empty cells are DROPPED
-    // from the stored quantizer: an empty cell is nobody's argmax, so
-    // dropping it changes no assignment, while keeping it would make
-    // every probe routed there a SILENT no-op (no entry to seed). So
-    // entries cover every stored cell 0..m-1 by construction.
-    val occAll = nodes
-      .groupBy(nearestCell(col(vecCol), refAll).as("shard")).count()
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-    val cents = occAll.map { case (sh, _) => trained(sh) }
-    require(cents.length >= 2,
-      s"graft: routed graph build collapsed to ${cents.length} " +
-        "occupied cell(s) — the corpus cannot support routing; use " +
-        "the monolithic or pmod-sharded build")
-    val centRef = broadcastCentroids(nodes, cents)
-    def shardOf(v: Column): Column = nearestCell(v, centRef)
-    // Per-cell block counts from the MEASURED occupancy: k-means cells
-    // skew, and under one global count a cell at c× the average
-    // carries c² its share of seed pairs. Cumulative offsets keep
-    // block ids globally unique; the lookup is a broadcast join on the
-    // cell id. (shardOf is re-evaluated map-side per consumer — cheaper
-    // at corpus scale than shuffling an assignment column back.)
-    val occ = occAll.zipWithIndex.map { case ((_, c), i) => (i, c) }
-    val bpsByShard = occ.map { case (sh, c) =>
-      (sh, math.max(4L, c / blockRows)) }
-    val offsets = bpsByShard.scanLeft(0L)(_ + _._2)
-    val spark0 = nodes.sparkSession
-    import spark0.implicits._
-    val shardBlocks = broadcast(bpsByShard.zip(offsets).toSeq
-      .map { case ((sh, bps), off) => (sh, bps, off) }
-      .toDF("blk_shard", "blk_bps", "blk_off"))
-    val tagged = nodes
-      .withColumn("blk_shard", shardOf(col(vecCol)))
-      .join(shardBlocks, Seq("blk_shard"))
-    val seed = blockedGroups(tagged, vecCol, idCol, k, Seq(1, 2).map(h =>
-      col("blk_off") + pmod(xxhash64(lit(h), col(idCol)), col("blk_bps"))))
-    (refine(nodes, seed, vecCol, idCol, k, rounds),
-      entriesBy(nodes, idCol, shardOf(col(vecCol))), cents)
-  }
-
-  /** Column-metadata key for a [[writeRoutedGraphIndex]] store:
-    * (k, n, shards). */
-  private[graft] val RoutedGraphShapeKey = "graft.graphstore.routed.shape"
-
-  /** Persist a [[buildGraphIndexRouted]] result — edge list, entry
-    * table, and the SHARD CENTROIDS (a routed index is only
-    * meaningful with the exact quantizer that assigned its shards:
-    * storing them together is what makes the binding inherent, the
-    * ivfPqTopK fingerprint lesson without needing a stamp). Shape
-    * metadata on the edge list as in [[writeShardedGraphIndex]]. */
-  def writeRoutedGraphIndex(graph: DataFrame, entries: DataFrame,
-      cents: Array[Seq[Float]], n: Long, k: Int, path: String): Unit = {
-    writeEdges(graph, RoutedGraphShapeKey, s"$k,$n,${cents.length}", path)
-    entries.select(col("shard"), col("entry_id"))
-      .write.mode("overwrite").parquet(s"$path/entries")
-    val spark = graph.sparkSession
-    import spark.implicits._
-    cents.zipWithIndex.toSeq
-      .map { case (c, i) => (i, c.map(_.toFloat)) }
-      .toDF("shard", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-  }
-
-  /** Read a [[writeRoutedGraphIndex]] store: (graph, entries,
-    * centroids, n, k). Bare stores rejected; a centroid table whose
-    * shard ids are not exactly 0..shards-1 is rejected too — a
-    * truncated centroid read would silently mis-route every query. */
-  def readRoutedGraphIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): (DataFrame, DataFrame, Array[Seq[Float]], Long, Int) = {
-    val (g, Array(k, n, shards)) = readEdges(spark, path,
-      RoutedGraphShapeKey, "writeRoutedGraphIndex",
-      "route with a guessed quantizer")
-    val centRows = spark.read.parquet(s"$path/centroids")
-      .orderBy(col("shard")).collect()
-    require(centRows.length == shards.toInt &&
-      centRows.zipWithIndex.forall { case (r, i) => r.getInt(0) == i },
-      s"graft: routed graph-index centroid table is not 0..${shards.toInt - 1}")
-    val cents: Array[Seq[Float]] =
-      centRows.map(_.getSeq[Float](1).toSeq)
-    (g, spark.read.parquet(s"$path/entries"), cents, n.toLong, k.toInt)
-  }
-
-  /** Per-query shard ROUTE for a [[buildGraphIndexRouted]] index: the
+  /** Per-query shard ROUTE for a routed index ([[GraphLayout.Cells]]): the
     * `w` nearest shards by query-to-centroid cosine — (query_id,
     * shard). One map-side kernel over the (few) query rows; the
     * contract key pins the route the search actually took by
@@ -654,7 +561,7 @@ object Similarity {
     nodes.select(col(idCol).as("id"),
       cellColumn(nodes, vecCol, cents).as("shard"))
 
-  /** Search a [[buildGraphIndexRouted]] index within each query's
+  /** Search a routed index ([[GraphLayout.Cells]]) within each query's
     * own ASSIGNED cell only — the INSERT primitive: routing goes
     * through [[shardAssign]] (the exact argmax the build used), not
     * the rounded multi-probe ranking, so a search-as-insert's edges
@@ -677,7 +584,7 @@ object Similarity {
       vecCol, idCol, k, beamPerShard, rounds, table)
   }
 
-  /** Search a [[buildGraphIndexRouted]] index: route each query to
+  /** Search a routed index ([[GraphLayout.Cells]]): route each query to
     * its `probeShards` nearest shard centroids ([[routedShards]] —
     * the IVF multi-probe device), seed a beam at ONLY those shards'
     * entries, and keep per-(query, shard) beams — candidates cannot
@@ -843,7 +750,7 @@ object Similarity {
     labelPruneRerank(cand, nodes, queries, idCol, labelCol, k)
   }
 
-  /** Fan-out-and-merge search over a [[buildGraphIndexSharded]]
+  /** Fan-out-and-merge search over a pmod-sharded ([[GraphLayout.Pmod]])
     * index: every query seeds a beam at EVERY shard's entry node, and
     * beams are kept per (query, shard-of-candidate), so each shard's
     * greedy search proceeds independently inside the same rounds (a
@@ -1892,7 +1799,7 @@ object Similarity {
     * shortlist distance-faithful without looking at the data, at the
     * cost of ignoring the corpus's actual anisotropy: at r=32 RP
     * recalls 0.92/0.78 with a 200-deep shortlist where PCA reads
-    * 1.0/0.84 at HALF the shortlist (tools/Sq8Probe sweep) — the
+    * 1.0/0.84 at HALF the shortlist (SURVEY §17 sweep) — the
     * default shortlist is 2x PCA's for exactly that reason. */
   def rpTopK(corpus: DataFrame, queries: DataFrame,
       vecCol: String, idCol: String, k: Int = 5, shortlist: Int = 200,

@@ -735,8 +735,8 @@ object StreamQueries {
   /** s_ann_ingest — STREAMING ANN index maintenance, the
     * lambda-closing leg for the graph-ANN family exactly as [[sMv]]
     * closes it for MVs and [[sMerge]] for CDC upserts: the 80% base
-    * index is built once and persisted (Pipeline.graphIndexStore
-    * "base" — the same store the batch insert leg probes), the 20%
+    * index is built once and persisted (Pipeline.graphStore
+    * "one" "base" — the same store the batch insert leg probes), the 20%
     * delta (vec_id ≡ 4 mod 5) streams in as 4 delivery-ordered
     * micro-batch files, and each batch enters the index through
     * [[insertAnnBatch]] — layered search-as-insert against the BASE
@@ -757,7 +757,7 @@ object StreamQueries {
       def rmTree(f: java.io.File): Unit = {
         Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
       }
-      // dirTag in the path (graphIndexStore's discipline): two data
+      // dirTag in the path (graphStore's discipline): two data
       // dirs sharing a basename must not collide on the tmp store —
       // the unconditional rmTree would corrupt the other run's chain
       val dirTag = java.lang.Integer.toHexString(
@@ -772,8 +772,9 @@ object StreamQueries {
       val baseNodes = emb.filter(!Pipeline.graphDelta(col("vec_id")))
       val delta = emb.filter(Pipeline.graphDelta(col("vec_id")))
       val nDelta = delta.count()
-      val (baseGraph, baseUpper, entry, _, _) =
-        Pipeline.graphIndexStore(s, dir, "base")
+      val index = Pipeline.graphStore(s, dir, "one", "base")
+      val (baseGraph, baseUpper, entry) =
+        (index.graph, index.upper.get, index.entry)
       // anchor the chain with the base edges (v0 = the stored index)
       baseGraph.select(col("query_id"), col("neighbor_id"))
         .write.mode("overwrite").parquet(s"$base/store/v0")
@@ -865,7 +866,7 @@ object StreamQueries {
     * survives corpus growth (per-query cost independent of shard
     * count), its maintenance loop must too. The 80% base routed
     * index is built once and persisted
-    * ([[Pipeline.routedGraphStore]] "base"); the 20% delta streams
+    * ([[Pipeline.graphStore]] "cells" "base"); the 20% delta streams
     * in 4 delivery-ordered micro-batches; each batch enters through
     * [[insertAnnBatchRouted]] — cell assignment is one map-side
     * NearestCentroid projection against the STORE's quantizer, the
@@ -899,8 +900,9 @@ object StreamQueries {
       // a locally re-spelled split could silently diverge from it
       val delta = emb.filter(Pipeline.graphDelta(col("vec_id")))
       val nDelta = delta.count()
-      val (baseGraph, entries, cents, _, _) =
-        Pipeline.routedGraphStore(s, dir, "base")
+      val index = Pipeline.graphStore(s, dir, "cells", "base")
+      val (baseGraph, entries, cents) =
+        (index.graph, index.entries, index.centroids.get)
       val baseNodes = emb.filter(!Pipeline.graphDelta(col("vec_id")))
       baseGraph.select(col("query_id"), col("neighbor_id"))
         .write.mode("overwrite").parquet(s"$base/store/v0")
@@ -980,7 +982,7 @@ object StreamQueries {
     * as the batch compaction leg, so the key can never silently
     * degrade into a no-op — and compaction triggers: the index is
     * REBUILT over survivors (ONE code path with the batch leg —
-    * [[Pipeline.graphIndexStore]] "compact") and the standard probe
+    * [[Pipeline.graphStore]] "one" "compact") and the standard probe
     * set searches the compacted store PLAIN k-deep (no oversampling,
     * the operational payoff). Contracts: recall ≥ 0.8 vs brute over
     * survivors, `tombstones_gone` (zero edges incident to a streamed
@@ -1030,8 +1032,9 @@ object StreamQueries {
         s"graft: streamed tombstone fraction under the 5% rebuild " +
           s"threshold (got $nTomb of $n) — below it the correct " +
           "action is mark-deleted search, not compaction")
-      val (graph, upper, entry, storedN, _) =
-        Pipeline.graphIndexStore(s, dir, "compact")
+      val index = Pipeline.graphStore(s, dir, "one", "compact")
+      val (graph, upper, entry, storedN) =
+        (index.graph, index.upper.get, index.entry, index.n)
       val survivors = emb.join(tombAll, Seq("vec_id"), "left_anti")
       val qs = emb.filter(col("vec_id") < 10)
       val approx = Similarity.graphSearchTopKLayered(survivors, qs,

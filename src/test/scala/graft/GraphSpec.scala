@@ -213,17 +213,17 @@ class GraphSpec extends SparkSpec {
     import spark.implicits._
     // a 12-hop chain at rounds = 12 — the depth where the UNCUT
     // dual-consumer loop's plan tree would have doubled 12 times;
-    // bfs (cut) must equal an inline uncut reference loop exactly
+    // bfs (cut) must equal the same loop over plain Scala maps exactly
     val chain = (1L to 12L).map(i => (i, i + 1))
-    val edges = (chain ++ chain.map(_.swap)).toDF("src", "dst")
+    val pairs = chain ++ chain.map(_.swap)
+    val edges = pairs.toDF("src", "dst")
     val sources = Seq(1L).toDF("node")
-    var ref = sources.select(col("node"), lit(0L).as("d"))
-    for (_ <- 1 to 12)
-      ref = ref.union(
-        edges.as("e").join(ref.as("l"), col("e.dst") === col("l.node"))
-          .select(col("e.src").as("node"), (col("l.d") + 1).as("d")))
-        .groupBy(col("node")).agg(min(col("d")).as("d"))
-    val want = ref.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // each round: dist ∪ {(src, d + 1) | (src, dst) an edge, dst in
+    // dist}, keeping each node's minimum d
+    val want = (1 to 12).foldLeft(Map(1L -> 0L)) { (dist, _) =>
+      (dist.toSeq ++ pairs.collect { case (src, dst) if dist.contains(dst) =>
+        src -> (dist(dst) + 1) }).groupMapReduce(_._1)(_._2)(math.min)
+    }
     val got = Graph.bfs(edges, sources, rounds = 12)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === want)

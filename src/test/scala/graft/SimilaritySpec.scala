@@ -739,8 +739,7 @@ class SimilaritySpec extends SparkSpec {
     import org.apache.spark.sql.graft.Bridge
     val nodes = emb.localCheckpoint(true)
     val n = nodes.count()
-    val (g, u, e) = Similarity.buildGraphIndexFull(nodes, "embedding",
-      "vec_id", n, k = 12, rounds = 2)
+    val (g, u, e) = oneShard(nodes, n, k = 12, rounds = 2)
     val (graph, upper) = (g.localCheckpoint(true), u.localCheckpoint(true))
     val q = nodes.filter(col("vec_id") < 10)
     val (rounds, upperRounds) = (6, 1)
@@ -841,8 +840,7 @@ class SimilaritySpec extends SparkSpec {
     import graft.operators.Pipeline
     val nodes = graft.Tables.load(spark, sf, "embeddings")
     val n = nodes.count()
-    val (g, ug, entry) = Similarity.buildGraphIndexFull(
-      nodes, "embedding", "vec_id", n, k = 12, rounds = 2)
+    val (g, ug, entry) = oneShard(nodes, n, k = 12, rounds = 2)
     // the base graph covers (nearly) every node at out-degree <= 12
     val deg = g.groupBy(col("query_id")).agg(count(lit(1)).as("d")).collect()
     assert(deg.length.toLong >= n - 1)
@@ -862,8 +860,7 @@ class SimilaritySpec extends SparkSpec {
     // landed INSIDE the vec_id < 10 probe set; the derived entry must
     // stay off it whenever any upper id >= 10 exists
     val tiny = nodes.filter(col("vec_id") < 20)
-    val (_, tinyUg, tinyEntry) = Similarity.buildGraphIndexFull(
-      tiny, "embedding", "vec_id", 20, k = 4, rounds = 1)
+    val (_, tinyUg, tinyEntry) = oneShard(tiny, 20, k = 4, rounds = 1)
     assert(tinyEntry >= 10L,
       s"tiny-corpus entry $tinyEntry is inside the probe set")
     assert(tinyUg.select(col("query_id")).distinct().collect()
@@ -894,39 +891,58 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("graph-index store round-trips edges and shape; bare store rejected; compaction = fresh build over survivors") {
+    import spark.implicits._
+    import Similarity.GraphLayout
     val nodes = graft.Tables.load(spark, sf, "embeddings")
       .filter(col("vec_id") < 100)
-    val (g, ug, entry) = Similarity.buildGraphIndexFull(
-      nodes, "embedding", "vec_id", 100, k = 4, rounds = 1)
-    val path = s"${sys.props("java.io.tmpdir")}/graft_spec_graphstore"
-    Similarity.writeGraphIndex(g, ug, entry, 100, 4, path)
-    val (g2, ug2, entry2, n2, k2) = Similarity.readGraphIndex(spark, path)
-    assert((entry2, n2, k2) === (entry, 100L, 4))
-    def edges(df: org.apache.spark.sql.DataFrame) = df
-      .select(col("query_id"), col("neighbor_id"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(edges(g2) === edges(g), "stored base edges != built")
-    assert(edges(ug2) === edges(ug), "stored upper edges != built")
-    // a store without shape metadata is rejected, never probed with a
-    // guessed entry node
-    val bare = s"${sys.props("java.io.tmpdir")}/graft_spec_barestore"
-    g.select(col("query_id"), col("neighbor_id"))
-      .write.mode("overwrite").parquet(s"$bare/graph")
-    ug.write.mode("overwrite").parquet(s"$bare/upper")
-    intercept[IllegalArgumentException] {
-      Similarity.readGraphIndex(spark, bare)
-    }
-    // the compaction rebuild is buildGraphIndexFull over survivors —
+    val tmp = sys.props("java.io.tmpdir")
+    def entryRows(df: DataFrame) =
+      df.collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
+    def cellLists(c: Option[Array[Seq[Float]]]) = c.map(_.map(_.toList).toList)
+    // one write/read for every layout: edges, entries, the upper layer
+    // and the centroids the layout has, and the shape
+    val built = Seq("one" -> GraphLayout.OneShard, "pmod" -> GraphLayout.Pmod(4),
+        "cells" -> GraphLayout.Cells(4)).map { case (name, layout) =>
+      val index = Similarity.buildGraphIndex(nodes, "embedding", "vec_id",
+        100, layout, k = 4, rounds = 1)
+      val path = s"$tmp/graft_spec_graphstore_$name"
+      Similarity.writeGraphIndex(index, path)
+      val read = Similarity.readGraphIndex(spark, path)
+      assert((read.n, read.k, read.shards) === (100L, 4, index.shards), name)
+      assert(edgeSet(read.graph) === edgeSet(index.graph), s"$name: stored edges != built")
+      assert(entryRows(read.entries) === entryRows(index.entries), name)
+      assert(entryRows(read.entries).map(_._1) === (0 until index.shards), name)
+      assert(read.upper.map(edgeSet) === index.upper.map(edgeSet), name)
+      assert(cellLists(read.centroids) === cellLists(index.centroids), name)
+      // a store without shape metadata is rejected, never searched
+      // with a guessed entry node, shard count or quantizer
+      val bare = s"$tmp/graft_spec_barestore_$name"
+      index.graph.write.mode("overwrite").parquet(s"$bare/graph")
+      index.entries.write.mode("overwrite").parquet(s"$bare/entries")
+      intercept[IllegalArgumentException](Similarity.readGraphIndex(spark, bare))
+      name -> read
+    }.toMap
+    assert(built("one").shards === 1 && built("one").entry >= 10L)
+    assert(built("pmod").shards === 4 && built("pmod").upper.isEmpty)
+    assert(built("cells").upper.isEmpty && built("pmod").centroids.isEmpty)
+    // a centroid table that is not exactly 0..shards-1 would mis-route
+    // every query: rejected
+    val cells = built("cells")
+    val truncated = s"$tmp/graft_spec_truncstore"
+    Similarity.writeGraphIndex(cells, truncated)
+    cells.centroids.get.zipWithIndex.init.map(_.swap).toSeq
+      .toDF("shard", "centroid").write.mode("overwrite")
+      .parquet(s"$truncated/centroids")
+    intercept[IllegalArgumentException](Similarity.readGraphIndex(spark, truncated))
+    // the compaction rebuild is buildGraphIndex over survivors —
     // one code path, so compacted ≡ fresh-build identity holds
     // edge-for-edge (the s_mv full-recompute identity)
     val survivors = nodes.filter(pmod(col("vec_id"), lit(10)) =!= 7)
     val nSurv = survivors.count()
-    val (cg, cug, ce) = Similarity.buildGraphIndexFull(
-      survivors, "embedding", "vec_id", nSurv, k = 4, rounds = 1)
-    val (cg2, cug2, ce2) = Similarity.buildGraphIndexFull(
-      survivors, "embedding", "vec_id", nSurv, k = 4, rounds = 1)
-    assert(ce === ce2 && edges(cg) === edges(cg2) &&
-      edges(cug) === edges(cug2),
+    val (cg, cug, ce) = oneShard(survivors, nSurv, k = 4, rounds = 1)
+    val (cg2, cug2, ce2) = oneShard(survivors, nSurv, k = 4, rounds = 1)
+    assert(ce === ce2 && edgeSet(cg) === edgeSet(cg2) &&
+      edgeSet(cug) === edgeSet(cug2),
       "rebuild over the same survivors must be deterministic")
     assert(cg.filter(pmod(col("query_id"), lit(10)) === 7 ||
         pmod(col("neighbor_id"), lit(10)) === 7).count() === 0L,
@@ -939,8 +955,9 @@ class SimilaritySpec extends SparkSpec {
     val n = nodes.count()
     val shards = Similarity.autoShards(n)
     assert(shards === 4, "spec corpus sits under the 64k auto step")
-    val (g, entries) = Similarity.buildGraphIndexSharded(
-      nodes, "embedding", "vec_id", n, shards, k = 12, rounds = 2)
+    val index = Similarity.buildGraphIndex(nodes, "embedding", "vec_id", n,
+      Similarity.GraphLayout.Pmod(shards), k = 12, rounds = 2)
+    val g = index.graph
     // shard isolation is a CONSTRUCTION invariant: within-shard seed
     // edges + NN-descent's 2-hop closure can never leave a shard
     assert(g.filter(pmod(col("query_id"), lit(shards)) =!=
@@ -948,35 +965,17 @@ class SimilaritySpec extends SparkSpec {
       "an edge crossed a shard boundary")
     // exactly one entry per shard, inside its own shard, off the
     // vec_id < 10 probe set (the full-build self-filter lesson)
-    val es = entries.collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(es.map(_._1).toSet === (0L until shards).toSet)
+    val es = index.entries.collect().map(r => (r.getInt(0), r.getLong(1)))
+    assert(es.map(_._1).toSet === (0 until shards).toSet)
     assert(es.length === shards)
     assert(es.forall { case (sh, e) => e % shards == sh },
       "an entry node sits outside its shard")
     assert(es.forall(_._2 >= 10L), "an entry node is on the probe set")
     // build is deterministic (blocked seed + NN-descent are pure
     // integer/rounded-cosine algebra)
-    val (g2, _) = Similarity.buildGraphIndexSharded(
-      nodes, "embedding", "vec_id", n, shards, k = 12, rounds = 2)
-    def edgeSet(df: org.apache.spark.sql.DataFrame) = df
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val g2 = Similarity.buildGraphIndex(nodes, "embedding", "vec_id", n,
+      Similarity.GraphLayout.Pmod(shards), k = 12, rounds = 2).graph
     assert(edgeSet(g) === edgeSet(g2), "sharded rebuild diverged")
-    // store round-trip carries the fan-out shape; bare store rejected
-    val path = s"${sys.props("java.io.tmpdir")}/graft_spec_shardstore"
-    Similarity.writeShardedGraphIndex(g, entries, n, 12, shards, path)
-    val (gs, ents, n2, k2, shards2) =
-      Similarity.readShardedGraphIndex(spark, path)
-    assert((n2, k2, shards2) === (n, 12, shards))
-    assert(edgeSet(gs.select(col("query_id"), col("neighbor_id")))
-      === edgeSet(g))
-    assert(ents.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      === es.toSet)
-    val bare = s"${sys.props("java.io.tmpdir")}/graft_spec_shardbare"
-    g.write.mode("overwrite").parquet(s"$bare/graph")
-    entries.write.mode("overwrite").parquet(s"$bare/entries")
-    intercept[IllegalArgumentException] {
-      Similarity.readShardedGraphIndex(spark, bare)
-    }
     // driver-row contracts at the spec SF: recall floor, isolation,
     // entry cover, full-k — and the rows-only key returns 10 x 5
     val r = Pipeline.dAnnGraphShardedRecall.fn(spark, sf).collect()(0)
@@ -995,8 +994,9 @@ class SimilaritySpec extends SparkSpec {
     val nodes = graft.Tables.load(spark, sf, "embeddings")
     val n = nodes.count()
     val shards = Similarity.autoRoutedShards(n)
-    val (g, entries, cents) = Similarity.buildGraphIndexRouted(
-      nodes, "embedding", "vec_id", shards, k = 12, rounds = 2)
+    val index = Similarity.buildGraphIndex(nodes, "embedding", "vec_id", n,
+      Similarity.GraphLayout.Cells(shards), k = 12, rounds = 2)
+    val (g, entries, cents) = (index.graph, index.entries, index.centroids.get)
     // empty trained cells are dropped from the stored quantizer;
     // at the spec SF every cell is occupied so the counts agree
     assert(cents.length === shards)
@@ -1023,30 +1023,11 @@ class SimilaritySpec extends SparkSpec {
       "an entry node sits outside its own cell")
     // deterministic rebuild (quantizer sample, seeded hashes, integer
     // cosine algebra — all pure)
-    val (g2, _, cents2) = Similarity.buildGraphIndexRouted(
-      nodes, "embedding", "vec_id", shards, k = 12, rounds = 2)
-    def edgeSet(df: org.apache.spark.sql.DataFrame) = df
-      .select(col("query_id"), col("neighbor_id"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(cents.map(_.toList).toList === cents2.map(_.toList).toList)
-    assert(edgeSet(g) === edgeSet(g2), "routed rebuild diverged")
-    // store round-trip carries edges + entries + CENTROIDS (the index
-    // is only meaningful with the quantizer that assigned its shards);
-    // bare and truncated-centroid stores are rejected
-    val path = s"${sys.props("java.io.tmpdir")}/graft_spec_routedstore"
-    Similarity.writeRoutedGraphIndex(g, entries, cents, n, 12, path)
-    val (gs, ents, cs, n2, k2) = Similarity.readRoutedGraphIndex(spark, path)
-    assert((n2, k2) === (n, 12))
-    assert(cs.map(_.toList).toList === cents.map(_.toList).toList)
-    assert(edgeSet(gs) === edgeSet(g))
-    assert(ents.collect().map(r => (r.getInt(0), r.getLong(1))).toSet
-      === es.toSet)
-    val bare = s"${sys.props("java.io.tmpdir")}/graft_spec_routedbare"
-    g.write.mode("overwrite").parquet(s"$bare/graph")
-    entries.write.mode("overwrite").parquet(s"$bare/entries")
-    intercept[IllegalArgumentException] {
-      Similarity.readRoutedGraphIndex(spark, bare)
-    }
+    val rebuilt = Similarity.buildGraphIndex(nodes, "embedding", "vec_id", n,
+      Similarity.GraphLayout.Cells(shards), k = 12, rounds = 2)
+    assert(cents.map(_.toList).toList ===
+      rebuilt.centroids.get.map(_.toList).toList)
+    assert(edgeSet(g) === edgeSet(rebuilt.graph), "routed rebuild diverged")
     // the routed LIFECYCLE rows: tombstoned search refills deleted
     // slots, compaction rebuilds cells over survivors (one code path)
     val rd = Pipeline.dAnnGraphRoutedDeleteRecall.fn(spark, sf).collect()(0)
@@ -1074,8 +1055,9 @@ class SimilaritySpec extends SparkSpec {
     // shard contributed ZERO candidates (shard-closed edges mean no
     // later round can re-enter it).
     val pShards = Similarity.autoShards(n)
-    val (pg, pEntries) = Similarity.buildGraphIndexSharded(
-      nodes, "embedding", "vec_id", n, pShards, k = 12, rounds = 2)
+    val pIndex = Similarity.buildGraphIndex(nodes, "embedding", "vec_id", n,
+      Similarity.GraphLayout.Pmod(pShards), k = 12, rounds = 2)
+    val (pg, pEntries) = (pIndex.graph, pIndex.entries)
     val entry0 = pEntries.orderBy(col("shard")).collect()(0)
     val entryQuery = nodes.filter(col("vec_id") === entry0.getLong(1))
     val got = Similarity.graphSearchTopKSharded(nodes, entryQuery, pg,
@@ -1084,7 +1066,7 @@ class SimilaritySpec extends SparkSpec {
       .collect()
     assert(got.forall(r => r.getLong(1) != entry0.getLong(1)),
       "self row leaked through the final merge")
-    assert(got.exists(r => r.getLong(1) % pShards == entry0.getLong(0)),
+    assert(got.exists(r => r.getLong(1) % pShards == entry0.getInt(0)),
       "entry-coincident query lost its own shard (seed exemption broken)")
   }
 
@@ -1092,8 +1074,7 @@ class SimilaritySpec extends SparkSpec {
     import graft.operators.Pipeline
     val nodes = graft.Tables.load(spark, sf, "embeddings")
     val n = nodes.count()
-    val (g, u, e) = Similarity.buildGraphIndexFull(
-      nodes, "embedding", "vec_id", n, k = 12, rounds = 2)
+    val (g, u, e) = oneShard(nodes, n, k = 12, rounds = 2)
     val q = nodes.filter(col("vec_id") < 10)
     val got = Similarity.graphSearchTopKLayeredFiltered(nodes, q, g, u,
         "embedding", "vec_id", "label", k = 5, beam = 96, rounds = 6,
@@ -1328,6 +1309,14 @@ class SimilaritySpec extends SparkSpec {
     df.select("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
 
+  /** A one-shard build's (graph, upper, entry). */
+  private def oneShard(nodes: DataFrame, n: Long, k: Int,
+      rounds: Int): (DataFrame, DataFrame, Long) = {
+    val index = Similarity.buildGraphIndex(nodes, "embedding", "vec_id", n,
+      Similarity.GraphLayout.OneShard, k = k, rounds = rounds)
+    (index.graph, index.upper.get, index.entry)
+  }
+
   test("local-join kernel equals the pair-join rules: blocked seeds and NN-descent rounds, ties, absent ids, one-member groups") {
     import spark.implicits._
     for (seed <- 1 to 3) {
@@ -1368,12 +1357,10 @@ class SimilaritySpec extends SparkSpec {
     val r1 = oldRound(nodes, hashSeed, k).localCheckpoint(true)
     val r2 = oldRound(nodes, r1, k)
     for ((rounds, want) <- Seq(0 -> hashSeed, 1 -> r1, 2 -> r2)) {
-      val (g, _, _) = Similarity.buildGraphIndexFull(nodes, "embedding",
-        "vec_id", n, k = k, rounds = rounds)
+      val (g, _, _) = oneShard(nodes, n, k = k, rounds = rounds)
       assert(edgeSet(g) === edgeSet(want), s"$rounds rounds")
     }
-    val (_, upper, _) = Similarity.buildGraphIndexFull(nodes, "embedding",
-      "vec_id", n, k = k, rounds = 0)
+    val (_, upper, _) = oneShard(nodes, n, k = k, rounds = 0)
     val upStep = math.max(2L, math.round(math.sqrt(n.toDouble)))
     val upperNodes = nodes.filter(pmod(col("vec_id"), lit(upStep)) === 1)
     assert(edgeSet(upper) === edgeSet(Similarity.bruteTopK(upperNodes,
@@ -1383,9 +1370,27 @@ class SimilaritySpec extends SparkSpec {
     val shardSeed = oldBlocked(nodes, k, Seq(1, 2).map(h =>
       pmod(col("vec_id"), lit(shards)) * bps +
         pmod(xxhash64(lit(h), col("vec_id")), lit(bps))))
-    val (sg, _) = Similarity.buildGraphIndexSharded(nodes, "embedding",
-      "vec_id", n, shards, k = k, rounds = 1)
+    val sg = Similarity.buildGraphIndex(nodes, "embedding", "vec_id", n,
+      Similarity.GraphLayout.Pmod(shards), k = k, rounds = 1).graph
     assert(edgeSet(sg) === edgeSet(oldRound(nodes, shardSeed, k)))
+    // routed: each cell's seed blocks start at its offset, the sum of
+    // the block counts of the cells before it, measured from occupancy
+    import spark.implicits._
+    val routed = Similarity.buildGraphIndex(nodes, "embedding", "vec_id", n,
+      Similarity.GraphLayout.Cells(Similarity.autoRoutedShards(n)), k = k,
+      rounds = 1)
+    val (rg, cents) = (routed.graph, routed.centroids.get)
+    val cells = Similarity.shardAssign(nodes, "embedding", "vec_id", cents)
+      .select(col("id").as("vec_id"), col("shard").as("cell"))
+    val cellBlocks = cells.groupBy(col("cell")).count().collect()
+      .map(r => r.getInt(0) -> math.max(4L, r.getLong(1) / 128)).sorted
+    assert(cellBlocks.map(_._1).toSeq === cents.indices)
+    val offsets = cellBlocks.map(_._2).scanLeft(0L)(_ + _)
+    val tagged = nodes.join(cells, "vec_id").join(cellBlocks.zip(offsets)
+      .map { case ((c, b), o) => (c, b, o) }.toSeq.toDF("cell", "bps", "off"), "cell")
+    val routedSeed = oldBlocked(tagged, k, Seq(1, 2).map(h =>
+      col("off") + pmod(xxhash64(lit(h), col("vec_id")), col("bps"))))
+    assert(edgeSet(rg) === edgeSet(oldRound(nodes, routedSeed, k)))
   }
 
   test("local-join kernel on degenerate inputs: empty node set, zero vector, null embedding") {
@@ -1403,8 +1408,7 @@ class SimilaritySpec extends SparkSpec {
       .collect().isEmpty)
     assert(Similarity.nnDescentRound(nodes, graph.limit(0), "embedding",
       "vec_id").collect().isEmpty)
-    intercept[IllegalArgumentException](Similarity.buildGraphIndexFull(
-      none, "embedding", "vec_id", 0L))
+    intercept[IllegalArgumentException](oneShard(none, 0L, k = 8, rounds = 2))
     // one group holds every node: the zero vector scores cos 0, and a
     // null embedding scores a null cos that ranks after every non-null
     // one (ties by id) — as the pair-join rules ranked it
@@ -1440,8 +1444,7 @@ class SimilaritySpec extends SparkSpec {
       Bridge.drainListenerBus(spark)
       spark.sparkContext.addSparkListener(l)
       val (g, u) = try {
-        val (g, u, _) = Similarity.buildGraphIndexFull(nodes, "embedding",
-          "vec_id", n, k = 12, rounds = 2)
+        val (g, u, _) = oneShard(nodes, n, k = 12, rounds = 2)
         val gu = (edgeSet(g), edgeSet(u))
         Bridge.drainListenerBus(spark)
         gu
@@ -1464,13 +1467,15 @@ class SimilaritySpec extends SparkSpec {
       s"$rec1 shuffle records")
   }
 
-  test("graphIndexStore leaves no RDD of its build persisted") {
+  test("graphStore leaves no RDD of its build persisted, in any layout") {
     import graft.operators.Pipeline
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    // a spelling of the spec corpus no other test has built a store for
-    Pipeline.graphIndexStore(spark, s"$sf/.", "compact")
-    val left = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(left.isEmpty, s"build left RDDs ${left.toSeq.sorted} persisted")
+    for (layout <- Seq("one", "pmod", "cells")) {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      // a spelling of the spec corpus no other test has built a store for
+      Pipeline.graphStore(spark, s"$sf/.", layout, "compact")
+      val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(left.isEmpty, s"$layout build left RDDs ${left.toSeq.sorted} persisted")
+    }
   }
 
   test("full-store searches share one search table: a repeat search shuffles nothing, same rows") {
@@ -1495,10 +1500,10 @@ class SimilaritySpec extends SparkSpec {
     // the table aggregates the store's edge lists through a shuffle
     assert(written.get === 0L, s"repeat search wrote ${written.get} shuffle records")
     assert(again === first)
-    val (graph, upper, entry, _, _) = Pipeline.graphIndexStore(spark, sf, "full")
-    assert(rows(Similarity.graphSearchTopKLayered(emb, queries, graph, upper,
-      "embedding", "vec_id", k = 5, beam = 48, rounds = 6,
-      upperSeed = entry)) === first, "a search over its own table differs")
+    val index = Pipeline.graphStore(spark, sf, "one")
+    assert(rows(Similarity.graphSearchTopKLayered(emb, queries, index.graph,
+      index.upper.get, "embedding", "vec_id", k = 5, beam = 48, rounds = 6,
+      upperSeed = index.entry)) === first, "a search over its own table differs")
   }
 
   test("filtered search: every neighbor shares the query's label, exact == brute-on-slice") {

@@ -83,8 +83,9 @@ class StreamingSpec extends SparkSpec {
     val emb = graft.Tables.load(spark, sf, "embeddings")
     val baseNodes = emb.filter(pmod(col("vec_id"), lit(5)) =!= 4)
     val delta = emb.filter(pmod(col("vec_id"), lit(5)) === 4)
-    val (baseGraph, baseUpper, entry, _, _) =
-      Pipeline.graphIndexStore(spark, sf, "base")
+    val index = Pipeline.graphStore(spark, sf, "one", "base")
+    val (baseGraph, baseUpper, entry) =
+      (index.graph, index.upper.get, index.entry)
     baseGraph.select(col("query_id"), col("neighbor_id"))
       .write.mode("overwrite").parquet(s"$store/v0")
     val b0 = delta.filter(pmod(expr("vec_id div 5"), lit(2)) === 0)
@@ -134,8 +135,8 @@ class StreamingSpec extends SparkSpec {
     val emb = graft.Tables.load(spark, sf, "embeddings")
     val baseNodes = emb.filter(pmod(col("vec_id"), lit(5)) =!= 4)
     val delta = emb.filter(pmod(col("vec_id"), lit(5)) === 4)
-    val (g, entries, cents, _, _) =
-      Pipeline.routedGraphStore(spark, sf, "base")
+    val index = Pipeline.graphStore(spark, sf, "cells", "base")
+    val (g, entries, cents) = (index.graph, index.entries, index.centroids.get)
     val ins = Similarity.graphSearchTopKAssigned(baseNodes, delta, g,
         entries, cents, "embedding", "vec_id", k = 12,
         beamPerShard = 24, rounds = 6)
