@@ -223,32 +223,9 @@ object Bench {
       .filter { case (name, _) => only.forall(_.contains(name)) }
     if (new java.io.File(warmDir).isDirectory && warmDir != sfDir)
       ordered.foreach { case (name, fn) => run(fn, warmDir, name) }
-    // Materialize the synthetic media payloads for the benched SF up
-    // front: rendering them is input SYNTHESIS (the stand-in for bytes
-    // already in object storage — every other table is pre-materialized
-    // parquet), and it would otherwise bill ~5 s of producer work to
-    // whichever media query runs first.
-    if (ordered.exists(_._1.startsWith("m_modal")))
-      try operators.Multimodal.fakeMediaTable(spark, sfDir)
-        .write.mode("overwrite").format("noop").save()
-      catch { case NonFatal(_) => () }
-    if (ordered.exists(_._1.startsWith("m_modal_phash")))
-      try operators.Multimodal.phashMediaTable(spark, sfDir)
-        .write.mode("overwrite").format("noop").save()
-      catch { case NonFatal(_) => () }
-    if (ordered.exists(n => n._1.startsWith("m_modal_audio") ||
-        n._1.startsWith("m_modal_vad")))
-      try operators.Multimodal.fakeAudioTable(spark, sfDir)
-        .write.mode("overwrite").format("noop").save()
-      catch { case NonFatal(_) => () }
-    if (ordered.exists(_._1.startsWith("m_modal_scenes")))
-      try operators.Multimodal.fakeSceneTable(spark, sfDir)
-        .write.mode("overwrite").format("noop").save()
-      catch { case NonFatal(_) => () }
-    if (ordered.exists(_._1.startsWith("m_dedup_audio")))
-      try operators.Multimodal.fakeFpAudioTable(spark, sfDir)
-        .write.mode("overwrite").format("noop").save()
-      catch { case NonFatal(_) => () }
+    // every other table is pre-materialized parquet; rendering a media
+    // shelf would bill ~5 s of producer work to the first media query
+    operators.Multimodal.renderShelves(spark, sfDir, ordered.map(_._1))
     // Noise immunity: N full passes over the suite, per-query MIN across
     // passes. Passes (not back-to-back reps) because the observed noise is
     // ~30 s co-tenant load windows — back-to-back reps of one query all land

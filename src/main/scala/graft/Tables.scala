@@ -16,29 +16,21 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  // Schema cache: the star-schema files are immutable for a session's
-  // lifetime, but every spark.read.parquet() call re-infers the schema
-  // (a driver-side footer open per call — the suite makes ~1k load
-  // calls per bench pass). Caching the inferred StructType and passing
-  // it via .schema() skips the inference I/O; the DATA path is
-  // untouched (same scan, same pushdowns), and the cached schema was
-  // inferred under the same session confs (nanosAsLong). Keyed by
-  // session so a config change in a new session re-infers.
+  // The star-schema files are immutable for a session's lifetime, but
+  // every spark.read.parquet() call re-infers the schema (a driver-side
+  // footer open per call — the suite makes ~1k load calls per bench
+  // pass). The inferred StructType is memoized per session (a config
+  // change in a new session re-infers) and passed via .schema(); the
+  // DATA path is untouched (same scan, same pushdowns).
   // INVARIANT (documented per ADVICE r16): $sfDir/$name.parquet must
   // not be regenerated/swapped at the same path while a session that
-  // has loaded it is alive — the cached StructType would be applied
+  // has loaded it is alive — the memoized StructType would be applied
   // to the new file silently. Every harness in this repo (Bench,
   // Verify, probes) treats the testdata dirs as immutable, and
-  // ScaleProbe replicas write to fresh dirs. Stale-session keys are
-  // evicted by the filterInPlace below on the next load() call.
-  private val schemaCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), org.apache.spark.sql.types.StructType]
-
+  // ScaleProbe replicas write to fresh dirs.
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    schemaCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
     val path = s"$sfDir/$name.parquet"
-    val schema = schemaCache.getOrElseUpdate((spark, path),
-      spark.read.parquet(path).schema)
+    val schema = Stores.memo(spark, ("schema", path))(spark.read.parquet(path).schema)
     val df = spark.read.schema(schema).parquet(path)
     if (name == "events") normalizeEventTs(df) else df
   }

@@ -73,29 +73,17 @@ object Corpus {
   // One signature store per (session, sf dir): built from the even
   // (reference) half, written to parquet and read BACK so the delta
   // path exercises the real store lifecycle — shape metadata surviving
-  // the parquet round-trip included. Keyed by session so a stopped
-  // session's plans are never handed to a new one.
-  private val storeCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]
-
-  private def sigStore(s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = {
-    storeCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    storeCache.getOrElseUpdate((s, dir), {
-      // path carries a hash of the FULL dir (the cache key), not just
-      // its basename: two corpora named sf0.1 under different parents
-      // must not clobber each other's store on shared /tmp
-      val dirTag = java.lang.Integer.toHexString(
-        java.util.Arrays.hashCode(dir.getBytes("UTF-8")))
-      val path = s"${sys.props("java.io.tmpdir")}/graft_sigstore_" +
-        s"${new java.io.File(dir).getName}_$dirTag"
+  // the parquet round-trip included.
+  private[graft] def sigStore(s: org.apache.spark.sql.SparkSession,
+      dir: String): org.apache.spark.sql.DataFrame =
+    graft.Stores.memo(s, ("sigstore", dir)) {
+      val path = graft.Stores.tmpDir(s, "sigstore")
       Dedup.signatureStore(
         Tables.load(s, dir, "documents").filter(col("doc_id") % 2 === 0),
         "text", "doc_id", numHashes = 64, bands = 16)
         .write.mode("overwrite").parquet(path)
       s.read.parquet(path)
-    })
-  }
+    }
 
   /** [[dDedupDelta]] through the PERSISTED path: the reference half's
     * signatures are materialized once ([[Dedup.signatureStore]] →

@@ -15,13 +15,6 @@ import graft.sources.{avro, AvroCodec, MessageLog, SchemaRegistry}
   */
 object KafkaSurface {
 
-  /** Recursive clean of a scratch segment dir (null-safe: listFiles
-    * returns null on IO errors) — shared by the segment-writing
-    * queries. */
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
-  }
-
   /** select * from kafka_table: full decode + metadata columns. */
   val kScanAll: QueryDef = QueryDef(
     fn = (s, dir) =>
@@ -301,9 +294,8 @@ object KafkaSurface {
     * decode, and aggregate. */
   val kSegmentScan: QueryDef = QueryDef(
     fn = (s, dir) => {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_seg/${new java.io.File(dir).getName}/events"
-      // segment writes append (the log model) — start from a clean dir
-      rmTree(new java.io.File(path))
+      // segment writes append (the log model) — start from a fresh dir
+      val path = s"${graft.Stores.tmpDir(s, "seg")}/events"
       graft.sources.LogSegments.write(MessageLog.eventsTopic(s, dir), path)
       s.read.format("graft-log").load(path)
         .filter(col("offset") < 500)
@@ -336,9 +328,8 @@ object KafkaSurface {
     * topic/partition directories. */
   val kSqlTable: QueryDef = QueryDef(
     fn = (s, dir) => {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_sqltable/${new java.io.File(dir).getName}/events"
-      // segment writes append (the log model) — start from a clean dir
-      rmTree(new java.io.File(path))
+      // segment writes append (the log model) — start from a fresh dir
+      val path = s"${graft.Stores.tmpDir(s, "sqltable")}/events"
       graft.sources.LogSegments.write(MessageLog.eventsTopic(s, dir), path)
       s.sql("DROP TABLE IF EXISTS graft_events")
       s.sql(s"""CREATE TABLE graft_events USING `graft-log`
@@ -367,7 +358,7 @@ object KafkaSurface {
     * the one non-SQL quantity, are asserted in MessageLogSpec). */
   val kSinkLog: QueryDef = QueryDef(
     fn = (s, dir) => {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_sink/${new java.io.File(dir).getName}/documents"
+      val path = s"${graft.Stores.tmpDir(s, "sink")}/documents"
       MessageLog.writeLog(MessageLog.documentsTopic(s, dir), path)
       MessageLog.readLog(s, path)
         .withColumn("v", avro.from_topic(col("value"), "documents"))
@@ -512,13 +503,12 @@ object KafkaSurface {
     * record must survive stream-copy byte-exactly, so the oracle
     * recomputes the summary straight from the source table. The
     * sink's per-epoch rename commit makes the copy exactly-once
-    * (LogSegmentSourceSpec pins retry overwrite); scratch dirs are
-    * cleaned per run so re-runs never accumulate epochs. */
+    * (LogSegmentSourceSpec pins retry overwrite); each run gets
+    * a fresh scratch dir, so re-runs never accumulate epochs. */
   val kSinkStream: QueryDef = QueryDef(
     fn = (s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_sink_stream/${new java.io.File(dir).getName}"
-      rmTree(new java.io.File(base))
+      val base = graft.Stores.tmpDir(s, "sink_stream")
       val src = s"$base/src"
       graft.sources.LogSegments.write(MessageLog.eventsTopic(s, dir), src)
       val q = s.readStream.format("graft-log").load(src)

@@ -45,12 +45,8 @@ object Multimodal {
     * SYNTHESIS standing in for bytes already sitting in object
     * storage — re-encoding 5k PNGs per query would bill producer work
     * to every consumer-side operator under test. */
-  def fakeMediaTable(spark: SparkSession, sfDir: String): DataFrame = {
-    // drop entries of stopped sessions so a long-lived multi-session
-    // JVM (test harness, notebook server) can't accumulate dead
-    // DataFrames + their persisted-plan references for its lifetime
-    mediaCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    mediaCache.getOrElseUpdate((spark, sfDir), {
+  def fakeMediaTable(spark: SparkSession, sfDir: String): DataFrame =
+    shelf(spark, ("media", sfDir)) {
       import spark.implicits._
       val ids = graft.Tables.load(spark, sfDir, "documents")
         .select(col("doc_id")).as[Long]
@@ -65,17 +61,32 @@ object Multimodal {
         avro.to_avro(struct(col("doc_id"), col("width"), col("height"),
           col("fmt"), col("data")).cast(containerType),
           "MediaContainer").as("media"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
-  }
+    }
 
-  // Keyed by (session, dir): a DataFrame persisted under one session
-  // must not be handed to a later session in the same JVM (its plan
-  // references the stopped session's state). Dead-session entries are
-  // pruned on the next fakeMediaTable call; the harness runs one
-  // session per JVM so the map stays single-entry-per-dir in practice.
-  private val mediaCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  /** A synthetic shelf: rendered once per session and corpus dir, and
+    * kept persisted. */
+  private def shelf(spark: SparkSession, key: Any)(rows: => DataFrame): DataFrame =
+    graft.Stores.memo(spark, key)(
+      rows.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+
+  /** The synthetic shelves, each with the prefixes of the query keys
+    * that read it. */
+  private val shelves: Seq[(Seq[String], (SparkSession, String) => DataFrame)] = Seq(
+    Seq("m_modal") -> fakeMediaTable,
+    Seq("m_modal_phash") -> ((s, dir) => phashMediaTable(s, dir)),
+    Seq("m_modal_audio", "m_modal_vad") -> fakeAudioTable,
+    Seq("m_modal_scenes") -> fakeSceneTable,
+    Seq("m_dedup_audio") -> fakeFpAudioTable)
+
+  /** Renders up front the shelves that `keys` read. Rendering is input
+    * SYNTHESIS (the stand-in for bytes already in object storage), and
+    * would otherwise bill seconds of producer work to whichever key
+    * reads a shelf first. A shelf that fails to render is left to the
+    * key that reads it, which reports the failure. */
+  def renderShelves(spark: SparkSession, sfDir: String, keys: Iterable[String]): Unit =
+    for ((prefixes, shelf) <- shelves if keys.exists(k => prefixes.exists(k.startsWith)))
+      try shelf(spark, sfDir).write.mode("overwrite").format("noop").save()
+      catch { case scala.util.control.NonFatal(_) => () }
 
   /** Partition-batched decode: binary container -> PNG-decoded
     * metadata. One decoder per partition, rows streamed — the exact
@@ -210,9 +221,8 @@ object Multimodal {
     * dedup exists to catch and what byte-level dedup cannot (every
     * member's PNG bytes differ). Memoized like [[fakeMediaTable]]. */
   def phashMediaTable(spark: SparkSession, sfDir: String,
-      groupSize: Int = 5): DataFrame = {
-    phashCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    phashCache.getOrElseUpdate((spark, sfDir, groupSize), {
+      groupSize: Int = 5): DataFrame =
+    shelf(spark, ("phash", sfDir, groupSize)) {
       import spark.implicits._
       val ids = graft.Tables.load(spark, sfDir, "documents")
         .select(col("doc_id")).as[Long]
@@ -234,12 +244,7 @@ object Multimodal {
           (id, gid, PngCodec.encode(img))
         }
       }.toDF("doc_id", "group_id", "data")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
-  }
-
-  private val phashCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Int), DataFrame]
+    }
 
   /** Per-image 64-bit perceptual hash (DCT pHash): decode, box-average
     * to 32x32 luma, 2-D DCT-II, keep the 8x8 lowest-frequency block,
@@ -357,9 +362,8 @@ object Multimodal {
     * makes every byte oracle-predictable while the decode side still
     * does real little-endian PCM parsing. Memoized per corpus dir
     * (synthesis = producer work, same reasoning as the image shelf). */
-  def fakeAudioTable(spark: SparkSession, sfDir: String): DataFrame = {
-    audioCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    audioCache.getOrElseUpdate((spark, sfDir), {
+  def fakeAudioTable(spark: SparkSession, sfDir: String): DataFrame =
+    shelf(spark, ("audio", sfDir)) {
       import spark.implicits._
       val ids = graft.Tables.load(spark, sfDir, "documents")
         .select(col("doc_id")).as[Long]
@@ -381,12 +385,7 @@ object Multimodal {
         avro.to_avro(struct(col("doc_id"), col("sample_rate"),
           col("n_samples"), col("fmt"), col("data"))
           .cast(audioContainerType), "AudioContainer").as("audio"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
-  }
-
-  private val audioCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+    }
 
   /** Partition-batched PCM decode → integer clip features: duration,
     * Σ|s|, peak |s|, and zero crossings (strict sign flips, zeros
@@ -497,9 +496,8 @@ object Multimodal {
     * residual collisions corpus-wide, reported honestly by the
     * query). Clip length varies by group (10–14 frames). Memoized
     * per corpus dir like the other shelves. */
-  def fakeFpAudioTable(spark: SparkSession, sfDir: String): DataFrame = {
-    fpAudioCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    fpAudioCache.getOrElseUpdate((spark, sfDir), {
+  def fakeFpAudioTable(spark: SparkSession, sfDir: String): DataFrame =
+    shelf(spark, ("fpaudio", sfDir)) {
       import spark.implicits._
       val ids = graft.Tables.load(spark, sfDir, "documents")
         .select(col("doc_id")).as[Long]
@@ -524,12 +522,7 @@ object Multimodal {
         avro.to_avro(struct(col("doc_id"), col("sample_rate"),
           col("n_samples"), col("fmt"), col("data"))
           .cast(audioContainerType), "AudioContainer").as("audio"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
-  }
-
-  private val fpAudioCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+    }
 
   /** Per-frame per-band energies from a REAL little-endian s16 parse:
     * frames of [[VadFrame]] samples, 8 bands of 20 — the energy grid
@@ -569,9 +562,8 @@ object Multimodal {
     * 8+(id mod 5) frames of 16 rows at w=64, scenes of 2+(id mod 3)
     * frames — wrapped in the standard media container. Memoized per
     * corpus dir like the other shelves. */
-  def fakeSceneTable(spark: SparkSession, sfDir: String): DataFrame = {
-    sceneCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    sceneCache.getOrElseUpdate((spark, sfDir), {
+  def fakeSceneTable(spark: SparkSession, sfDir: String): DataFrame =
+    shelf(spark, ("scenes", sfDir)) {
       import spark.implicits._
       val ids = graft.Tables.load(spark, sfDir, "documents")
         .select(col("doc_id")).as[Long]
@@ -587,12 +579,7 @@ object Multimodal {
         avro.to_avro(struct(col("doc_id"), col("width"), col("height"),
           col("fmt"), col("data")).cast(containerType),
           "MediaContainer").as("media"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
-  }
-
-  private val sceneCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+    }
 
   /** SCENE-CHANGE detection over a decoded frame strip: a cut lands
     * between frames f−1 and f when MORE THAN HALF the pixels changed

@@ -2937,9 +2937,15 @@ object Pipeline {
     exact.groupBy(col("query_id")).agg(count(lit(1)).as("n_exact"))
       .join(hits, Seq("query_id"), "left")
       .agg(count(lit(1)).as("n_queries"),
-        (sum(coalesce(col("n_hits"), lit(0L))).cast("double") /
-          sum(col("n_exact")) >= minRecall).as("recall_ok"))
+        recallAtLeast(sum(coalesce(col("n_hits"), lit(0L))),
+          coalesce(sum(col("n_exact")), lit(0L)), minRecall).as("recall_ok"))
   }
+
+  /** hits / total ≥ `floor`, and true when there is nothing to recall:
+    * an empty corpus has no probe queries, so no recall floor to miss. */
+  private[operators] def recallAtLeast(hits: Column, total: Column,
+      floor: Double): Column =
+    when(total === 0, true).otherwise(hits.cast("double") / total >= floor)
 
   private val recallOracleSql: String = """
       SELECT CAST(count(*) AS BIGINT) AS n_queries, TRUE AS recall_ok
@@ -3148,12 +3154,6 @@ object Pipeline {
     },
     oracle = Some(recallOracleSql))
 
-  // IVF index-maintenance store: the base (even) half's list
-  // assignments, written to parquet once and read back — the same
-  // session-keyed cache device as Corpus.sigStore / Relational.mvBase.
-  private val ivfStoreCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), DataFrame]
-
   /** Deterministic list assignment against the SEED quantizer (the
     * first 16 corpus vectors as centroids — the SQL-replayable
     * stand-in for a trained artifact; the MAINTENANCE semantics this
@@ -3176,20 +3176,17 @@ object Pipeline {
       .select(col("vec_id"), (-col("best.ncid")).as("cid"))
   }
 
+  /** IVF index-maintenance store: the base (even) half's list
+    * assignments, written to parquet once per session and read back. */
   private[graft] def ivfListStore(s: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    ivfStoreCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    ivfStoreCache.getOrElseUpdate((s, dir), {
-      val dirTag = java.lang.Integer.toHexString(
-        java.util.Arrays.hashCode(dir.getBytes("UTF-8")))
-      val path = s"${sys.props("java.io.tmpdir")}/graft_ivfstore_" +
-        s"${new java.io.File(dir).getName}_$dirTag"
+      dir: String): DataFrame =
+    graft.Stores.memo(s, ("ivfstore", dir)) {
+      val path = graft.Stores.tmpDir(s, "ivfstore")
       val emb = Tables.load(s, dir, "embeddings")
       ivfAssign(emb.filter(col("vec_id") % 2 === 0), ivfSeedCentroids(emb))
         .write.mode("overwrite").parquet(path)
       s.read.parquet(path)
-    })
-  }
+    }
 
   /** d_ann_ivf_delta — INCREMENTAL IVF INDEX MAINTENANCE (the
     * [[Relational.qMvIncremental]] / [[Corpus sigStore]] story for
@@ -4309,8 +4306,8 @@ object Pipeline {
         .crossJoin(bruteNew.intersect(approx)
           .agg(count(lit(1)).as("new_covered")))
         .select(col("n_brute"),
-          expr("(100 * hits) div n_brute").as("recall_pct"),
-          expr("(100 * hits) div n_brute >= 80").as("recall_ok"),
+          when(col("n_brute") =!= 0, expr("(100 * hits) div n_brute")).as("recall_pct"),
+          when(col("n_brute") =!= 0, expr("(100 * hits) div n_brute >= 80")).as("recall_ok"),
           col("n_new"), col("new_covered"),
           (col("new_covered") * 2 >= col("n_new")).as("new_reachable_ok"))
         .localCheckpoint(eager = true)
@@ -4359,18 +4356,6 @@ object Pipeline {
              new_covered * 2 >= n_new AS new_reachable_ok
       FROM counts"""))
 
-  // Graph-ANN index stores: a [[Similarity.buildGraphIndex]] index
-  // written to parquet ONCE per (session, dir, layout, variant) and
-  // read back with its shape metadata — the ivfListStore /
-  // Corpus.sigStore device, for the build that was the suite's most
-  // expensive stage (each lifecycle key used to rebuild the same
-  // index). An index is built once and probed many times — the
-  // production topology — so the search/insert/delete/compact legs
-  // read the store.
-  private val graphStoreCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String, String, String),
-      Similarity.GraphIndex]
-
   /** Tombstone predicate shared by the delete and compaction legs:
     * vec_id ≡ 7 mod 10 (pmod — replica-stable, unlike an id
     * threshold). */
@@ -4384,7 +4369,12 @@ object Pipeline {
   private[graft] def graphDelta(c: org.apache.spark.sql.Column)
       : org.apache.spark.sql.Column = pmod(c, lit(5)) === 4
 
-  /** The graph-index store over `dir`'s embeddings, built at degree
+  /** The graph-index store over `dir`'s embeddings: a
+    * [[Similarity.buildGraphIndex]] index written to parquet ONCE per
+    * (session, dir, layout, variant) and read back with its shape
+    * metadata. An index is built once and probed many times — the
+    * production topology — so the search/insert/delete/compact legs
+    * read the store. Built at degree
     * 12 with 2 NN-descent rounds. Layouts: "one" = one shard with the
     * √n upper layer, "pmod" = [[Similarity.autoShards]] pmod shards,
     * "cells" = [[Similarity.autoRoutedShards]] k-means cells (the
@@ -4395,13 +4385,9 @@ object Pipeline {
     * the compaction rebuild, one code path with the fresh build. */
   private[graft] def graphStore(s: org.apache.spark.sql.SparkSession,
       dir: String, layout: String,
-      variant: String = "full"): Similarity.GraphIndex = {
-    graphStoreCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    graphStoreCache.getOrElseUpdate((s, dir, layout, variant), {
-      val dirTag = java.lang.Integer.toHexString(
-        java.util.Arrays.hashCode(dir.getBytes("UTF-8")))
-      val path = s"${sys.props("java.io.tmpdir")}/graft_graphstore_" +
-        s"${new java.io.File(dir).getName}_${dirTag}_${layout}_$variant"
+      variant: String = "full"): Similarity.GraphIndex =
+    graft.Stores.memo(s, ("graphstore", dir, layout, variant)) {
+      val path = graft.Stores.tmpDir(s, s"graphstore_${layout}_$variant")
       val emb = Tables.load(s, dir, "embeddings")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val nodes = variant match {
@@ -4424,13 +4410,14 @@ object Pipeline {
         "embedding", "vec_id", n, shape, k = 12, rounds = 2), path)
       emb.unpersist()
       Similarity.readGraphIndex(s, path)
-    })
-  }
+    }
 
   /** The one table kept beside the stores: the "full" store's
-    * [[Similarity.searchTable]] over the same embeddings. */
-  private val graphTableCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), DataFrame]
+    * [[Similarity.searchTable]] over the same embeddings, with the
+    * (session, dir) it was built for. */
+  private object graphTable {
+    var held: ((org.apache.spark.sql.SparkSession, String), DataFrame) = _
+  }
 
   /** The search table of the one-shard "full" [[graphStore]] over
     * `dir`'s embeddings, built by the store's first search and kept like the
@@ -4440,14 +4427,14 @@ object Pipeline {
     * kept; an older one is dropped (its local checkpoint goes when
     * the driver collects it). */
   private[graft] def graphFullTable(s: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    graphTableCache.filterInPlace((k, _) =>
-      k == (s, dir) && !s.sparkContext.isStopped)
-    graphTableCache.getOrElseUpdate((s, dir), {
+      dir: String): DataFrame = graphTable.synchronized {
+    if (graphTable.held == null || graphTable.held._1 != ((s, dir))) {
       val index = graphStore(s, dir, "one")
-      Similarity.searchTable(Tables.load(s, dir, "embeddings"),
-        "embedding", "vec_id", index.graph, index.upper)
-    })
+      graphTable.held = ((s, dir), Similarity.searchTable(
+        Tables.load(s, dir, "embeddings"),
+        "embedding", "vec_id", index.graph, index.upper))
+    }
+    graphTable.held._2
   }
 
   /** d_ann_graph_full — the UN-CAPPED graph-ANN composition (the
@@ -4565,7 +4552,7 @@ object Pipeline {
           .agg(count(lit(1)).as("new_covered")))
         .select(
           expr("n_queries div 5").as("n_queries"),
-          (col("hits").cast("double") / col("n_queries") >= 0.8)
+          recallAtLeast(col("hits"), col("n_queries"), 0.8)
             .as("recall_ok"),
           (col("new_covered") * 2 >= col("n_new"))
             .as("new_reachable_ok"))
@@ -4625,7 +4612,7 @@ object Pipeline {
         .crossJoin(brute.intersect(approx).agg(count(lit(1)).as("hits")))
         .crossJoin(approx.agg(count(lit(1)).as("n_returned")))
         .select(col("n_queries"),
-          (col("hits").cast("double") / col("n_brute") >= 0.8)
+          recallAtLeast(col("hits"), col("n_brute"), 0.8)
             .as("recall_ok"),
           (col("n_returned") === col("n_brute")).as("full_k"))
         .localCheckpoint(eager = true)
@@ -4693,7 +4680,7 @@ object Pipeline {
         .select(col("n_queries"),
           (col("n_tomb_edges") === 0 && lit(storedN == nSurv))
             .as("tombstones_gone"),
-          (col("hits").cast("double") / col("n_brute") >= 0.8)
+          recallAtLeast(col("hits"), col("n_brute"), 0.8)
             .as("recall_ok"),
           (col("n_returned") === col("n_brute")).as("full_k"))
         .localCheckpoint(eager = true)
@@ -4778,10 +4765,11 @@ object Pipeline {
         .crossJoin(crossShard.agg(count(lit(1)).as("n_cross")))
         .crossJoin(entryStats)
         .select(col("n_queries"),
-          (col("hits").cast("double") / col("n_brute") >= 0.8)
+          recallAtLeast(col("hits"), col("n_brute"), 0.8)
             .as("recall_ok"),
           (col("n_cross") === 0).as("shard_isolated"),
-          (col("n_entries") === shards.toLong &&
+          // an empty corpus has no shard to cover
+          (lit(index.n == 0) || col("n_entries") === shards.toLong &&
             col("n_shards") === shards.toLong &&
             col("min_entry") >= 10).as("entries_cover"),
           (col("n_returned") === col("n_brute")).as("full_k"))
@@ -4874,9 +4862,11 @@ object Pipeline {
         .crossJoin(offRoute.agg(count(lit(1)).as("n_off_route")))
         .crossJoin(routeCounts)
         .select(col("n_queries"),
-          (col("hits").cast("double") / col("n_brute") >= 0.8)
+          recallAtLeast(col("hits"), col("n_brute"), 0.8)
             .as("recall_ok"),
-          (col("min_routed") === probeShards.toLong &&
+          // with no query, none was routed past the bound
+          when(col("n_queries") === 0, true).otherwise(
+            col("min_routed") === probeShards.toLong &&
             col("max_routed") === probeShards.toLong &&
             lit(probeShards * 4 <= cents.length)).as("probe_bounded"),
           (col("n_off_route") === 0).as("routed_subset"),
@@ -4930,7 +4920,7 @@ object Pipeline {
         .crossJoin(brute.intersect(approx).agg(count(lit(1)).as("hits")))
         .crossJoin(approx.agg(count(lit(1)).as("n_returned")))
         .select(col("n_queries"),
-          (col("hits").cast("double") / col("n_brute") >= 0.8)
+          recallAtLeast(col("hits"), col("n_brute"), 0.8)
             .as("recall_ok"),
           (col("n_returned") === col("n_brute")).as("full_k"))
         .localCheckpoint(eager = true)
@@ -4990,7 +4980,7 @@ object Pipeline {
         .select(col("n_queries"),
           (col("n_tomb_edges") === 0 && lit(storedN == nSurv))
             .as("tombstones_gone"),
-          (col("hits").cast("double") / col("n_brute") >= 0.8)
+          recallAtLeast(col("hits"), col("n_brute"), 0.8)
             .as("recall_ok"),
           (col("n_returned") === col("n_brute")).as("full_k"))
         .localCheckpoint(eager = true)

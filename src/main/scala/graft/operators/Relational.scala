@@ -2437,11 +2437,7 @@ object Relational {
   // q_mv_incremental: the pre-split customer aggregate is written to
   // parquet ONCE and read back, so the query exercises the real
   // incremental-refresh lifecycle (stored partial aggregate + delta
-  // merge), not two fresh scans dressed up as one. Same cache device
-  // as Corpus.sigStore; keyed by session so a stopped session's plans
-  // are never handed to a new one.
-  private val mvCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  // merge), not two fresh scans dressed up as one.
 
   private[operators] def custAgg(df: DataFrame): DataFrame =
     df.groupBy(col("o_custkey"))
@@ -2451,19 +2447,14 @@ object Relational {
 
   private[operators] val MvSplit = "1997-01-01"
 
-  private def mvBase(s: SparkSession, dir: String): DataFrame = {
-    mvCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    mvCache.getOrElseUpdate((s, dir), {
-      val dirTag = java.lang.Integer.toHexString(
-        java.util.Arrays.hashCode(dir.getBytes("UTF-8")))
-      val path = s"${sys.props("java.io.tmpdir")}/graft_mvbase_" +
-        s"${new java.io.File(dir).getName}_$dirTag"
+  private[graft] def mvBase(s: SparkSession, dir: String): DataFrame =
+    graft.Stores.memo(s, ("mvbase", dir)) {
+      val path = graft.Stores.tmpDir(s, "mvbase")
       custAgg(t(s, dir, "orders")
         .filter(col("o_orderdate") < to_timestamp(lit(MvSplit))))
         .write.mode("overwrite").parquet(path)
       s.read.parquet(path)
-    })
-  }
+    }
 
   /** q_mv_incremental — incremental materialized-view maintenance:
     * the per-customer order aggregate (count / total cents / last

@@ -724,14 +724,7 @@ object Selection {
     * scan. */
   val tClassifyDelta: QueryDef = QueryDef(
     fn = (s, dir) => {
-      def rmTree(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
-      }
-      val dirTag = java.lang.Integer.toHexString(
-        java.util.Arrays.hashCode(dir.getBytes("UTF-8")))
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_nbm/" +
-        s"${new java.io.File(dir).getName}_$dirTag"
-      rmTree(new java.io.File(base))
+      val base = graft.Stores.tmpDir(s, "nbm")
       val docs = Tables.load(s, dir, "documents")
       val baseDocs = docs.filter(pmod(col("doc_id"), lit(5)) =!= 4)
       val delta = docs.filter(pmod(col("doc_id"), lit(5)) === 4)
@@ -794,14 +787,7 @@ object Selection {
     * corpus scan, never a retrain. */
   val sClassify: QueryDef = QueryDef(
     fn = (s, dir) => {
-      def rmTree(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
-      }
-      val dirTag = java.lang.Integer.toHexString(
-        java.util.Arrays.hashCode(dir.getBytes("UTF-8")))
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_scls/" +
-        s"${new java.io.File(dir).getName}_$dirTag"
-      rmTree(new java.io.File(base))
+      val base = graft.Stores.tmpDir(s, "scls")
       val docs = Tables.load(s, dir, "documents")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val baseDocs = docs.filter(pmod(col("doc_id"), lit(5)) =!= 4)

@@ -290,8 +290,9 @@ object Similarity {
       entries: DataFrame, centroids: Option[Array[Seq[Float]]], n: Long,
       k: Int, shards: Int) {
     /** Shard 0's entry node: where the one-shard index's upper-layer
-      * search starts. `entries` is local, so reading it runs no job. */
-    lazy val entry: Long = entries.collect()(0).getLong(1)
+      * search starts; -1, which no node carries, for the empty index of
+      * an empty corpus. `entries` is local, so reading it runs no job. */
+    lazy val entry: Long = entries.collect().headOption.fold(-1L)(_.getLong(1))
   }
 
   /** THE graph-index build, every stage linear in the corpus, for
@@ -335,7 +336,8 @@ object Similarity {
     *    stored cell 0..m-1; `shards` is the trained count, and the
     *    index's may be smaller.
     * `n` is the caller's corpus row count (recounting would add a
-    * job). */
+    * job). An empty corpus (n = 0) builds an empty index: no edges,
+    * no entries and, for cells, no centroids. */
   def buildGraphIndex(nodes: DataFrame, vecCol: String, idCol: String,
       n: Long, layout: GraphLayout, k: Int = 8, rounds: Int = 2,
       blockRows: Int = 128): GraphIndex = {
@@ -353,7 +355,7 @@ object Similarity {
           .groupBy(nearestCell(col(vecCol), broadcastCentroids(nodes, trained)))
           .count().collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
         val cents = occ.map { case (cell, _) => trained(cell) }
-        require(cents.length >= 2,
+        require(cents.length >= 2 || n == 0,
           s"graft: routed graph build collapsed to ${cents.length} " +
             "occupied cell(s) — the corpus cannot support routing; use " +
             "the one-shard or pmod layout")
@@ -370,7 +372,7 @@ object Similarity {
     val upperNodes = Option.when(layout == GraphLayout.OneShard)(
       nodes.filter(pmod(id, lit(upStep)) === 1))
     val entries = entriesBy(upperNodes.getOrElse(nodes), idCol, shardOf)
-    require(upperNodes.isEmpty || entries.collect().nonEmpty, "graft: " +
+    require(upperNodes.isEmpty || n == 0 || entries.collect().nonEmpty, "graft: " +
       s"graph-index upper layer is empty (n=$n, upStep=$upStep) — no id ≡ 1 mod " +
       s"$upStep exists in $idCol")
     val upper = upperNodes.map(u => groupTopK(u.select(array(lit(0L))
@@ -1236,8 +1238,8 @@ object Similarity {
     *
     * Hierarchical (two-level) routing was PROBED as the next step
     * past the cap and measured NOT WORTH LANDING on this embedding
-    * space (tools/hier_probe.py + hier_pair_recall.py, n = 200k,
-    * nlist = 3125, 56 coarse cells over the fine centroids): routing
+    * space (SURVEY §23.1 item 6: n = 200k, nlist = 3125, 56 coarse
+    * cells over the fine centroids): routing
     * through the top-w coarse cells cuts assignment flops 18.6×/
     * 11.2×/6.2× at w = 2/4/8 but agrees with the flat argmax only
     * 31%/45%/62% of the time, and — the metric that matters — keeps

@@ -451,14 +451,7 @@ object Spans {
 
   val sDedupSpans: QueryDef = QueryDef(
     fn = (s, dir) => {
-      def rmTree(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
-      }
-      val dirTag = java.lang.Integer.toHexString(
-        java.util.Arrays.hashCode(dir.getBytes("UTF-8")))
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_sspan/" +
-        s"${new java.io.File(dir).getName}_$dirTag"
-      rmTree(new java.io.File(base))
+      val base = graft.Stores.tmpDir(s, "sspan")
       val docs = Tables.load(s, dir, "documents")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val baseDocs = docs.filter(pmod(col("doc_id"), lit(5)) =!= 4)

@@ -159,11 +159,7 @@ object StreamQueries {
   val sScd2Held: QueryDef = QueryDef(
     fn = (s, dir) => {
       import s.implicits._
-      def rmTree(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
-      }
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_scd2_held/${new java.io.File(dir).getName}"
-      rmTree(new java.io.File(base))
+      val base = graft.Stores.tmpDir(s, "scd2_held")
       val jitterMs = 600000L
       val ev = events(s, dir)
         .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
@@ -224,11 +220,7 @@ object StreamQueries {
     * [[sScd2Held]]. */
   val sMv: QueryDef = QueryDef(
     fn = (s, dir) => {
-      def rmTree(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
-      }
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_smv/${new java.io.File(dir).getName}"
-      rmTree(new java.io.File(base))
+      val base = graft.Stores.tmpDir(s, "smv")
       val orders = graft.Tables.load(s, dir, "orders")
       val split = to_timestamp(lit(Relational.MvSplit))
       // seed: the persisted pre-split partial (the stored MV)
@@ -359,11 +351,7 @@ object StreamQueries {
     * in [[sMv]]/[[sScd2Held]]. */
   val sMerge: QueryDef = QueryDef(
     fn = (s, dir) => {
-      def rmTree(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
-      }
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_smerge/${new java.io.File(dir).getName}"
-      rmTree(new java.io.File(base))
+      val base = graft.Stores.tmpDir(s, "smerge")
       val orders = graft.Tables.load(s, dir, "orders")
       // seed: the store starts as the base table (v0)
       orders.write.mode("overwrite").parquet(s"$base/store/v0")
@@ -425,11 +413,7 @@ object StreamQueries {
   val sPullBudget: QueryDef = QueryDef(
     fn = (s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
-      def rmTree(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
-      }
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_pull_budget/${new java.io.File(dir).getName}"
-      rmTree(new java.io.File(base))
+      val base = graft.Stores.tmpDir(s, "pull_budget")
       graft.sources.LogSegments.write(
         MessageLog.eventsTopic(s, dir), s"$base/src")
       val nEvents = graft.Tables.load(s, dir, "events").count()
@@ -505,11 +489,7 @@ object StreamQueries {
   val sPullClock: QueryDef = QueryDef(
     fn = (s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
-      def rmTree(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
-      }
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_pull_clock/${new java.io.File(dir).getName}"
-      rmTree(new java.io.File(base))
+      val base = graft.Stores.tmpDir(s, "pull_clock")
       graft.sources.LogSegments.write(
         MessageLog.eventsTopic(s, dir), s"$base/src")
       val nEvents = graft.Tables.load(s, dir, "events").count()
@@ -582,11 +562,7 @@ object StreamQueries {
   val sPullHours: QueryDef = QueryDef(
     fn = (s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
-      def rmTree(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
-      }
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_pull_hours/${new java.io.File(dir).getName}"
-      rmTree(new java.io.File(base))
+      val base = graft.Stores.tmpDir(s, "pull_hours")
       graft.sources.LogSegments.write(
         MessageLog.eventsTopic(s, dir), s"$base/src")
       val nEvents = graft.Tables.load(s, dir, "events").count()
@@ -754,17 +730,7 @@ object StreamQueries {
     * shape of continuous vector-index ingestion. */
   val sAnnIngest: QueryDef = QueryDef(
     fn = (s, dir) => {
-      def rmTree(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
-      }
-      // dirTag in the path (graphStore's discipline): two data
-      // dirs sharing a basename must not collide on the tmp store —
-      // the unconditional rmTree would corrupt the other run's chain
-      val dirTag = java.lang.Integer.toHexString(
-        java.util.Arrays.hashCode(dir.getBytes("UTF-8")))
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_sann/" +
-        s"${new java.io.File(dir).getName}_$dirTag"
-      rmTree(new java.io.File(base))
+      val base = graft.Stores.tmpDir(s, "sann")
       val emb = graft.Tables.load(s, dir, "embeddings")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // the SAME predicate the cached "base" store was built with —
@@ -822,7 +788,7 @@ object StreamQueries {
           count(lit(1)).as("n_brute"))
         .crossJoin(brute.intersect(approx).agg(count(lit(1)).as("hits")))
         .select(col("n_queries"),
-          (col("hits").cast("double") / col("n_brute") >= 0.8)
+          Pipeline.recallAtLeast(col("hits"), col("n_brute"), 0.8)
             .as("recall_ok"),
           lit(covered == nDelta).as("all_covered"),
           lit(batches.get() >= 2L).as("multi_batch"))
@@ -886,14 +852,7 @@ object StreamQueries {
     * on), `multi_batch`. */
   val sAnnIngestRouted: QueryDef = QueryDef(
     fn = (s, dir) => {
-      def rmTree(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
-      }
-      val dirTag = java.lang.Integer.toHexString(
-        java.util.Arrays.hashCode(dir.getBytes("UTF-8")))
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_sannr/" +
-        s"${new java.io.File(dir).getName}_$dirTag"
-      rmTree(new java.io.File(base))
+      val base = graft.Stores.tmpDir(s, "sannr")
       val emb = graft.Tables.load(s, dir, "embeddings")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // the SAME predicate the cached "base" store was built with —
@@ -954,7 +913,7 @@ object StreamQueries {
         .crossJoin(brute.intersect(approx).agg(count(lit(1)).as("hits")))
         .crossJoin(crossCell.agg(count(lit(1)).as("n_cross")))
         .select(col("n_queries"),
-          (col("hits").cast("double") / col("n_brute") >= 0.8)
+          Pipeline.recallAtLeast(col("hits"), col("n_brute"), 0.8)
             .as("recall_ok"),
           lit(covered == nDelta).as("all_covered"),
           (col("n_cross") === 0).as("cell_closed"),
@@ -992,14 +951,7 @@ object StreamQueries {
     * genuinely streamed). */
   val sAnnDelete: QueryDef = QueryDef(
     fn = (s, dir) => {
-      def rmTree(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
-      }
-      val dirTag = java.lang.Integer.toHexString(
-        java.util.Arrays.hashCode(dir.getBytes("UTF-8")))
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_sanndel/" +
-        s"${new java.io.File(dir).getName}_$dirTag"
-      rmTree(new java.io.File(base))
+      val base = graft.Stores.tmpDir(s, "sanndel")
       val emb = graft.Tables.load(s, dir, "embeddings")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val n = emb.count()
@@ -1059,7 +1011,7 @@ object StreamQueries {
         .crossJoin(brute.intersect(approx).agg(count(lit(1)).as("hits")))
         .crossJoin(tombEdges.agg(count(lit(1)).as("n_tomb_edges")))
         .select(col("n_queries"),
-          (col("hits").cast("double") / col("n_brute") >= 0.8)
+          Pipeline.recallAtLeast(col("hits"), col("n_brute"), 0.8)
             .as("recall_ok"),
           (col("n_tomb_edges") === 0).as("tombstones_gone"),
           lit(storedN == n - nTomb).as("compact_triggered"),
@@ -1248,14 +1200,7 @@ object StreamQueries {
     * `multi_batch` — the stream genuinely split. */
   val sSemdedup: QueryDef = QueryDef(
     fn = (s, dir) => {
-      def rmTree(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
-      }
-      val dirTag = java.lang.Integer.toHexString(
-        java.util.Arrays.hashCode(dir.getBytes("UTF-8")))
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_ssem/" +
-        s"${new java.io.File(dir).getName}_$dirTag"
-      rmTree(new java.io.File(base))
+      val base = graft.Stores.tmpDir(s, "ssem")
       val emb = graft.Tables.load(s, dir, "embeddings")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val baseNodes = emb.filter(!Pipeline.graphDelta(col("vec_id")))

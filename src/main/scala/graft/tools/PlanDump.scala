@@ -69,16 +69,9 @@ object PlanDump {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = if (args.length > 1) args(1) else "PLANS.md"
     val spark = GraftSession.local()
-    // media queries memoize a rendered table under /tmp on first touch;
-    // render it before dumping so the plan shows the steady-state scan
-    try {
-      graft.operators.Multimodal.fakeMediaTable(spark, sfDir)
-        .write.mode("overwrite").format("noop").save()
-      graft.operators.Multimodal.phashMediaTable(spark, sfDir)
-        .write.mode("overwrite").format("noop").save()
-      graft.operators.Multimodal.fakeAudioTable(spark, sfDir)
-        .write.mode("overwrite").format("noop").save()
-    } catch { case scala.util.control.NonFatal(_) => () }
+    // render the media shelves first, so the plans show the
+    // steady-state scan of each memoized shelf
+    graft.operators.Multimodal.renderShelves(spark, sfDir, SparkEntry.queries.keys)
     val sb = new StringBuilder
     sb ++= "# PLANS — formatted physical plan per query (normalized)\n\n"
     sb ++= s"Generated by `runMain graft.tools.PlanDump $sfDir`. Expression\n"

@@ -150,20 +150,9 @@ object ScaleProbe {
         .write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9
     }
-    // pre-render both dirs' media tables (input synthesis, not query
-    // work — same reasoning as Bench's warmup) and warm code paths
-    try {
-      graft.operators.Multimodal.fakeMediaTable(spark, base)
-        .write.mode("overwrite").format("noop").save()
-      graft.operators.Multimodal.fakeMediaTable(spark, out)
-        .write.mode("overwrite").format("noop").save()
-      if (probes.exists(_.startsWith("m_modal_phash"))) {
-        graft.operators.Multimodal.phashMediaTable(spark, base)
-          .write.mode("overwrite").format("noop").save()
-        graft.operators.Multimodal.phashMediaTable(spark, out)
-          .write.mode("overwrite").format("noop").save()
-      }
-    } catch { case scala.util.control.NonFatal(_) => () }
+    // pre-render both dirs' media shelves (input synthesis, not query
+    // work) and warm code paths
+    Seq(base, out).foreach(graft.operators.Multimodal.renderShelves(spark, _, probes))
     probes.foreach { q => time(base, q); () } // warm code paths
     println(f"[probe] ${"query"}%-24s ${"1x"}%8s ${s"${k}x"}%8s ratio")
     val rows = probes.map { q =>

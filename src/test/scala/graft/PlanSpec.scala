@@ -566,13 +566,9 @@ class PlanSpec extends SparkSpec {
     assert(got === full,
       "incremental refresh (stored partial + delta) must equal the full recompute")
     // and the base really is a PERSISTED artifact, not a live subplan
-    val dirTag = java.lang.Integer.toHexString(
-      java.util.Arrays.hashCode(sf.getBytes("UTF-8")))
-    val store = new java.io.File(
-      s"${sys.props("java.io.tmpdir")}/graft_mvbase_" +
-        s"${new java.io.File(sf).getName}_$dirTag")
-    assert(store.isDirectory &&
-      Option(store.listFiles()).exists(_.exists(_.getName.endsWith(".parquet"))),
-      s"mv base store missing at $store")
+    val files = Relational.mvBase(spark, sf).inputFiles
+    assert(files.nonEmpty && files.forall(_.endsWith(".parquet")) &&
+      files.forall(f => new java.io.File(new java.net.URI(f)).isFile),
+      s"mv base store is not read from parquet files: ${files.mkString(", ")}")
   }
 }

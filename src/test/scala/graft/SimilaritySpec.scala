@@ -1408,7 +1408,17 @@ class SimilaritySpec extends SparkSpec {
       .collect().isEmpty)
     assert(Similarity.nnDescentRound(nodes, graph.limit(0), "embedding",
       "vec_id").collect().isEmpty)
-    intercept[IllegalArgumentException](oneShard(none, 0L, k = 8, rounds = 2))
+    // an empty corpus builds an empty index in every layout: no edges,
+    // no entries, no upper layer rows, no cells; its entry is -1
+    for (layout <- Seq(Similarity.GraphLayout.OneShard,
+        Similarity.GraphLayout.Pmod(4), Similarity.GraphLayout.Cells(4))) {
+      val index = Similarity.buildGraphIndex(none, "embedding", "vec_id", 0L,
+        layout, k = 8, rounds = 2)
+      assert(index.graph.collect().isEmpty && index.entries.collect().isEmpty &&
+        index.upper.forall(_.collect().isEmpty) && index.centroids.forall(_.isEmpty),
+        s"$layout")
+    }
+    assert(oneShard(none, 0L, k = 8, rounds = 2)._3 == -1L)
     // one group holds every node: the zero vector scores cos 0, and a
     // null embedding scores a null cos that ranks after every non-null
     // one (ties by id) — as the pair-join rules ranked it
